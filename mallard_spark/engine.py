@@ -52,6 +52,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from mallard_spark.exchange import Exchanger
+from mallard_spark.sqllex import (
+    code_mask,
+    enclosing,
+    find_kw,
+    lex,
+    match_bracket,
+    split_top_level,
+    strip_comments,
+)
 
 # Wire-path DuckDB-semantics mode (round 14, VERDICT r13 what's-wrong
 # #1): ticket SQL arriving over Flight is DuckDB SQL BY DEFINITION
@@ -180,55 +189,6 @@ _ALTER_RENAME_RE = re.compile(
 _DML_RE = re.compile(r"^\s*(INSERT|UPDATE|DELETE|MERGE)\b", re.IGNORECASE)
 
 
-def _strip_comments(sql: str) -> str:
-    """Remove ``--`` and ``/* */`` comments outside string literals
-    (round 15, DML-script probe finding: a leading block comment made
-    is_dml miss an INSERT, routing it to raw spark.sql). Comments
-    carry no semantics for the DDL/DML routers' regex grammars, which
-    anchor on keywords and would otherwise read comment text as
-    aliases or operands. Single quotes honor '' doubling and
-    backslash escapes; double/backtick quotes pass through whole."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            i = n if j < 0 else j + 1
-            out.append(" ")
-            continue
-        if ch == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i)
-            i = n if j < 0 else j + 2
-            out.append(" ")
-            continue
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "\\" and j + 1 < n:
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            else:
-                j = n
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch in ('"', "`"):
-            j = sql.find(ch, i + 1)
-            j = n if j < 0 else j + 1
-            out.append(sql[i:j])
-            i = j
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
 _COPY_RE = re.compile(
     # opts allows one paren-nesting level with quoted strings as
     # opaque atoms — PARTITION_BY (col, col) and quoted option values
@@ -335,7 +295,7 @@ def _parse_enum_members(body: str, ctx: str) -> list[str]:
     members: list[str] = []
     body = body.strip()
     if body:
-        for lit in _split_top_level(body):
+        for lit in split_top_level(body):
             lm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", lit)
             if lm is None:
                 raise ValueError(
@@ -397,24 +357,8 @@ def _parse_generated_def(
             return None
     # the expression runs to the MATCHING close paren
     start = hm.end()  # index just past the open paren
-    depth = 1
-    i = start
-    in_str = False
-    while i < len(item):
-        ch = item[i]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        i += 1
-    if depth != 0:
+    i = match_bracket(item, start - 1)
+    if i < 0:
         return None
     expr = item[start:i].strip()
     tail = item[i + 1:].strip()
@@ -454,7 +398,7 @@ def _parse_copy_opts(opts: str, verb: str) -> dict[str, str]:
     """``(KEY [value], ...)`` COPY options → {UPPER_KEY: raw value}.
     DuckDB accepts both ``KEY value`` and ``KEY = value``."""
     out: dict[str, str] = {}
-    for item in _split_top_level(opts or ""):
+    for item in split_top_level(opts or ""):
         item = item.strip()
         if not item:
             continue
@@ -697,25 +641,12 @@ def _decode_keys_prop(v: str) -> list[list[str]]:
     return [v.split(",")] if v else []
 
 
-def _take_balanced(s: str, i: int) -> int:
-    """``s[i] == '('`` → index one past the matching ``)``,
-    honoring quoted spans."""
-    depth, q = 0, None
-    while i < len(s):
-        c = s[i]
-        if q:
-            if c == q:
-                q = None
-        elif c in ("'", '"'):
-            q = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError(f"unbalanced parentheses in {s!r}")
+def _close_paren_end(s: str, i: int) -> int:
+    """``s[i]`` opens a bracket → index one past its match."""
+    e = match_bracket(s, i)
+    if e < 0:
+        raise ValueError(f"unbalanced parentheses in {s!r}")
+    return e + 1
 
 
 def _normalize_def_ws(item: str) -> str:
@@ -724,12 +655,11 @@ def _normalize_def_ws(item: str) -> str:
     CHECK patterns with tabs) must reach the stored declaration
     byte-identical to what DuckDB stores (ADVICE r9: the previous
     blanket ``' '.join(item.split())`` silently altered them)."""
-    from mallard_spark.dialect import _scan
-
+    mask = code_mask(item)
     out: list[str] = []
     pending_space = False
-    for _i, ch, _d, in_code in _scan(item):
-        if in_code and ch in " \t\r\n":
+    for i, ch in enumerate(item):
+        if mask[i] and ch in " \t\r\n":
             pending_space = True
             continue
         if pending_space:
@@ -754,7 +684,7 @@ def _take_duck_type(s: str) -> tuple[str, str] | None:
     while j < len(s) and s[j].isspace():
         j += 1
     if j < len(s) and s[j] == "(":
-        i = _take_balanced(s, j)
+        i = _close_paren_end(s, j)
     while True:
         am = re.match(r"\s*\[\s*\]", s[i:])
         if not am:
@@ -779,7 +709,7 @@ def _duck_type_to_spark(t: str, table: str, col: str) -> str:
     sm = re.match(r"(?is)^STRUCT\s*\((?P<body>.*)\)\s*$", t)
     if sm:
         parts = []
-        for f in _split_top_level(sm.group("body")):
+        for f in split_top_level(sm.group("body")):
             fm = re.match(
                 r'(?s)^\s*(?P<n>[A-Za-z_]\w*|"[^"]+")\s+(?P<t>.+?)\s*$',
                 f,
@@ -802,7 +732,7 @@ def _duck_type_to_spark(t: str, table: str, col: str) -> str:
         return "struct<" + ", ".join(parts) + ">"
     mm = re.match(r"(?is)^MAP\s*\((?P<body>.*)\)\s*$", t)
     if mm:
-        kv = _split_top_level(mm.group("body"))
+        kv = split_top_level(mm.group("body"))
         if len(kv) != 2:
             raise NotImplementedError(
                 f"CREATE TABLE {table}: MAP needs exactly (key, "
@@ -988,7 +918,7 @@ def _extract_col_constraints(
                     f"CREATE TABLE {table}: malformed CHECK on column "
                     f"{col!r} (expected CHECK (expr))"
                 )
-            e = _take_balanced(mods, k)
+            e = _close_paren_end(mods, k)
             checks.append(mods[k + 1 : e - 1].strip())
             i = e
         elif kw == "DEFAULT":
@@ -1006,18 +936,11 @@ def _extract_col_constraints(
                     f"column {col!r}"
                 )
             if mods[k] == "(":
-                e = _take_balanced(mods, k)
+                e = _close_paren_end(mods, k)
             elif mods[k] == "'":
-                e = k + 1
-                while e < n:
-                    if mods[e] == "'":
-                        if e + 1 < n and mods[e + 1] == "'":
-                            e += 2
-                            continue
-                        e += 1
-                        break
-                    e += 1
-                else:
+                lx = lex(mods)
+                e = lx.spans[k]
+                if e == n and lx.tail_open:
                     raise ValueError(
                         f"CREATE TABLE {table}: unterminated DEFAULT "
                         f"string on column {col!r}"
@@ -1042,7 +965,7 @@ def _extract_col_constraints(
                 while e2 < n and mods[e2].isspace():
                     e2 += 1
                 if e2 < n and mods[e2] == "(":
-                    e = _take_balanced(mods, e2)
+                    e = _close_paren_end(mods, e2)
             default = mods[k:e].strip()
             i = e
         else:
@@ -1077,11 +1000,9 @@ def _split_on_conflict(sql: str) -> tuple[str, str] | None:
     conflict-column list ``(`` or a ``DO`` action — a join predicate
     over an identifier named ``conflict`` (``JOIN b ON conflict = 1``)
     is ordinary SQL that DuckDB executes, not an upsert."""
-    from mallard_spark.dialect import _find_kw
-
     p = 0
     while True:
-        k = _find_kw(sql, "ON", at_depth=0, start=p)
+        k = find_kw(sql, "ON", at_depth=0, start=p)
         if k < 0:
             return None
         p = k + 1
@@ -1097,40 +1018,6 @@ def _split_on_conflict(sql: str) -> tuple[str, str] | None:
             and not (len(after) > 2 and (after[2].isalnum() or after[2] == "_"))
         ):
             return sql[:k], sql[k:].lstrip()
-
-
-def _split_top_level(s: str, sep: str = ",") -> list[str]:
-    """Split ``s`` on ``sep`` at paren/bracket depth 0, outside quotes.
-
-    Single-quoted literals honor both SQL ``''`` doubling and Spark's
-    default-dialect backslash escapes (``\\'``) — same lexing rules as
-    :func:`_replace_table_ref`."""
-    parts: list[str] = []
-    depth, start, i, n = 0, 0, 0, len(s)
-    in_str: str | None = None
-    while i < n:
-        ch = s[i]
-        if in_str:
-            if ch == "\\" and in_str == "'" and i + 1 < n:
-                i += 2  # backslash escape inside a string literal
-                continue
-            if ch == in_str:
-                if ch == "'" and i + 1 < n and s[i + 1] == "'":
-                    i += 1  # '' doubling stays inside the literal
-                else:
-                    in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == sep and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-        i += 1
-    parts.append(s[start:])
-    return parts
 
 
 class MallardEngine:
@@ -2432,22 +2319,13 @@ class MallardEngine:
         paren-aware) — DuckDB's ``conn.sql`` executes multi-statement
         scripts and answers the LAST statement's relation, so wire
         tickets may carry whole setup scripts."""
-        from mallard_spark.dialect import _scan
-
-        parts: list[str] = []
-        start = 0
-        for i, ch, depth, in_code in _scan(sql):
-            if in_code and depth == 0 and ch == ";":
-                parts.append(sql[start:i])
-                start = i + 1
-        parts.append(sql[start:])
+        parts = split_top_level(sql, ";")
 
         def has_code(s: str) -> bool:
             # a fragment that is only comments/whitespace ("...; --
             # done") is not a statement — DuckDB ignores it too
-            return any(
-                code and c not in " \t\r\n" for _i, c, _d, code in _scan(s)
-            )
+            mask = code_mask(s)
+            return any(mask[i] and c not in " \t\r\n" for i, c in enumerate(s))
 
         return [s.strip() for s in parts if s.strip() and has_code(s)]
 
@@ -2511,27 +2389,12 @@ class MallardEngine:
         through (None). The non-ALL form dedups, like DuckDB."""
         if not self._UNION_BY_NAME_RE.search(sql):
             return None  # cheap pre-check: no mask scan per statement
-        from mallard_spark.dialect import _code_mask
-
-        mask = _code_mask(sql)
-        depth = 0
-        cuts: list[tuple[int, int, bool]] = []
-        i = 0
-        while i < len(sql):
-            c = sql[i]
-            if mask[i] and c in "([":
-                depth += 1
-            elif mask[i] and c in ")]":
-                depth -= 1
-            elif mask[i] and depth == 0 and c in "Uu":
-                m = self._UNION_BY_NAME_RE.match(sql, i)
-                if m and all(
-                    mask[k] for k in range(m.start(), m.end())
-                ):
-                    cuts.append((m.start(), m.end(), bool(m.group(1))))
-                    i = m.end()
-                    continue
-            i += 1
+        lx = lex(sql)
+        cuts = [
+            (m.start(), m.end(), bool(m.group(1)))
+            for m in self._UNION_BY_NAME_RE.finditer(sql)
+            if lx.depth[m.start()] == 0 and 0 not in lx.mask[m.start() : m.end()]
+        ]
         if not cuts:
             return None
         sides: list[str] = []
@@ -2544,12 +2407,9 @@ class MallardEngine:
         # the combined result (DuckDB binds it to the union)
         tail = ""
         lastside = sides[-1]
-        lmask = _code_mask(lastside)
         for kw in ("ORDER", "LIMIT", "OFFSET"):
-            from mallard_spark.dialect import _find_kw
-
-            p = _find_kw(lastside, kw)
-            if p >= 0 and all(lmask[k] for k in range(p, p + len(kw))):
+            p = find_kw(lastside, kw)
+            if p >= 0:
                 tail = lastside[p:]
                 sides[-1] = lastside[:p]
                 break
@@ -2585,9 +2445,7 @@ class MallardEngine:
         ``memory_limit``/``max_memory`` the driver-memory conf as
         VARCHAR. Unknown names raise DuckDB's own wording. Not a
         Spark function name, so the substitution is unconditional."""
-        from mallard_spark.dialect import _code_mask
-
-        mask = _code_mask(sql)
+        mask = code_mask(sql)
         out, last = [], 0
         for m in self._CURRENT_SETTING_RE.finditer(sql):
             if not all(
@@ -2657,9 +2515,7 @@ class MallardEngine:
         m = self._PERCENT_LIMIT_RE.search(sql)
         if m is None:
             return None
-        from mallard_spark.dialect import _code_mask
-
-        mask = _code_mask(sql)
+        mask = code_mask(sql)
         if not all(mask[k] for k in range(m.start(), m.end())):
             return None
         import math
@@ -2710,9 +2566,7 @@ class MallardEngine:
             # parameters is not supported yet") — round 15, ADVICE
             # r14 #2: without this, the named branch substituted only
             # the named sites and left $1 in the text
-            from mallard_spark.dialect import _code_mask
-
-            bmask = _code_mask(body)
+            bmask = code_mask(body)
             has_named = any(
                 not m.group(1).isdigit()
                 and all(bmask[k] for k in range(m.start(), m.end()))
@@ -2746,11 +2600,9 @@ class MallardEngine:
                     f'Binder Error: Prepared statement '
                     f'"{em.group(1)}" does not exist'
                 )
-            from mallard_spark.dialect import _split_top_level_commas
-
             raw = em.group(2)
             args = (
-                [a.strip() for a in _split_top_level_commas(raw)]
+                [a.strip() for a in split_top_level(raw)]
                 if raw and raw.strip()
                 else []
             )
@@ -2759,9 +2611,7 @@ class MallardEngine:
 
     @staticmethod
     def _bind_params(stmt: str, args: list[str]) -> str:
-        from mallard_spark.dialect import _code_mask
-
-        mask = _code_mask(stmt)
+        mask = code_mask(stmt)
         named = [
             (m.start(), m.end(), m.group(1))
             for m in re.finditer(r"\$([A-Za-z_]\w*)", stmt)
@@ -2895,7 +2745,7 @@ class MallardEngine:
         when the literal spelling fails — same fired-on-failure
         policy as the query ladder (round 14)."""
         if "--" in sql or "/*" in sql:
-            sql = _strip_comments(sql)  # router grammars are comment-free
+            sql = strip_comments(sql)  # router grammars are comment-free
         return self._retry_dquoted(self._ddl_impl, self._canon_case(sql))
 
     def dml(self, sql: str) -> str:
@@ -2903,7 +2753,7 @@ class MallardEngine:
         for the supported surface) under the poisoning guard; quoted
         identifiers retry like :meth:`ddl`."""
         if "--" in sql or "/*" in sql:
-            sql = _strip_comments(sql)
+            sql = strip_comments(sql)
         return self._retry_dquoted(self._dml_impl, self._canon_case(sql))
 
     def _canon_case(self, sql: str) -> str:
@@ -3001,11 +2851,7 @@ class MallardEngine:
         macros expand to a fixpoint with a depth cap (a
         self-recursive macro surfaces Spark's analysis error instead
         of looping)."""
-        from mallard_spark.dialect import (
-            _code_mask,
-            _rewrite_calls,
-            _split_top_level_commas,
-        )
+        from mallard_spark.dialect import _rewrite_calls
 
         def bind(
             params: list[tuple[str, str | None]], args: list[str]
@@ -3053,7 +2899,7 @@ class MallardEngine:
             bound = bind(params, args)
             if bound is None:
                 return None
-            mask = _code_mask(body)
+            mask = code_mask(body)
             spans: list[tuple[int, int, str]] = []
             for p, a in bound.items():
                 # identifiers are case-insensitive: a body may spell a
@@ -3083,7 +2929,7 @@ class MallardEngine:
                 rf"\b(FROM|JOIN)(\s+){re.escape(name)}\s*\(", re.IGNORECASE
             )
             for _ in range(32):
-                mask = _code_mask(sql)
+                mask = code_mask(sql)
                 m2 = next(
                     (
                         c for c in pat.finditer(sql)
@@ -3094,18 +2940,10 @@ class MallardEngine:
                 if m2 is None:
                     return sql
                 open_p = m2.end() - 1
-                depth, close_p = 0, -1
-                for j in range(open_p, len(sql)):
-                    if sql[j] in "([" and mask[j]:
-                        depth += 1
-                    elif sql[j] in ")]" and mask[j]:
-                        depth -= 1
-                        if depth == 0:
-                            close_p = j
-                            break
+                close_p = match_bracket(sql, open_p)
                 if close_p < 0:
                     return sql
-                args = _split_top_level_commas(sql[open_p + 1 : close_p])
+                args = split_top_level(sql[open_p + 1 : close_p])
                 inlined = substitute(params, body, args)
                 if inlined is None:
                     return sql  # arity mismatch — Spark's error surfaces
@@ -3439,11 +3277,7 @@ class MallardEngine:
             # information_schema.tables/columns): register the
             # namespace's introspection relations and rewrite the
             # calls to the views (literal spans skipped)
-            from mallard_spark.dialect import _scan
-
-            mask = [False] * len(sql)
-            for i, _c, _d, in_code in _scan(sql):
-                mask[i] = in_code
+            mask = code_mask(sql)
             out_parts: list[str] = []
             last = 0
             for fm in re.finditer(_ISPECT, sql):
@@ -3584,15 +3418,13 @@ class MallardEngine:
                 except Exception:
                     pre_route = False
         if not pre_route and self._REGEXP_FLAGS_RE.search(out):
-            from mallard_spark.dialect import _code_mask
-
             # masked check (round 14, ADVICE r13): a flag-form
             # regexp_replace spelled inside a comment or string
             # literal is not dialect evidence. Only the function
             # NAME token is checked per hit — the matched span itself
             # contains string-literal arguments (mask=False there by
             # construction)
-            omask = _code_mask(out)
+            omask = code_mask(out)
             pre_route = any(
                 all(
                     omask[k]
@@ -4007,16 +3839,14 @@ class MallardEngine:
         """
         from pyspark.sql import functions as F
 
-        from mallard_spark.dialect import _code_mask, _find_kw
         from mallard_spark.functions.exec import materialize
 
         hm = re.match(r"^\s*WITH\s+RECURSIVE\s+", sql, re.IGNORECASE)
         if not hm:
             return None
-        mask = _code_mask(sql)
 
         def _refs(text: str, ident: str) -> bool:
-            tmask = _code_mask(text)
+            tmask = code_mask(text)
             return any(
                 all(tmask[k] for k in range(w.start(), w.end()))
                 for w in re.finditer(
@@ -4035,15 +3865,8 @@ class MallardEngine:
             ).match(sql, pos)
             if not cm:
                 return None
-            open_p, depth, close_p = cm.end() - 1, 0, -1
-            for j in range(open_p, len(sql)):
-                if sql[j] in "([" and mask[j]:
-                    depth += 1
-                elif sql[j] in ")]" and mask[j]:
-                    depth -= 1
-                    if depth == 0:
-                        close_p = j
-                        break
+            open_p = cm.end() - 1
+            close_p = match_bracket(sql, open_p)
             if close_p < 0:
                 return None
             ctes.append(
@@ -4127,7 +3950,7 @@ class MallardEngine:
             alls = []
             p = 0
             while True:
-                k = _find_kw(body, "UNION", at_depth=0, start=p)
+                k = find_kw(body, "UNION", at_depth=0, start=p)
                 if k < 0:
                     break
                 p = k + 1
@@ -4465,15 +4288,9 @@ class MallardEngine:
         cover: expression arguments, multiple COLUMNS in one item,
         COLUMNS outside select list/WHERE, non-SELECT statements.
         """
-        from mallard_spark.dialect import (
-            _code_mask,
-            _find_kw,
-            _split_top_level_commas,
-        )
-
         if not re.match(r"^\s*SELECT\b", sql, re.IGNORECASE):
             return None
-        f = _find_kw(sql, "FROM", at_depth=0)
+        f = find_kw(sql, "FROM", at_depth=0)
         if f < 0:
             return None
         sm = re.match(r"^\s*SELECT\s+(DISTINCT\s+)?", sql, re.IGNORECASE)
@@ -4483,7 +4300,7 @@ class MallardEngine:
         from_end = len(tail)
         for kw in ("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
                    "ORDER", "LIMIT", "UNION", "EXCEPT", "INTERSECT"):
-            k = _find_kw(tail, kw, at_depth=0)
+            k = find_kw(tail, kw, at_depth=0)
             if 0 <= k < from_end:
                 from_end = k
         from_text = tail[4:from_end].strip()
@@ -4495,7 +4312,7 @@ class MallardEngine:
         def find_call(text: str):
             """(start, end_after_close, arg) of the single COLUMNS
             call in ``text``; None if absent; ... if unsupported."""
-            mask = _code_mask(text)
+            mask = code_mask(text)
             hits = [
                 m for m in re.finditer(r"(?i)\bCOLUMNS\s*\(", text)
                 if all(mask[k] for k in range(m.start(), m.end()))
@@ -4505,15 +4322,7 @@ class MallardEngine:
             if len(hits) > 1:
                 return ...
             m = hits[0]
-            depth, close = 0, -1
-            for j in range(m.end() - 1, len(text)):
-                if text[j] in "([" and mask[j]:
-                    depth += 1
-                elif text[j] in ")]" and mask[j]:
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
+            close = match_bracket(text, m.end() - 1)
             if close < 0:
                 return ...
             return (m.start(), close + 1, text[m.end() : close].strip())
@@ -4542,7 +4351,7 @@ class MallardEngine:
                 # resolve case-insensitively, duplicates collapse, and
                 # the expansion follows TABLE order, not list order
                 wanted: set[str] = set()
-                for it in _split_top_level(arg[1:-1]):
+                for it in split_top_level(arg[1:-1]):
                     it = it.strip()
                     if not it:
                         continue
@@ -4597,7 +4406,7 @@ class MallardEngine:
             return f"{text[:s]}`{col}`{text[e:]}"
 
         out_items: list[str] = []
-        for item in _split_top_level_commas(select_list):
+        for item in split_top_level(select_list):
             call = find_call(item)
             if call is None:
                 out_items.append(item)
@@ -4626,12 +4435,12 @@ class MallardEngine:
                     else f"{ex} AS `{c}`"
                 )
         new_tail = tail
-        w = _find_kw(tail, "WHERE", at_depth=0)
+        w = find_kw(tail, "WHERE", at_depth=0)
         if w >= 0:
             w_end = len(tail)
             for kw in ("GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
                        "LIMIT", "UNION", "EXCEPT", "INTERSECT"):
-                k = _find_kw(tail, kw, at_depth=0, start=w)
+                k = find_kw(tail, kw, at_depth=0, start=w)
                 if 0 <= k < w_end:
                     w_end = k
             pred = tail[w + 5 : w_end].strip()
@@ -4709,7 +4518,7 @@ class MallardEngine:
         fkeys: list[dict] = []  # FOREIGN KEY declarations (round 10)
         generated: list[tuple[str, str | None, str]] = []  # round 11
         table_enums: dict[str, dict] = {}  # enum columns (round 11)
-        for item in _split_top_level(m.group("defs")):
+        for item in split_top_level(m.group("defs")):
             item = _normalize_def_ws(item).strip()
             if not item:
                 continue
@@ -5307,7 +5116,7 @@ class MallardEngine:
 
         sniff_args: list[str] = []  # forwarded verbatim to sniff_csv
         spark_opts: dict[str, str] = {}  # mapped onto the Spark reader
-        for item in _split_top_level(args) if args else []:
+        for item in split_top_level(args) if args else []:
             am = re.match(
                 r"(?s)^\s*(?P<name>[A-Za-z_]\w*)\s*(?::?=)\s*(?P<val>.+?)\s*$",
                 item,
@@ -5512,7 +5321,7 @@ class MallardEngine:
             )
         vals = sorted(vals)
         aggs = []
-        for i, item in enumerate(_split_top_level(m.group("using"))):
+        for i, item in enumerate(split_top_level(m.group("using"))):
             am = _AGG_ITEM_RE.match(item)
             if not am:
                 raise ValueError(f"PIVOT USING: unsupported aggregate {item!r}")
@@ -5646,7 +5455,7 @@ class MallardEngine:
         """Parity: flight_server.py:354-355 (_is_ddl_statement).
         Leading comments are skipped (round 15)."""
         if "--" in sql or "/*" in sql:
-            sql = _strip_comments(sql)
+            sql = strip_comments(sql)
         return bool(_DDL_RE.match(sql))
 
     # -- sequences (round 11) ------------------------------------------
@@ -5930,9 +5739,7 @@ class MallardEngine:
         scope (it could rewrite ORDER BY/min/max on an unrelated
         same-named column, or raise the ambiguity refusal spuriously).
         """
-        from mallard_spark.dialect import _code_mask
-
-        mask = _code_mask(sql)
+        mask = code_mask(sql)
         cols: dict[str, object] = {}
         for t, colmap in self._table_enums.items():
             hits = [
@@ -5956,16 +5763,8 @@ class MallardEngine:
     def _rewrite_enums_in_query(self, sql: str) -> str:
         """Apply the enum query-semantics rewrites (see the section
         comment above). Pure text→text; every replacement span is
-        verified to sit in CODE (dialect._scan), so string literals
+        verified to sit in CODE (``sqllex``), so string literals
         and comments never rewrite."""
-        from mallard_spark.dialect import _scan
-
-        def code_mask(s: str) -> list[bool]:
-            mask = [False] * len(s)
-            for i, _ch, _d, in_code in _scan(s):
-                mask[i] = in_code
-            return mask
-
         REF = r"(?:[A-Za-z_]\w*\s*\.\s*)?[A-Za-z_]\w*"
         LIT = r"'(?:[^']|'')*'"
 
@@ -6037,7 +5836,7 @@ class MallardEngine:
                 ):
                     if not mask[m.start()]:
                         continue
-                    close = _take_balanced(out, m.end() - 1)
+                    close = _close_paren_end(out, m.end() - 1)
                     arg = out[m.end(): close - 1]
                     got = enum_fn_members(arg)
                     if got is None:
@@ -6177,17 +5976,8 @@ class MallardEngine:
                         continue
                     v = m.group("v")
                     start = m.start("v")
-                    if v == ")":  # balanced paren operand: scan back
-                        depth = 0
-                        i = cpos - 1
-                        while i >= 0:
-                            if mask[i] and out[i] == ")":
-                                depth += 1
-                            elif mask[i] and out[i] == "(":
-                                depth -= 1
-                                if depth == 0:
-                                    break
-                            i -= 1
+                    if v == ")":  # balanced paren operand
+                        i = match_bracket(out, start)
                         if i < 0:
                             continue
                         start, v = i, out[i:cpos].strip()
@@ -6249,33 +6039,24 @@ class MallardEngine:
 
         # ---- 5. ORDER BY sort keys ----------------------------------
         def sub_order_keys(s: str) -> str:
-            mask = code_mask(s)
+            lx = lex(s)
+            mask = lx.mask
             edits: list[tuple[int, int, str]] = []
             for m in re.finditer(r"(?i)\bORDER\s+BY\b", s):
                 if not mask[m.start()]:
                     continue
-                i, depth = m.end(), 0
-                key_start = i
+                d0 = lx.depth[m.start()]
+                i = key_start = m.end()
                 keys: list[tuple[int, int]] = []
-
-                def close_key(end: int) -> None:
-                    keys.append((key_start, end))
-
                 while i < len(s):
                     c = s[i]
-                    if mask[i]:
-                        if c == "(":
-                            depth += 1
-                        elif c == ")":
-                            if depth == 0:
-                                break
-                            depth -= 1
-                        elif c == "," and depth == 0:
-                            close_key(i)
-                            key_start = i + 1
-                        elif depth == 0 and c == ";":
+                    if mask[i] and lx.depth[i] <= d0:
+                        if lx.depth[i] < d0 or c == ";":
                             break
-                        elif depth == 0 and re.match(
+                        if c == ",":
+                            keys.append((key_start, i))
+                            key_start = i + 1
+                        elif re.match(
                             r"(?i)(LIMIT|OFFSET|ROWS|RANGE|USING|"
                             r"UNION|INTERSECT|EXCEPT)\b",
                             s[i:],
@@ -6284,7 +6065,7 @@ class MallardEngine:
                         )):
                             break
                     i += 1
-                close_key(i)
+                keys.append((key_start, i))
                 for a, b in keys:
                     key = s[a:b]
                     km = re.match(
@@ -6432,9 +6213,7 @@ class MallardEngine:
         constant sequence" error."""
         if not _SEQ_CALL_RE.search(sql):
             return []
-        from mallard_spark.dialect import _code_mask
-
-        mask = _code_mask(sql)
+        mask = code_mask(sql)
         out: list[tuple[int, int, str, str]] = []
         for m in _SEQ_CALL_RE.finditer(sql):
             if not all(mask[m.start():m.end() - 1]):
@@ -6474,9 +6253,7 @@ class MallardEngine:
         calls = self._seq_calls(qtext)
         if not calls:
             return qtext
-        from mallard_spark.dialect import _find_kw
-
-        f = _find_kw(qtext, "FROM", at_depth=0)
+        f = find_kw(qtext, "FROM", at_depth=0)
         # subquery spans refuse: the per-row multiplicity of an inner
         # relation is not knowable from one outer count
         for a, b, fn, _s in calls:
@@ -6529,30 +6306,18 @@ class MallardEngine:
     def _subquery_span_at(self, sql: str, pos: int) -> tuple[int, int] | None:
         """The ``(SELECT ...)`` span containing ``pos``, if any —
         same span scan as :meth:`_rewrite_refs`."""
-        from mallard_spark.dialect import _find_kw, _scan
-
-        positions = {i: d for i, _c, d, code in _scan(sql) if code}
         i = 0
         while True:
-            s = _find_kw(sql, "SELECT", at_depth=None, start=i)
+            s = find_kw(sql, "SELECT", at_depth=None, start=i)
             if s < 0:
                 return None
-            d = positions.get(s, 0)
-            if d == 0:
+            opener = enclosing(sql, s)
+            if opener < 0 or sql[opener : s].strip() != "(":
                 i = s + 1
                 continue
-            opener = max(
-                (k for k in range(s) if sql[k] == "(" and positions.get(k) == d),
-                default=-1,
-            )
-            if opener < 0 or sql[opener + 1:s].strip() != "":
-                i = s + 1
-                continue
-            closer = next(
-                (k for k in range(s, len(sql))
-                 if sql[k] == ")" and positions.get(k) == d - 1),
-                len(sql),
-            )
+            closer = match_bracket(sql, opener)
+            if closer < 0:
+                closer = len(sql)
             if opener < pos < closer:
                 return (opener, closer)
             i = closer
@@ -7429,7 +7194,7 @@ class MallardEngine:
             by_lower = {c.lower(): c for c in tbl.columns}
             cols = [
                 c.strip().strip('`"')
-                for c in _split_top_level(m.group("cols"))
+                for c in split_top_level(m.group("cols"))
             ]
             bad = [c for c in cols if not re.fullmatch(r"[A-Za-z_]\w*", c)]
             if bad:
@@ -7514,7 +7279,7 @@ class MallardEngine:
             if tm:
                 body = tm.group("q").strip()
             params: list[tuple[str, str | None]] = []
-            for p in _split_top_level(m.group("params")):
+            for p in split_top_level(m.group("params")):
                 p = p.strip()
                 if not p:
                     continue
@@ -7709,7 +7474,7 @@ class MallardEngine:
         SQL natively; on Spark these need routing (see :meth:`dml`).
         """
         if "--" in sql or "/*" in sql:
-            sql = _strip_comments(sql)
+            sql = strip_comments(sql)
         return bool(_DML_RE.match(sql))
 
     @staticmethod
@@ -7721,7 +7486,7 @@ class MallardEngine:
         (flight_server.py:342-352), whose clients use them to export
         results and ingest files."""
         if "--" in sql or "/*" in sql:
-            sql = _strip_comments(sql)
+            sql = strip_comments(sql)
         return bool(_COPY_RE.match(sql) or _COPY_FROM_RE.match(sql))
 
     def _copy_to_impl(self, sql: str) -> str:
@@ -8232,9 +7997,7 @@ class MallardEngine:
         if re.match(
             r"^\s*(INSERT|UPDATE|DELETE)\b", sql, re.IGNORECASE
         ):
-            from mallard_spark.dialect import _find_kw
-
-            r = _find_kw(sql, "RETURNING", at_depth=0)
+            r = find_kw(sql, "RETURNING", at_depth=0)
             if r >= 0:
                 # RETURNING (round 11): split the clause off here so
                 # every verb parser below sees a clean statement; the
@@ -8321,12 +8084,10 @@ class MallardEngine:
             )
         m = _UPDATE_RE.match(sql)
         if m:
-            from mallard_spark.dialect import _find_kw
-
             rest = m.group("rest")
             alias = m.group("a1") or m.group("a2")
-            f = _find_kw(rest, "FROM", at_depth=0)
-            w = _find_kw(rest, "WHERE", at_depth=0, start=max(f, 0))
+            f = find_kw(rest, "FROM", at_depth=0)
+            w = find_kw(rest, "WHERE", at_depth=0, start=max(f, 0))
             if f >= 0:
                 # DuckDB's join-update: UPDATE t SET ... FROM src [WHERE]
                 sets = rest[:f].rstrip()
@@ -8346,12 +8107,10 @@ class MallardEngine:
             )
         m = _DELETE_RE.match(sql)
         if m:
-            from mallard_spark.dialect import _find_kw
-
             rest = m.group("rest") or ""
             alias = m.group("a1") or m.group("a2")
-            u = _find_kw(rest, "USING", at_depth=0)
-            w = _find_kw(rest, "WHERE", at_depth=0, start=max(u, 0))
+            u = find_kw(rest, "USING", at_depth=0)
+            w = find_kw(rest, "WHERE", at_depth=0, start=max(u, 0))
             where = rest[w + len("WHERE") :] if w >= 0 else None
             if u >= 0:
                 # DuckDB's join-delete: DELETE FROM t USING src [WHERE]
@@ -8528,8 +8287,6 @@ class MallardEngine:
         would reject them (documented divergence); duplicate conflicts
         against ONE target row error via MERGE's multiple-match check,
         like DuckDB's "cannot update the same row twice"."""
-        from mallard_spark.dialect import _find_kw
-
         m = _INSERT_RE.match(head)
         if m is None:
             raise ValueError(f"malformed INSERT ... ON CONFLICT: {head[:120]!r}")
@@ -8582,7 +8339,7 @@ class MallardEngine:
             matched = "WHEN MATCHED THEN DO NOTHING"
         else:
             sets = tm.group("sets").rstrip("; \n\t")
-            w = _find_kw(sets, "WHERE", at_depth=0)
+            w = find_kw(sets, "WHERE", at_depth=0)
             guard = None
             if w >= 0:
                 guard = sets[w + 5 :].strip()
@@ -8741,22 +8498,16 @@ class MallardEngine:
         if by_name:
             _by_name_checks(name, cols, rest)
         if rest.upper().startswith("VALUES"):
-            if re.search(r"(?i)\bDEFAULT\b", rest):
-                from mallard_spark.dialect import _scan
-
-                # only the bare keyword in CODE spans counts — a
-                # string literal 'DEFAULT' is data
-                masked = "".join(
-                    c if code else " " for _i, c, _d, code in _scan(rest)
+            # only the bare keyword in CODE spans counts — a
+            # string literal 'DEFAULT' is data
+            if find_kw(rest, "DEFAULT", at_depth=None) >= 0:
+                raise NotImplementedError(
+                    f"INSERT INTO {name}: the DEFAULT keyword "
+                    f"inside VALUES is not supported — omit the "
+                    f"column via a column list (INSERT INTO "
+                    f"{name} (cols...) VALUES ...) and the "
+                    f"declared DEFAULT fills it"
                 )
-                if re.search(r"(?i)\bDEFAULT\b", masked):
-                    raise NotImplementedError(
-                        f"INSERT INTO {name}: the DEFAULT keyword "
-                        f"inside VALUES is not supported — omit the "
-                        f"column via a column list (INSERT INTO "
-                        f"{name} (cols...) VALUES ...) and the "
-                        f"declared DEFAULT fills it"
-                    )
             try:
                 new = self.spark.sql(f"SELECT * FROM ({rest})")
             except Exception:
@@ -8842,36 +8593,21 @@ class MallardEngine:
         source)`` (round-4 ADVICE: the old whole-expression rewrite
         lost the column-vs-table guard exactly when a subquery
         coexisted with the shadowed column)."""
-        from mallard_spark.dialect import _find_kw, _scan
-
-        if _find_kw(sql, "SELECT", at_depth=None) < 0:
+        if find_kw(sql, "SELECT", at_depth=None) < 0:
             return sql
-        positions = {i: d for i, _c, d, code in _scan(sql) if code}
         spans: list[tuple[int, int]] = []
         i = 0
         while True:
-            s = _find_kw(sql, "SELECT", at_depth=None, start=i)
+            s = find_kw(sql, "SELECT", at_depth=None, start=i)
             if s < 0:
                 break
-            d = positions.get(s, 0)
-            if d == 0:
-                i = s + 1
-                continue
-            opener = max(
-                (k for k in range(s) if sql[k] == "(" and positions.get(k) == d),
-                default=-1,
-            )
-            if opener < 0 or sql[opener + 1 : s].strip() != "":
+            opener = enclosing(sql, s)
+            if opener < 0 or sql[opener : s].strip() != "(":
                 i = s + 1  # SELECT not directly after '(' — skip
                 continue
-            closer = next(
-                (
-                    k
-                    for k in range(s, len(sql))
-                    if sql[k] == ")" and positions.get(k) == d - 1
-                ),
-                len(sql),
-            )
+            closer = match_bracket(sql, opener)
+            if closer < 0:
+                closer = len(sql)
             spans.append((opener + 1, closer))
             i = closer
         if not spans:
@@ -8919,7 +8655,7 @@ class MallardEngine:
         by_lower = {c.lower(): c for c in tbl.columns}
         updates: dict[str, "F.Column"] = {}
         unknown: list[str] = []
-        for assign in _split_top_level(sets):
+        for assign in split_top_level(sets):
             col, eq, expr = assign.partition("=")
             if not eq:
                 raise ValueError(f"malformed SET assignment: {assign!r}")
@@ -9096,7 +8832,7 @@ class MallardEngine:
         # FROM/JOIN position, so `..., s WHERE s.k = ...` would lose
         # the `s` qualifier
         joins = " CROSS JOIN ".join(
-            it.strip() for it in _split_top_level(src_text)
+            it.strip() for it in split_top_level(src_text)
         )
         q = (
             f"SELECT {sel} FROM {view} AS {ta} CROSS JOIN {joins}"
@@ -9158,7 +8894,7 @@ class MallardEngine:
         assigns: list[tuple[str, str]] = []
         seen: set[str] = set()
         unknown: list[str] = []
-        for assign in _split_top_level(sets):
+        for assign in split_top_level(sets):
             col, eq, expr = assign.partition("=")
             if not eq:
                 raise ValueError(f"malformed SET assignment: {assign!r}")
@@ -9322,7 +9058,7 @@ class MallardEngine:
         handed to the user AFTER the write publishes, so a lazy plan
         would re-read mutated state."""
         df = rows.alias(alias or name)
-        items = [i.strip() for i in _split_top_level(returning)]
+        items = [i.strip() for i in split_top_level(returning)]
         try:
             return df.selectExpr(*items)
         except Exception:
@@ -9786,9 +9522,7 @@ def _code_level_search(pattern: str, sql: str) -> bool:
     """re.search restricted to CODE (string literals and comments are
     masked out) — for construct-refusal checks that must not fire on
     a query merely mentioning the construct in a literal."""
-    from mallard_spark.dialect import _code_mask
-
-    mask = _code_mask(sql)
+    mask = code_mask(sql)
     return any(
         all(mask[k] for k in range(m.start(), m.end()))
         for m in re.finditer(pattern, sql)
@@ -9813,11 +9547,10 @@ def _replace_table_ref(
     ``qualified`` spelling with no backticks and no ``AS`` alias
     decoration, so the routers' bare-name grammars match.
 
-    Walks the SQL with a lexer that skips single-quoted string
-    literals and ``--`` / ``/* */`` comments, so a table name
-    appearing inside a literal (``WHERE note = 'orders pending'``)
-    is never rewritten. Single-quoted literals honor both SQL ``''``
-    doubling and Spark-dialect backslash escapes (``\\'``). A
+    Literals, quoted identifiers and comments are the spans of
+    :func:`mallard_spark.sqllex.lex` (its module docstring states the
+    rules), so a table name appearing inside a literal (``WHERE note
+    = 'orders pending'``) or a comment is never rewritten. A
     double-quoted or backtick-quoted span whose inner text exactly
     equals the table name IS rewritten (``FROM "orders"`` →
     ``FROM "server1__orders"``); other quoted identifiers pass
@@ -9842,7 +9575,7 @@ def _replace_table_ref(
         re.IGNORECASE if ci else 0,
     )
     out: list[str] = []
-    i, n = 0, len(sql)
+    n = len(sql)
     seg_start = 0
 
     def _word_at(k: int) -> str:
@@ -9902,58 +9635,28 @@ def _replace_table_ref(
 
         out.append(word.sub(sub, seg))
 
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            flush(i)
-            j = i + 1
-            while j < n:
-                if ch == "'" and sql[j] == "\\" and j + 1 < n:
-                    j += 2  # backslash escape inside a string literal
-                    continue
-                if sql[j] == ch:
-                    if ch == "'" and j + 1 < n and sql[j + 1] == "'":
-                        j += 2  # escaped '' inside a string literal
-                        continue
-                    j += 1
-                    break
-                j += 1
-            else:
-                j = n
-            span = sql[i:j]
-            quoted_hit = (
-                span.lower() == f"{ch}{name}{ch}".lower()
-                if ci
-                else span == f"{ch}{name}{ch}"
-            )
-            if ch in ('"', "`") and quoted_hit:
-                # Quoted table reference. Emitted backtick-quoted so a
-                # DuckDB-dialect client's `FROM "orders"` parses on
-                # Spark too (Spark treats bare double quotes as string
-                # literals). Limitation: a quoted NON-table identifier
-                # that happens to equal a table name is also rewritten.
-                if _prev_word(i - 1).upper() != "AS":  # alias position
-                    if bare_plain:
-                        span = qualified
-                    else:
-                        span = f"`{qualified}`"
-                        if _alias_here(i, j):
-                            span += f" AS `{name}`"
-            out.append(span)
-            i = seg_start = j
-        elif ch == "-" and sql[i : i + 2] == "--":
-            flush(i)
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            out.append(sql[i:j])
-            i = seg_start = j
-        elif ch == "/" and sql[i : i + 2] == "/*":
-            flush(i)
-            j = sql.find("*/", i)
-            j = n if j < 0 else j + 2
-            out.append(sql[i:j])
-            i = seg_start = j
-        else:
-            i += 1
+    for i, j in lex(sql).spans.items():
+        flush(i)
+        ch, span = sql[i], sql[i:j]
+        quoted_hit = (
+            span.lower() == f"{ch}{name}{ch}".lower()
+            if ci
+            else span == f"{ch}{name}{ch}"
+        )
+        if ch in ('"', "`") and quoted_hit:
+            # Quoted table reference. Emitted backtick-quoted so a
+            # DuckDB-dialect client's `FROM "orders"` parses on
+            # Spark too (Spark treats bare double quotes as string
+            # literals). Limitation: a quoted NON-table identifier
+            # that happens to equal a table name is also rewritten.
+            if _prev_word(i - 1).upper() != "AS":  # alias position
+                if bare_plain:
+                    span = qualified
+                else:
+                    span = f"`{qualified}`"
+                    if _alias_here(i, j):
+                        span += f" AS `{name}`"
+        out.append(span)
+        seg_start = j
     flush(n)
     return "".join(out)

@@ -51,6 +51,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mallard_spark.sqllex import find_kw, match_bracket, split_top_level
+
 if TYPE_CHECKING:
     from mallard_spark.engine import MallardEngine
 
@@ -85,13 +87,11 @@ class _Merge:
 
 def _kw_positions(sql: str, words: tuple[str, ...]) -> list[tuple[int, str]]:
     """All depth-0 code occurrences of ``words``, in order."""
-    from mallard_spark.dialect import _find_kw
-
     hits: list[tuple[int, str]] = []
     for w in words:
         p = 0
         while True:
-            k = _find_kw(sql, w, at_depth=0, start=p)
+            k = find_kw(sql, w, at_depth=0, start=p)
             if k < 0:
                 break
             hits.append((k, w))
@@ -100,13 +100,13 @@ def _kw_positions(sql: str, words: tuple[str, ...]) -> list[tuple[int, str]]:
     return hits
 
 
-def _clause_boundaries(tail: str) -> list[int]:
-    """Positions of the depth-0 WHENs that start MERGE clauses —
-    skipping WHEN/THEN that belong to a ``CASE .. END`` inside a
-    guard or action expression."""
+def _outside_case(sql: str, word: str) -> list[int]:
+    """Positions of the depth-0 ``word``s outside any ``CASE .. END``
+    — the WHENs that start MERGE clauses and the THEN that ends a
+    clause head, not those of a CASE inside a guard or action."""
     case_depth = 0
     out = []
-    for pos, w in _kw_positions(tail, ("CASE", "END", "WHEN")):
+    for pos, w in _kw_positions(sql, ("CASE", "END", word)):
         if w == "CASE":
             case_depth += 1
         elif w == "END":
@@ -119,16 +119,7 @@ def _clause_boundaries(tail: str) -> list[int]:
 def _split_guard_then(seg: str) -> tuple[str | None, str]:
     """Split one clause body ``[AND guard] THEN action`` at the
     clause-level THEN (CASE..END-aware on both sides)."""
-    case_depth = 0
-    then_at = -1
-    for pos, w in _kw_positions(seg, ("CASE", "END", "THEN")):
-        if w == "CASE":
-            case_depth += 1
-        elif w == "END":
-            case_depth = max(0, case_depth - 1)
-        elif case_depth == 0:
-            then_at = pos
-            break
+    then_at = (_outside_case(seg, "THEN") or [-1])[0]
     if then_at < 0:
         raise ValueError(f"MERGE clause missing THEN: {seg[:80]!r}")
     head, action = seg[:then_at].strip(), seg[then_at + 4 :].strip()
@@ -139,8 +130,6 @@ def _split_guard_then(seg: str) -> tuple[str | None, str]:
 
 
 def _parse_action(text: str, klass: str) -> _Clause:
-    from mallard_spark.engine import _split_top_level
-
     up = text.upper()
     if re.match(r"^DO\s+NOTHING\s*$", up):
         return _Clause(klass, None, "nothing")
@@ -174,7 +163,7 @@ def _parse_action(text: str, klass: str) -> _Clause:
         if im.group("cols") else None
     )
     vals = (
-        _split_top_level(im.group("vals"))
+        split_top_level(im.group("vals"))
         if im.group("vals") is not None else None
     )
     if cols is not None and vals is None:
@@ -189,11 +178,10 @@ def _parse_action(text: str, klass: str) -> _Clause:
 
 def parse_merge(sql: str) -> _Merge:
     """Token-level parse of a MERGE statement (quote/comment/paren
-    aware via the dialect scanner; CASE..END-aware WHEN/THEN split)."""
-    from mallard_spark.dialect import _find_kw
-
+    aware via :mod:`mallard_spark.sqllex`; CASE..END-aware WHEN/THEN
+    split)."""
     s = sql.rstrip().rstrip(";").rstrip()
-    if _find_kw(s, "RETURNING", at_depth=0) >= 0:
+    if find_kw(s, "RETURNING", at_depth=0) >= 0:
         raise NotImplementedError(
             "MERGE ... RETURNING is not supported: run the MERGE, then "
             "SELECT the rows you need (the engine executes both in one "
@@ -212,20 +200,7 @@ def parse_merge(sql: str) -> _Merge:
     pos = hm.end()
 
     if s[pos] == "(":  # subquery source — find its matching paren
-        depth = 0
-        end = -1
-        from mallard_spark.dialect import _scan
-
-        for i, ch, _d, code in _scan(s[pos:]):
-            if not code:
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    end = pos + i
-                    break
+        end = match_bracket(s, pos)
         if end < 0:
             raise ValueError("MERGE: unbalanced source subquery")
         source_text, source_is_query = s[pos + 1 : end].strip(), True
@@ -249,7 +224,7 @@ def parse_merge(sql: str) -> _Merge:
     tail = s[pos:]
     on_cond: str | None = None
     using_cols: list[str] | None = None
-    whens = _clause_boundaries(tail)
+    whens = _outside_case(tail, "WHEN")
     first_when = whens[0] if whens else len(tail)
     joiner = tail[:first_when].strip()
     jm = re.match(r"^ON\b(?P<cond>.*)$", joiner, re.IGNORECASE | re.DOTALL)
@@ -375,8 +350,6 @@ def execute_merge(engine: "MallardEngine", sql: str) -> str:
         )
 
     def update_vals(c: _Clause) -> dict:
-        from mallard_spark.engine import _split_top_level
-
         if c.sets is None:  # abbreviated UPDATE: all columns by name
             missing = [f.name for f in fields
                        if f.name.lower() not in s_by_lower]
@@ -391,7 +364,7 @@ def execute_merge(engine: "MallardEngine", sql: str) -> str:
             }
         out = dict(tcol)
         seen: set[str] = set()
-        for assign in _split_top_level(c.sets):
+        for assign in split_top_level(c.sets):
             col, eq, expr = assign.partition("=")
             if not eq:
                 raise ValueError(f"malformed MERGE SET: {assign!r}")

@@ -2,10 +2,12 @@
 likely to harbor edge cases: the SQL table-reference rewriter and the
 content-addressed split routing."""
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mallard_spark.engine import _replace_table_ref
+from mallard_spark.sqllex import lex, match_bracket, split_top_level
 
 # fragments that exercise the lexer: quotes, comments, escapes, the
 # table name in every disguise
@@ -97,32 +99,132 @@ def test_split_routing_is_total_and_stable(doc_id):
 def test_split_top_level_roundtrip(parts):
     """Joining split parts with the separator reproduces the input,
     and splitting quote/paren-free text equals str.split."""
-    from mallard_spark.engine import _split_top_level
-
     s = ",".join(parts)
-    got = _split_top_level(s)
+    got = split_top_level(s)
     assert ",".join(got) == s
     assert got == s.split(",")
 
 
 def test_split_top_level_respects_nesting_and_quotes():
-    from mallard_spark.engine import _split_top_level
-
-    assert _split_top_level("a = f(x, y), b = 'p,q', c = \"r,s\"") == [
+    assert split_top_level("a = f(x, y), b = 'p,q', c = \"r,s\"") == [
         "a = f(x, y)",
         " b = 'p,q'",
         ' c = "r,s"',
     ]
-    assert _split_top_level("a = array[1, 2], b = 'it''s, ok'") == [
+    assert split_top_level("a = array[1, 2], b = 'it''s, ok'") == [
         "a = array[1, 2]",
         " b = 'it''s, ok'",
     ]
     # round 8: struct/dict literals nest too (COLUMNS(['a','b']) and
     # read_csv columns={'a': 'INT', 'b': 'TEXT'} arguments)
-    assert _split_top_level("columns={'a': 'INT', 'b': 'TEXT'}, x=1") == [
+    assert split_top_level("columns={'a': 'INT', 'b': 'TEXT'}, x=1") == [
         "columns={'a': 'INT', 'b': 'TEXT'}",
         " x=1",
     ]
+    # a comma inside a -- comment is not a separator (DuckDB 1.0 reads
+    # CREATE TABLE t (a INT, -- x, y\n b INT) as two columns)
+    assert split_top_level("a INT, -- x, y\n b INT") == [
+        "a INT",
+        " -- x, y\n b INT",
+    ]
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "(x /* ) */ > 0) rest",
+        "(`a)` + 1) rest",
+        "('a\\'b)' || c) rest",
+        "({'k': [1, (2)]}) rest",
+    ],
+)
+def test_match_bracket_skips_literals_and_comments(sql):
+    close = match_bracket(sql, 0)
+    assert sql[close + 1 :] == " rest"
+    assert match_bracket(sql, close) == 0
+
+
+def _scan_spec(sql: str):
+    """Reference lexer: yield (index, char, depth, in_code) for every
+    character, one character at a time. This is the scanner the
+    rewrite passes used before ``sqllex``, kept as the semantic spec
+    of its one-pass lexer. Two rules changed when the helpers were
+    unified, and are encoded here: ``{}`` nests like ``()``/``[]``,
+    and a block comment closes at the first ``*/`` after its ``/*``
+    (``/*/`` does not close itself)."""
+    i, n = 0, len(sql)
+    depth = 0
+    while i < n:
+        ch = sql[i]
+        if ch in ("'", '"', "`"):
+            q = ch
+            yield i, ch, depth, False
+            i += 1
+            while i < n:
+                c = sql[i]
+                yield i, c, depth, False
+                if c == "\\" and q == "'" and i + 1 < n:
+                    yield i + 1, sql[i + 1], depth, False
+                    i += 2
+                    continue
+                if c == q:
+                    if q == "'" and i + 1 < n and sql[i + 1] == "'":
+                        yield i + 1, "'", depth, False
+                        i += 2
+                        continue
+                    i += 1
+                    break
+                i += 1
+        elif ch == "-" and sql[i : i + 2] == "--":
+            j = sql.find("\n", i)
+            j = n if j < 0 else j
+            for k in range(i, j):
+                yield k, sql[k], depth, False
+            i = j
+        elif ch == "/" and sql[i : i + 2] == "/*":
+            j = sql.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+            for k in range(i, j):
+                yield k, sql[k], depth, False
+            i = j
+        else:
+            if ch in "([{":
+                depth += 1
+            out_depth = depth
+            if ch in ")]}":
+                depth -= 1
+                out_depth = depth
+            yield i, ch, out_depth, True
+            i += 1
+
+
+_LEX_FRAGMENTS = st.sampled_from(
+    [
+        "'a'", "''", "'it''s'", "'\\''", "\\'", "'", "\\",
+        '"x"', '"', "`a)`", "`",
+        "-- c )\n", "--", "\n", "/* ( */", "/*", "*/", "/", "*", "-",
+        "(", ")", "[", "]", "{", "}", "a", " ", ",",
+    ]
+)
+
+
+@given(st.lists(_LEX_FRAGMENTS, min_size=0, max_size=16).map("".join))
+@settings(max_examples=1000, deadline=None)
+def test_lexer_matches_reference_scan(sql):
+    """The one-pass lexer's code mask and bracket depth equal the
+    character-at-a-time reference on every fragment mix."""
+    ref = list(_scan_spec(sql))
+    assert [i for i, *_ in ref] == list(range(len(sql)))
+    lx = lex(sql)
+    assert list(lx.mask) == [int(code) for *_, code in ref]
+    assert list(lx.depth) == [d for _, _, d, _ in ref]
+    stack, kinds_match = [], True
+    for _, c, _, code in ref:
+        if code and c in "([{":
+            stack.append(c)
+        elif code and c in ")]}":
+            kinds_match &= bool(stack) and stack.pop() + c in ("()", "[]", "{}")
+    assert lx.balanced == (kinds_match and not stack)
 
 
 
