@@ -54,6 +54,7 @@ from pyspark.sql import types as T
 from mallard_spark.exchange import Exchanger
 from mallard_spark.sqllex import (
     code_mask,
+    is_code,
     enclosing,
     find_kw,
     lex,
@@ -2515,8 +2516,7 @@ class MallardEngine:
         m = self._PERCENT_LIMIT_RE.search(sql)
         if m is None:
             return None
-        mask = code_mask(sql)
-        if not all(mask[k] for k in range(m.start(), m.end())):
+        if not is_code(sql, m.start(), m.end()):
             return None
         import math
 
@@ -2569,12 +2569,12 @@ class MallardEngine:
             bmask = code_mask(body)
             has_named = any(
                 not m.group(1).isdigit()
-                and all(bmask[k] for k in range(m.start(), m.end()))
+                and is_code(body, m.start(), m.end())
                 for m in re.finditer(r"\$(\w+)", body)
             )
             has_positional = any(
                 m.group(1).isdigit()
-                and all(bmask[k] for k in range(m.start(), m.end()))
+                and is_code(body, m.start(), m.end())
                 for m in re.finditer(r"\$(\w+)", body)
             ) or any(
                 c == "?" and bmask[i] for i, c in enumerate(body)
@@ -2615,7 +2615,7 @@ class MallardEngine:
         named = [
             (m.start(), m.end(), m.group(1))
             for m in re.finditer(r"\$([A-Za-z_]\w*)", stmt)
-            if all(mask[k] for k in range(m.start(), m.end()))
+            if is_code(stmt, m.start(), m.end())
         ]
         if named:
             # NAMED parameters (round 14, DuckDB semantics verified
@@ -2656,7 +2656,7 @@ class MallardEngine:
         dollar = [
             (m.start(), m.end(), int(m.group(1)))
             for m in re.finditer(r"\$(\d+)", stmt)
-            if all(mask[k] for k in range(m.start(), m.end()))
+            if is_code(stmt, m.start(), m.end())
         ]
         qmarks = [i for i, c in enumerate(stmt) if c == "?" and mask[i]]
         if dollar and qmarks:
@@ -2743,7 +2743,7 @@ class MallardEngine:
         Double-quoted identifiers (DuckDB spells ``CREATE TABLE
         "qt" ("my col" INT)``) retry with the backtick conversion
         when the literal spelling fails — same fired-on-failure
-        policy as the query ladder (round 14)."""
+        policy as the query path (round 14)."""
         if "--" in sql or "/*" in sql:
             sql = strip_comments(sql)  # router grammars are comment-free
         return self._retry_dquoted(self._ddl_impl, self._canon_case(sql))
@@ -2899,7 +2899,6 @@ class MallardEngine:
             bound = bind(params, args)
             if bound is None:
                 return None
-            mask = code_mask(body)
             spans: list[tuple[int, int, str]] = []
             for p, a in bound.items():
                 # identifiers are case-insensitive: a body may spell a
@@ -2907,7 +2906,7 @@ class MallardEngine:
                 for m in re.finditer(
                     rf"(?i)(?<![\w.]){re.escape(p)}(?![\w.])", body
                 ):
-                    if all(mask[k] for k in range(m.start(), m.end())):
+                    if is_code(body, m.start(), m.end()):
                         spans.append((m.start(), m.end(), f"({a.strip()})"))
             spans.sort()
             out, pos = [], 0
@@ -2929,11 +2928,10 @@ class MallardEngine:
                 rf"\b(FROM|JOIN)(\s+){re.escape(name)}\s*\(", re.IGNORECASE
             )
             for _ in range(32):
-                mask = code_mask(sql)
                 m2 = next(
                     (
                         c for c in pat.finditer(sql)
-                        if all(mask[k] for k in range(c.start(), c.end()))
+                        if is_code(sql, c.start(), c.end())
                     ),
                     None,
                 )
@@ -3353,7 +3351,7 @@ class MallardEngine:
         if "printf" in out.lower():
             # printf with a decimal-point literal argument is a
             # GUARANTEED Spark error (Decimal reaches Java's %f at
-            # evaluation, AFTER analysis — invisible to the ladder);
+            # evaluation, AFTER analysis — invisible to resolve);
             # DuckDB's type-strict printf allows a decimal only
             # under %f/%e — rewritten pre-vanilla (round 15)
             out = rewrite_printf_decimal_calls(out)
@@ -3380,7 +3378,7 @@ class MallardEngine:
             return pl
         # sound pre-vanilla routes (round 13): constructs that pass
         # Spark ANALYSIS but are GUARANTEED runtime errors — the
-        # on-failure ladder below never sees them, while DuckDB gives
+        # on-failure resolution below never sees them, while DuckDB gives
         # them meaning. (1) a NEGATIVE int-literal subscript (0-based
         # arrays throw on negatives; DuckDB reads from-the-end);
         # (2) 4-arg regexp_replace with a flag STRING (Spark's 4th
@@ -3411,7 +3409,7 @@ class MallardEngine:
                 # working Spark and must not be switched to DuckDB
                 # semantics; only on arrays is the negative subscript
                 # a guaranteed runtime error that the on-failure
-                # ladder can never see
+                # resolution can never see
                 try:
                     self.spark.sql(probe)
                     pre_route = True
@@ -3424,14 +3422,8 @@ class MallardEngine:
             # NAME token is checked per hit — the matched span itself
             # contains string-literal arguments (mask=False there by
             # construction)
-            omask = code_mask(out)
             pre_route = any(
-                all(
-                    omask[k]
-                    for k in range(
-                        fm.start(), fm.start() + len("regexp_replace")
-                    )
-                )
+                is_code(out, fm.start(), fm.start() + len("regexp_replace"))
                 for fm in self._REGEXP_FLAGS_RE.finditer(out)
             )
         if not pre_route and "\\" in out and "regexp" in out.lower():
@@ -3445,19 +3437,18 @@ class MallardEngine:
             # raw-string reading first
             pre_route = has_lone_backslash_regexp(out)
         if pre_route:
-            from mallard_spark.dialect import translate_variants
+            from mallard_spark.dialect import resolve
 
             # force_fired: a pre-routed statement is demonstrably
             # DuckDB dialect, so the shared-name value mappings
             # (first-only regexp_replace, 1-based indexing, log10,
             # ...) apply even when no TEXTUAL rule fires (round 14)
-            for translated in translate_variants(
-                out, csv_resolver=self._csv_auto_view, force_fired=True
-            ):
-                try:
-                    return self.spark.sql(translated)
-                except Exception:
-                    continue
+            df, _ = resolve(
+                out, self.spark.sql, csv_resolver=self._csv_auto_view,
+                force_fired=True,
+            )
+            if df is not None:
+                return df
         try:
             return self.spark.sql(out)
         except Exception as first_err:
@@ -3543,14 +3534,13 @@ class MallardEngine:
             # DuckDB, so clients send DuckDB SQL (`//`, QUALIFY,
             # EXCLUDE, DISTINCT ON). Translate and retry ONLY after
             # vanilla parsing/analysis failed — a query Spark already
-            # accepts can never change meaning. Variants encode the
-            # typed readings of `//` and `len()` (analyzer-driven
-            # dispatch: first variant Spark accepts wins).
-            from mallard_spark.dialect import translate_variants
+            # accepts can never change meaning. The typed readings of
+            # `//`, `len()` and the other type-dependent constructs
+            # are settled from Spark's own analysis errors (see
+            # dialect.resolve).
+            from mallard_spark.dialect import resolve
 
-            for translated in translate_variants(
-                out, csv_resolver=self._csv_auto_view
-            ):
+            def analyzed(translated: str) -> DataFrame:
                 try:
                     return self.spark.sql(translated)
                 except Exception as retry_err:
@@ -3558,36 +3548,36 @@ class MallardEngine:
                         "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE"
                         in str(retry_err)
                     )
-                    if retry_union or (
-                        translated != out
-                        and re.match(
-                            r"^\s*WITH\s+RECURSIVE\b",
-                            translated, re.IGNORECASE,
-                        )
+                    if not retry_union and not re.match(
+                        r"^\s*WITH\s+RECURSIVE\b", translated, re.IGNORECASE
                     ):
-                        # dialect syntax AND a recursive CTE (dedup
-                        # UNION, chained, or mutual) in one statement:
-                        # run the fixpoint on the TRANSLATED text.
-                        # translated == out is skipped — identical
-                        # text already failed the first attempt, so
-                        # re-running the fixpoint would just pay the
-                        # error path twice (round-9 review)
-                        if retry_union:
+                        raise
+                    # dialect syntax AND a recursive CTE (dedup
+                    # UNION, chained, or mutual) in one statement:
+                    # run the fixpoint on the TRANSLATED text
+                    # (resolve never resubmits `out` itself, whose
+                    # fixpoint already ran above)
+                    if retry_union:
+                        fixed = self._recursive_union_fixpoint(translated)
+                    else:
+                        try:
                             fixed = self._recursive_union_fixpoint(
                                 translated
                             )
-                        else:
-                            try:
-                                fixed = self._recursive_union_fixpoint(
-                                    translated
-                                )
-                            except (ValueError, NotImplementedError):
-                                raise
-                            except Exception:
-                                fixed = None
-                        if fixed is not None:
-                            return fixed
-                    continue
+                        except (ValueError, NotImplementedError):
+                            raise
+                        except Exception:
+                            fixed = None
+                    if fixed is None:
+                        raise retry_err
+                    return fixed
+
+            df, resolved_err = resolve(
+                out, analyzed, vanilla_err=first_err,
+                csv_resolver=self._csv_auto_view,
+            )
+            if df is not None:
+                return df
             # untranslatable DuckDB constructs get NAMED refusals
             # instead of the raw parse error — checked AFTER the
             # translation attempt (a query that merely MENTIONS the
@@ -3806,6 +3796,15 @@ class MallardEngine:
                     continue
                 if _code_level_search(rx, out):
                     raise NotImplementedError(msg) from first_err
+            if (
+                resolved_err is not None
+                and _is_parse_error(first_err)
+                and not _is_parse_error(resolved_err)
+            ):
+                # Spark could not parse the DuckDB text, but a reading
+                # of it parsed and names the real problem (an unknown
+                # column, a type mismatch)
+                raise resolved_err from first_err
             raise first_err
 
     def _recursive_union_fixpoint(self, sql: str) -> DataFrame | None:
@@ -3846,9 +3845,8 @@ class MallardEngine:
             return None
 
         def _refs(text: str, ident: str) -> bool:
-            tmask = code_mask(text)
             return any(
-                all(tmask[k] for k in range(w.start(), w.end()))
+                is_code(text, w.start(), w.end())
                 for w in re.finditer(
                     rf"(?i)(?<![\w.`\"]){re.escape(ident)}(?![\w`\"])", text
                 )
@@ -4312,10 +4310,9 @@ class MallardEngine:
         def find_call(text: str):
             """(start, end_after_close, arg) of the single COLUMNS
             call in ``text``; None if absent; ... if unsupported."""
-            mask = code_mask(text)
             hits = [
                 m for m in re.finditer(r"(?i)\bCOLUMNS\s*\(", text)
-                if all(mask[k] for k in range(m.start(), m.end()))
+                if is_code(text, m.start(), m.end())
             ]
             if not hits:
                 return None
@@ -5739,7 +5736,6 @@ class MallardEngine:
         scope (it could rewrite ORDER BY/min/max on an unrelated
         same-named column, or raise the ambiguity refusal spuriously).
         """
-        mask = code_mask(sql)
         cols: dict[str, object] = {}
         for t, colmap in self._table_enums.items():
             hits = [
@@ -5747,7 +5743,7 @@ class MallardEngine:
                 for m in re.finditer(
                     rf"(?<![\w.]){re.escape(t)}\b", sql
                 )
-                if all(mask[k] for k in range(m.start(), m.end()))
+                if is_code(sql, m.start(), m.end())
             ]
             if not hits:
                 continue
@@ -8165,7 +8161,7 @@ class MallardEngine:
         """
         from pyspark.sql import functions as F
 
-        from mallard_spark.dialect import translate_expression_variants
+        from mallard_spark.dialect import resolve
 
         if self._macros:
             # CREATE MACRO names resolve in DML fragments too
@@ -8174,44 +8170,26 @@ class MallardEngine:
             # lexical inlining as the query path
             fragment = self._expand_macros(fragment)
 
-        def _first_analyzing(cands: list[str]):
-            """First variant that analyzes against ``probe`` (or the
-            first variant outright when there is no probe)."""
-            for t in cands:
-                if probe is None:
-                    return F.expr(t)
-                try:
-                    probe.select(F.expr(t)).columns
-                    return F.expr(t)
-                except Exception:
-                    continue
-            return None
+        def analyzed(t: str):
+            """``t`` as a column, once it analyzes against ``probe``
+            (outright when there is no probe)."""
+            if probe is not None:
+                probe.select(F.expr(t)).columns
+            return F.expr(t)
 
         if _WIRE_DUCKDB.get() or self.duckdb_semantics:
             # wire DML fragments are DuckDB SQL by definition
             # (round 14 — same contract as query tickets; the LOCAL
             # duckdb_semantics opt-in reaches fragments too since
             # round 15): the force-fired translation runs FIRST; if a
-            # variant analyzes against the target relation it wins,
-            # else the normal fired-only ladder below is the fallback
-            r = _first_analyzing(
-                translate_expression_variants(fragment, force_fired=True)
-            )
+            # reading analyzes against the target relation it wins,
+            # else the normal fired-only resolution below is the
+            # fallback
+            r, _ = resolve(fragment, analyzed, fragment=True, force_fired=True)
             if r is not None:
                 return r
 
-        def _is_parse_error(e: Exception) -> bool:
-            try:
-                from pyspark.errors import ParseException
-
-                if isinstance(e, ParseException):
-                    return True
-            except ImportError:
-                pass
-            j = getattr(e, "java_exception", None)
-            return j is not None and "ParseException" in j.getClass().getName()
-
-        parse_ok: bool | None = None  # None: parser unavailable
+        parse_err = None  # None: parsed, or no parser to ask
         try:
             # F.expr defers parsing to plan build (Spark 4), so probe
             # the session parser EAGERLY — the only way to know the
@@ -8219,21 +8197,20 @@ class MallardEngine:
             self.spark._jsparkSession.sessionState().sqlParser().parseExpression(
                 fragment
             )
-            parse_ok = True
         except Exception as e:
-            parse_ok = False if _is_parse_error(e) else None
+            if _is_parse_error(e):
+                parse_err = e
 
-        if parse_ok is False:
-            cands = translate_expression_variants(fragment)
-            r = _first_analyzing(cands)
+        if parse_err is not None:
+            r, err = resolve(fragment, analyzed, fragment=True, vanilla_err=parse_err)
             if r is not None:
                 return r
-            if cands:
-                # no variant analyzed (e.g. a genuinely wrong column
+            if err is not None and err is not parse_err:
+                # no reading analyzed (e.g. a genuinely wrong column
                 # name) — surface the TRANSLATED reading's analysis
                 # error, which names the real problem, rather than
                 # the original parse error
-                return F.expr(cands[0])
+                raise err
             # untranslatable: hand back the lazy column so Spark's
             # original parse error surfaces at plan build
             return F.expr(fragment)
@@ -8247,10 +8224,8 @@ class MallardEngine:
                 # fire (the exact environment the probe exists for)
                 probe.select(F.expr(fragment)).columns
                 return F.expr(fragment)
-            except Exception:
-                r = _first_analyzing(
-                    translate_expression_variants(fragment)
-                )
+            except Exception as e:
+                r, _ = resolve(fragment, analyzed, fragment=True, vanilla_err=e)
                 if r is not None:
                     return r
                 # keep Spark semantics: the original analysis error
@@ -9518,13 +9493,26 @@ _TABLE_REF_FOLLOW_KWS = frozenset(
 )
 
 
+def _is_parse_error(e: Exception) -> bool:
+    """True for Spark's parse error, raised through PySpark or straight
+    from the JVM parser."""
+    try:
+        from pyspark.errors import ParseException
+
+        if isinstance(e, ParseException):
+            return True
+    except ImportError:
+        pass
+    j = getattr(e, "java_exception", None)
+    return j is not None and "ParseException" in j.getClass().getName()
+
+
 def _code_level_search(pattern: str, sql: str) -> bool:
     """re.search restricted to CODE (string literals and comments are
     masked out) — for construct-refusal checks that must not fire on
     a query merely mentioning the construct in a literal."""
-    mask = code_mask(sql)
     return any(
-        all(mask[k] for k in range(m.start(), m.end()))
+        is_code(sql, m.start(), m.end())
         for m in re.finditer(pattern, sql)
     )
 

@@ -130,6 +130,11 @@ def code_mask(sql: str) -> bytes:
     return lex(sql).mask
 
 
+def is_code(sql: str, start: int, end: int) -> bool:
+    """True when every character of ``sql[start:end]`` is code."""
+    return 0 not in lex(sql).mask[start:end]
+
+
 def _is_word(c: str) -> bool:
     return c.isalnum() or c == "_"
 

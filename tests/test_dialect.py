@@ -102,7 +102,7 @@ def test_valid_spark_sql_untouched():
 def test_translator_output_shapes():
     # the DIV reading carries the integral analysis guard (& -1 is
     # identity on every integral type) so DECIMAL operands fail
-    # analysis and the variant ladder retries float — DuckDB's typed
+    # analysis and resolve moves that site to float — DuckDB's typed
     # `//` semantics (decimal // int true-divides, verified live)
     assert (
         duckdb_to_spark("SELECT v // 2 FROM t")
@@ -320,9 +320,9 @@ def test_intdiv_float_literal_matches_duckdb(eng5):
 
 
 def test_intdiv_double_column_via_analyzer_retry(eng5):
-    # `w // 2` is lexically clean — the DIV variant fails analysis on
-    # the DOUBLE column and the engine's variant ladder lands on the
-    # float reading, matching DuckDB exactly
+    # `w // 2` is lexically clean — the DIV reading fails analysis on
+    # the DOUBLE column and the engine's resolver moves the site to
+    # the float reading, matching DuckDB exactly
     rows = _both5(eng5, "SELECT w // 2 AS h FROM dw ORDER BY id")
     assert rows[0][0] == 0.75
 
@@ -726,10 +726,54 @@ def test_map_string_key_access_untouched(eng5):
 
 def test_intdiv_mixed_int_and_double_sites(eng5):
     # one query mixing an int-column site and a double-column site:
-    # per-site masks keep DIV on the int site (DuckDB truncating int
-    # semantics) while the double site goes float
+    # only the site Spark's analysis rejects goes float, so the int
+    # site keeps DIV (DuckDB truncating int semantics)
     rows = _both5(eng5, "SELECT v // 7 AS d, w // 2 AS h FROM dw ORDER BY id")
     assert rows[0] == (1, 0.75)
+    # five sites: each int site still truncates (no all-float fallback)
+    _both5(
+        eng5,
+        "SELECT w // 2 AS a, v // 2 AS b, v // 3 AS c, v // 4 AS d, "
+        "v // 7 AS e FROM dw ORDER BY id",
+    )
+    # the double site first
+    _both5(eng5, "SELECT w // 2 AS a, v // 3 AS b, v // 7 AS c FROM dw ORDER BY id")
+    # the FROM-first rewrite moves the double site ahead of the int
+    # site in the output: sites are told apart by where the failing
+    # guard sits, not by output order
+    _both5(eng5, "FROM (SELECT id // 2 AS h, w FROM dw) SELECT w // 2 AS a, h ORDER BY h, a")
+    # nested sites: the outer site's type depends on the inner one
+    _both5(eng5, "SELECT v // (id // 1) AS a, (w // 2) // 1 AS b FROM dw ORDER BY id")
+
+
+def test_intdiv_analyses_linear_in_float_sites(eng5, monkeypatch):
+    """Two DOUBLE sites among four cost the vanilla attempt plus
+    f + 1 = 3 analyses, not one per combination of sites."""
+    from pyspark.sql import SparkSession
+
+    calls = []
+    orig = SparkSession.sql
+
+    def counting(self, *a, **kw):
+        calls.append(a[0])
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(SparkSession, "sql", counting)
+    eng5.sql("SELECT w // 2 AS a, v // 2 AS b, v // 3 AS c, w // 4 AS d FROM dw ORDER BY id")
+    assert len(calls) <= 4, calls
+
+
+def test_intdiv_unknown_column_reports_analysis_error(eng5):
+    """DuckDB names the unknown column; so does the engine, rather
+    than Spark's parse error at `//`."""
+    from pyspark.errors import AnalysisException, ParseException
+
+    with pytest.raises(AnalysisException) as ei:
+        eng5.sql("SELECT nosuch // 2 AS a FROM dw")
+    assert not isinstance(ei.value, ParseException)
+    assert ei.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert "nosuch" in str(ei.value)
+    assert isinstance(ei.value.__cause__, ParseException)
 
 
 def test_from_first_syntax(eng5):
@@ -1092,8 +1136,8 @@ def test_varchar_cast_without_length(eng6):
 
 def test_epoch_ms_both_directions_via_analyzer_retry(eng6):
     # DuckDB's epoch_ms is overloaded by argument type: ts -> BIGINT
-    # ms and ms -> TIMESTAMP; the engine's variant ladder picks the
-    # typed reading that passes analysis
+    # ms and ms -> TIMESTAMP; the engine's resolver picks the typed
+    # reading that passes analysis
     _both6(
         eng6,
         "SELECT epoch_ms(TIMESTAMP '2020-03-04 05:06:07') AS ms, eid // 2 AS d "
@@ -2006,8 +2050,8 @@ def test_string_literal_slice_clamps(eng):
 
 def test_string_column_subscript(eng5):
     """Subscripts on string COLUMNS: the array (try_element_at) and
-    map (plain) readings fail analysis and the variant ladder lands
-    on the 1-based substring reading."""
+    map (plain) readings fail analysis and the resolver lands on the
+    1-based substring reading."""
     got = _both5(eng5, "SELECT (g || 'xyz')[2] AS c FROM dw ORDER BY id")
     assert got[0][0] == "x"
     _both5(eng5, "SELECT (g || 'xyz')[-1] AS c FROM dw ORDER BY id")

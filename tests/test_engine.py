@@ -3898,7 +3898,7 @@ def test_dml_fragments_macros_and_list_len(spark):
     """Round-15 DML-fragment fixes: CREATE MACRO names resolve inside
     UPDATE expressions (lexical inlining, like the query path), and
     analyzer-dispatched constructs (len() on a LIST column) reach the
-    variant ladder in DELETE predicates."""
+    resolver in DELETE predicates."""
     eng = MallardEngine(spark, "t_dmlfrag")
     eng.ddl("CREATE MACRO bump15(x) AS x + 2")
     eng.execute(

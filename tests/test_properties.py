@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mallard_spark.engine import _replace_table_ref
-from mallard_spark.sqllex import lex, match_bracket, split_top_level
+from mallard_spark.sqllex import is_code, lex, match_bracket, split_top_level
 
 # fragments that exercise the lexer: quotes, comments, escapes, the
 # table name in every disguise
@@ -211,12 +211,17 @@ _LEX_FRAGMENTS = st.sampled_from(
 @given(st.lists(_LEX_FRAGMENTS, min_size=0, max_size=16).map("".join))
 @settings(max_examples=1000, deadline=None)
 def test_lexer_matches_reference_scan(sql):
-    """The one-pass lexer's code mask and bracket depth equal the
-    character-at-a-time reference on every fragment mix."""
+    """The one-pass lexer's code mask, code-span check and bracket
+    depth equal the character-at-a-time reference on every fragment
+    mix."""
     ref = list(_scan_spec(sql))
     assert [i for i, *_ in ref] == list(range(len(sql)))
     lx = lex(sql)
-    assert list(lx.mask) == [int(code) for *_, code in ref]
+    code = [int(c) for *_, c in ref]
+    assert list(lx.mask) == code
+    for a in range(0, len(sql) + 1, 2):
+        for b in range(a, len(sql) + 1, 3):
+            assert is_code(sql, a, b) == all(code[a:b]), (a, b)
     assert list(lx.depth) == [d for _, _, d, _ in ref]
     stack, kinds_match = [], True
     for _, c, _, code in ref:
