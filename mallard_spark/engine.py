@@ -46,7 +46,9 @@ import tempfile
 import time
 import uuid
 from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
+from copy import deepcopy
+from dataclasses import dataclass, field
+from typing import TYPE_CHECKING, Any, ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -183,7 +185,8 @@ _DROP_MACRO_RE = re.compile(
     re.IGNORECASE,
 )
 _ALTER_RENAME_RE = re.compile(
-    r"^\s*ALTER\s+TABLE\s+(?P<name>[A-Za-z_][\w]*)\s+RENAME\s+TO\s+"
+    r"^\s*ALTER\s+(?P<kind>TABLE|VIEW)\s+(?P<name>[A-Za-z_][\w]*)\s+"
+    r"RENAME\s+TO\s+"
     r"(?P<new>[A-Za-z_][\w]*)\s*;?\s*$",
     re.IGNORECASE,
 )
@@ -620,7 +623,7 @@ def _bt(col: str) -> str:
 
 
 def _encode_keys_prop(constraints: list[list[str]]) -> str:
-    """Declared unique constraints → the ``mallard.keys`` property.
+    """Declared unique constraints → their table property value.
 
     A single constraint of plain identifiers keeps the legacy
     comma-join (tables persisted by earlier rounds stay readable);
@@ -640,6 +643,164 @@ def _decode_keys_prop(v: str) -> list[list[str]]:
     if v.startswith("["):
         return [[str(c) for c in grp] for grp in json.loads(v)]
     return [v.split(",")] if v else []
+
+
+@dataclass
+class _Decl:
+    """What the engine declares about one catalog name beyond its
+    data. DuckDB keeps these facts in the name's catalog entry, so a
+    rename, a dropped column or a rolled-back transaction carries them
+    together; so does this record. A name is a view exactly when
+    ``view_sql`` is set. Persisted tables carry the table declarations
+    as ``PROPS`` table properties, mirrored back by
+    ``_discover_persistent``."""
+
+    # declared PRIMARY KEY / UNIQUE columns (round 8): a LIST of
+    # independent constraints (PRIMARY KEY (a) + UNIQUE (b) stays two
+    # entries, never one composite [a, b] — ADVICE r8). Not ENFORCED
+    # on plain INSERT (a check join on every ingest is the wrong
+    # default at corpus scale — documented divergence from DuckDB's
+    # constraint errors); the declaration powers the upsert surface:
+    # key-less ON CONFLICT, INSERT OR REPLACE and INSERT OR IGNORE all
+    # lower onto MERGE using these columns.
+    keys: list[list[str]] = field(default_factory=list)
+    # column DEFAULT expressions (col → expr string) and table CHECK
+    # constraints (expr strings) — round 9
+    defaults: dict[str, str] = field(default_factory=dict)
+    checks: list[str] = field(default_factory=list)
+    # FOREIGN KEY constraints of this CHILD table (round 10):
+    # [{"cols": [...], "ref": parent, "ref_cols": [...]}, ...] —
+    # ENFORCED on child writes (anti-join count of written rows
+    # against the parent's keys) and parent deletes/updates
+    # (children's refs against the parent's new content)
+    fkeys: list[dict] = field(default_factory=list)
+    # GENERATED (VIRTUAL) columns (round 11): ordered [(col,
+    # expr_text)] in declaration order. The values are stored
+    # physically and recomputed on every write path (evaluate-on-write
+    # like DEFAULTs) — read-side parity with DuckDB's virtual
+    # evaluation at any scale, no per-read cost.
+    generated: list[tuple[str, str]] = field(default_factory=list)
+    # enum column bindings: {column → {"type": declared type name or
+    # None for inline ENUM(...), "values": ordered members}} — powers
+    # write validation, EXPORT DDL rendering, and DROP TYPE dependency
+    # tracking. Per table because DuckDB also bakes the member list
+    # into the column at CREATE TABLE time.
+    enums: dict[str, dict] = field(default_factory=dict)
+    # COMMENT ON (round 11): {"table": str|None, "cols": {col: str}},
+    # empty when nothing is commented — DuckDB surfaces these through
+    # duckdb_tables()/duckdb_columns() (its EXPORT DATABASE drops
+    # them, verified live, so no schema.sql emission here either)
+    comments: dict = field(default_factory=dict)
+    # view definition text (EXPORT DATABASE's schema.sql, round 10)
+    view_sql: str | None = None
+    # view → {source table: id(registered plan)} at (re)build time —
+    # the staleness snapshot behind DuckDB's late-binding view
+    # semantics (round 15): a mutation re-registers the source's
+    # DataFrame, the id diverges, the next read rebuilds the view
+    view_deps: dict[str, int] = field(default_factory=dict)
+
+    # field → (table property, encode, decode); the keys keep their
+    # own escaping, every other kind is JSON
+    PROPS: ClassVar[dict[str, tuple[str, Any, Any]]] = {
+        "keys": ("mallard.keys", _encode_keys_prop, _decode_keys_prop),
+        "defaults": ("mallard.defaults", json.dumps, json.loads),
+        "checks": ("mallard.checks", json.dumps, json.loads),
+        "fkeys": ("mallard.fkeys", json.dumps, json.loads),
+        "generated": (
+            "mallard.generated", json.dumps,
+            lambda v: [(c, e) for c, e in json.loads(v)],
+        ),
+        "enums": ("mallard.enums", json.dumps, json.loads),
+        "comments": ("mallard.comments", json.dumps, json.loads),
+    }
+
+    @classmethod
+    def from_props(cls, props: dict[str, str]) -> _Decl:
+        return cls(**{
+            f: dec(props[p])
+            for f, (p, _enc, dec) in cls.PROPS.items()
+            if props.get(p)
+        })
+
+    def props(self) -> list[tuple[str, str]]:
+        """The declared kinds as (table property, value) pairs."""
+        return [
+            (p, enc(getattr(self, f)))
+            for f, (p, enc, _dec) in self.PROPS.items()
+            if getattr(self, f)
+        ]
+
+    def copy(self) -> _Decl:
+        """The transaction snapshot: shares nothing with ``self``."""
+        return deepcopy(self)
+
+    @property
+    def is_view(self) -> bool:
+        return self.view_sql is not None
+
+    @property
+    def shapes_writes(self) -> bool:
+        """Do the declarations fill, compute or gate written rows?"""
+        return bool(
+            self.defaults or self.checks or self.fkeys or self.generated
+            or self.enums
+        )
+
+    def rename_column(self, col: str, new: str) -> None:
+        """Declarations on ``col`` follow its rename like DuckDB's
+        (DEFAULTs and comments verified live). Callers refuse first
+        when a CHECK, FOREIGN KEY or GENERATED expression names it."""
+        self.keys = [
+            [new if c.lower() == col.lower() else c for c in g]
+            for g in self.keys
+        ]
+        for m in (self.defaults, self.enums, self.comments.get("cols", {})):
+            if col in m:
+                m[new] = m.pop(col)
+        self.generated = [
+            (new if g == col else g, e) for g, e in self.generated
+        ]
+
+    def drop_column(self, col: str) -> None:
+        """Forget ``col``: its DEFAULT, enum binding, GENERATED rule,
+        comment, and the CHECKs naming it (single-column CHECKs drop
+        with the column in DuckDB, verified live). Callers refuse
+        first when a key, FOREIGN KEY, GENERATED expression or
+        multi-column CHECK depends on it."""
+        pat = re.compile(rf"(?i)\b{re.escape(col)}\b")
+        self.checks = [c for c in self.checks if not pat.search(c)]
+        self.defaults.pop(col, None)
+        self.enums.pop(col, None)
+        self.generated = [(g, e) for g, e in self.generated if g != col]
+        self.set_comment(col, None)
+
+    def set_comment(self, col: str | None, text: str | None) -> None:
+        """COMMENT ON: ``col`` None sets the object's own comment;
+        ``text`` None clears."""
+        entry = {
+            "table": self.comments.get("table"),
+            "cols": dict(self.comments.get("cols", {})),
+        }
+        if col is None:
+            entry["table"] = text
+        elif text is None:
+            entry["cols"].pop(col, None)
+        else:
+            entry["cols"][col] = text
+        self.comments = (
+            entry if entry["cols"] or entry["table"] is not None else {}
+        )
+
+    def retarget(self, old: str, new: str) -> bool:
+        """The table ``old`` is renamed ``new``: a SELF-referencing
+        FOREIGN KEY follows, or enforcement would silently die looking
+        up the old name (round-10 review pass 2). True when one did."""
+        hit = False
+        for fk in self.fkeys:
+            if fk.get("ref") == old:
+                fk["ref"] = new
+                hit = True
+        return hit
 
 
 def _close_paren_end(s: str, i: int) -> int:
@@ -1046,38 +1207,11 @@ class MallardEngine:
         self.ddl_persist = ddl_persist
         self._tables: dict[str, DataFrame] = {}
         self._persistent: set[str] = set()
-        self._views: set[str] = set()
-        self._view_sql: dict[str, str] = {}  # view definition text
-        # view → {source table: id(registered plan)} at (re)build time
-        # — the staleness snapshot behind DuckDB's late-binding view
-        # semantics (round 15): a mutation re-registers the source's
-        # DataFrame, the id diverges, the next read rebuilds the view
-        self._view_deps: dict[str, dict[str, int]] = {}
+        # name → what is declared about it beyond its data (keys,
+        # defaults, checks, foreign keys, generated columns, enum
+        # bindings, comments, view definitions)
+        self._decls: dict[str, _Decl] = {}
         self._in_view_refresh = False
-        # name → declared PRIMARY KEY / UNIQUE columns (round 8). The
-        # engine does not ENFORCE uniqueness on plain INSERT (a check
-        # join on every ingest is the wrong default at corpus scale —
-        # documented divergence from DuckDB's constraint errors); the
-        # declaration powers the upsert surface: key-less ON CONFLICT,
-        # INSERT OR REPLACE, INSERT OR IGNORE all lower onto MERGE
-        # using these columns.
-        # declared unique constraints per table: a LIST of independent
-        # constraints (PRIMARY KEY (a) + UNIQUE (b) stays two entries,
-        # never one composite [a, b] — ADVICE r8)
-        self._keys: dict[str, list[list[str]]] = {}
-        # declared column DEFAULT expressions (col → expr string) and
-        # table CHECK constraints (expr strings) — round 9; persisted
-        # tables carry them as mallard.defaults / mallard.checks
-        # properties, mirrored back by _discover_persistent
-        self._defaults: dict[str, dict[str, str]] = {}
-        self._checks: dict[str, list[str]] = {}
-        # declared FOREIGN KEY constraints per CHILD table (round 10):
-        # [{"cols": [...], "ref": parent, "ref_cols": [...]}, ...] —
-        # ENFORCED on child writes (anti-join count of written rows
-        # against the parent's keys) and parent deletes/updates
-        # (children's refs against the parent's new content); persisted
-        # as the mallard.fkeys property
-        self._fkeys: dict[str, list[dict]] = {}
         # salts of past recursive-fixpoint runs (oldest first) — their
         # parquet barrier dirs are GC'd beyond recursiveKeepRuns
         self._rec_salts: list[str] = []
@@ -1099,20 +1233,12 @@ class MallardEngine:
         self.wire_duckdb_semantics = True
         # name → (params [(name, default|None)], body, is_table)
         self._macros: dict[str, tuple[list, str, bool]] = {}
-        # GENERATED (VIRTUAL) columns (round 11): table →
-        # ordered [(col, expr_text)] in declaration order. The values
-        # are stored physically and recomputed on every write path
-        # (evaluate-on-write like DEFAULTs) — read-side parity with
-        # DuckDB's virtual evaluation at any scale, no per-read cost.
-        self._generated: dict[str, list[tuple[str, str]]] = {}
         # CREATE TYPE catalog (round 11): enum/alias types. `_enums`
         # maps type name (as declared; looked up case-insensitively
         # like SQL identifiers) → ordered member list; `_type_aliases`
         # maps alias name → DuckDB type text. Session-level like
         # sequences (EXPORT/IMPORT DATABASE round-trips them); the
-        # per-TABLE enum column bindings persist separately as the
-        # mallard.enums property, because DuckDB also bakes the member
-        # list into the column at CREATE TABLE time.
+        # per-table enum column bindings are declarations (_Decl.enums).
         self._enums: dict[str, list[str]] = {}
         # PREPARE name AS <stmt> (round 12): statement text by name.
         # EXECUTE substitutes literal arguments into $n/? placeholders
@@ -1122,11 +1248,6 @@ class MallardEngine:
         # the faithful semantics.
         self._prepared: dict[str, str] = {}
         self._type_aliases: dict[str, str] = {}
-        # table → {column → {"type": declared type name or None for
-        # inline ENUM(...), "values": ordered members}} — powers write
-        # validation, EXPORT DDL rendering, and DROP TYPE dependency
-        # tracking
-        self._table_enums: dict[str, dict[str, dict]] = {}
         # CREATE SEQUENCE catalog (round 11): name → mutable state
         # {inc, min, max, cycle, next, last}. The DICT snapshots into
         # transactions (create/drop rolls back) while the per-entry
@@ -1134,11 +1255,6 @@ class MallardEngine:
         # exactly like DuckDB (verified live: in-tx nextval→1,
         # ROLLBACK, nextval→2)
         self._sequences: dict[str, dict[str, Any]] = {}
-        # COMMENT ON storage (round 11): table → {"table": str|None,
-        # "cols": {col: str}} — DuckDB surfaces these through
-        # duckdb_tables()/duckdb_columns() (its EXPORT DATABASE drops
-        # them, verified live, so no schema.sql emission here either)
-        self._comments: dict[str, dict] = {}
         self._csv_views: dict[tuple, str] = {}  # sniffed csv (path, stat)
         self._exchangers: dict[str, Exchanger] = {}
         # active explicit transaction (BEGIN ... COMMIT/ROLLBACK) —
@@ -1166,6 +1282,16 @@ class MallardEngine:
     # -- catalog ------------------------------------------------------
     def _qualified(self, name: str) -> str:
         return f"{self.namespace}__{name}"
+
+    def _decl(self, name: str) -> _Decl:
+        """``name``'s declaration record, created empty on first use."""
+        decl = self._decls.get(name)
+        if decl is None:
+            decl = self._decls[name] = _Decl()
+        return decl
+
+    def _view_names(self) -> list[str]:
+        return sorted(n for n, d in self._decls.items() if d.is_view)
 
     def _discover_persistent(self) -> None:
         """Re-attach tables persisted by a previous session.
@@ -1215,43 +1341,14 @@ class MallardEngine:
                     continue
                 self._tables[short] = self.spark.table(t.name)
                 self._persistent.add(short)
-                try:  # declared keys ride along as a table property
+                try:  # declarations ride along as table properties
                     props = {
                         r[0]: r[1]
                         for r in self.spark.sql(
                             f"SHOW TBLPROPERTIES {t.name}"
                         ).collect()
                     }
-                    if props.get("mallard.keys"):
-                        self._keys[short] = _decode_keys_prop(
-                            props["mallard.keys"]
-                        )
-                    if props.get("mallard.defaults"):
-                        self._defaults[short] = json.loads(
-                            props["mallard.defaults"]
-                        )
-                    if props.get("mallard.checks"):
-                        self._checks[short] = json.loads(
-                            props["mallard.checks"]
-                        )
-                    if props.get("mallard.fkeys"):
-                        self._fkeys[short] = json.loads(
-                            props["mallard.fkeys"]
-                        )
-                    if props.get("mallard.generated"):
-                        self._generated[short] = [
-                            (c, e) for c, e in json.loads(
-                                props["mallard.generated"]
-                            )
-                        ]
-                    if props.get("mallard.enums"):
-                        self._table_enums[short] = json.loads(
-                            props["mallard.enums"]
-                        )
-                    if props.get("mallard.comments"):
-                        self._comments[short] = json.loads(
-                            props["mallard.comments"]
-                        )
+                    self._decls[short] = _Decl.from_props(props)
                 except Exception as e:  # pragma: no cover
                     # unreadable/undecodable declaration properties:
                     # never fail discovery, but say so — silently
@@ -1259,7 +1356,7 @@ class MallardEngine:
                     # reject start succeeding (round-9 review)
                     logging.getLogger(__name__).warning(
                         "table %s: could not decode declaration "
-                        "properties (keys/defaults/checks ignored): %s",
+                        "properties (declarations ignored): %s",
                         short, e,
                     )
         if pending_salts is not None:  # recovery ran — safe to sweep
@@ -1374,10 +1471,10 @@ class MallardEngine:
         a flat list is ONE constraint; a list of lists declares
         several independent constraints (key-less upsert lowering
         then refuses as ambiguous, like DuckDB's binder). Recorded as
-        catalog metadata (and a ``mallard.keys`` table property on
-        persisted tables, so they survive the session) to power
-        key-less ``ON CONFLICT`` / ``INSERT OR REPLACE`` /
-        ``INSERT OR IGNORE`` lowering. Uniqueness is NOT enforced on
+        catalog metadata (and a table property on persisted tables,
+        so they survive the session) to power key-less
+        ``ON CONFLICT`` / ``INSERT OR REPLACE`` / ``INSERT OR IGNORE``
+        lowering. Uniqueness is NOT enforced on
         plain INSERT (documented divergence).
 
         A PUT (or CREATE [OR REPLACE] TABLE routing through here)
@@ -1423,7 +1520,7 @@ class MallardEngine:
                     )
                 cons.append([by_lower[k.lower()] for k in grp])
         if _keep_keys and cons is None:
-            cons = self._keys.get(name)
+            cons = self._decl(name).keys
         if persist and self._tx is not None:
             # in-transaction CREATE/PUT with persistence: register as
             # a session view now, defer the saveAsTable to COMMIT
@@ -1434,21 +1531,10 @@ class MallardEngine:
             if name not in self._persistent:
                 df.createOrReplaceTempView(self._qualified(name))
                 self._tables[name] = df
-                self._views.discard(name)
+                self._redeclare(name, cons, _keep_keys)
                 self._tx["pending_creates"].add(name)
                 self._tx["derived_plans"] = True
                 self._tx.setdefault("derived_tables", {})[name] = df
-                if cons:
-                    self._keys[name] = cons
-                else:
-                    self._keys.pop(name, None)
-                if not _keep_keys:
-                    self._defaults.pop(name, None)
-                    self._checks.pop(name, None)
-                    self._fkeys.pop(name, None)
-                    self._generated.pop(name, None)
-                    self._table_enums.pop(name, None)
-                    self._comments.pop(name, None)
                 return df.count() if count else None
             raise NotImplementedError(
                 f"put({name!r}, persist=True): overwriting an "
@@ -1492,77 +1578,47 @@ class MallardEngine:
                 self._persistent.discard(name)
             df.createOrReplaceTempView(self._qualified(name))
         self._tables[name] = df
-        self._views.discard(name)  # PUT over a view name makes it a table
         if self._tx is not None and not persist:
             # the registered plan may derive from a staged shadow —
             # the transaction's staged dirs must outlive it
             self._tx["derived_plans"] = True
             self._tx.setdefault("derived_tables", {})[name] = df
-        if cons:
-            self._keys[name] = cons
-        else:
-            self._keys.pop(name, None)  # replaced definition: no PK
-        if not _keep_keys:
-            # a replaced definition loses its DEFAULT/CHECK
-            # declarations (DML write-backs keep them) — popped only
-            # on SUCCESSFUL registration, after every refusal path,
-            # so a refused put never strips enforcement (round-9
-            # review pass 2)
-            self._defaults.pop(name, None)
-            self._checks.pop(name, None)
-            self._fkeys.pop(name, None)
-            self._generated.pop(name, None)
-            self._table_enums.pop(name, None)
-            self._comments.pop(name, None)
-            if self._tx is not None and not persist:
-                # an explicit session redefinition cancels a deferred
-                # in-tx CREATE-with-persistence (last definition wins)
-                self._tx["pending_creates"].discard(name)
+        # redeclared only on SUCCESSFUL registration, after every
+        # refusal path, so a refused put never strips enforcement
+        # (round-9 review pass 2)
+        self._redeclare(name, cons, _keep_keys)
+        if not _keep_keys and self._tx is not None and not persist:
+            # an explicit session redefinition cancels a deferred
+            # in-tx CREATE-with-persistence (last definition wins)
+            self._tx["pending_creates"].discard(name)
         if persist:
             # property pin AFTER declarations settle — never stale
             self._pin_keys_prop(name)
         return df.count() if count else None
 
+    def _redeclare(
+        self, name: str, keys: list[list[str]] | None, keep: bool
+    ) -> None:
+        """``name`` is (re)registered as a table: a replaced definition
+        starts from fresh declarations carrying only ``keys`` — DuckDB's
+        replaced table has no PK, DEFAULT or CHECK either — while a DML
+        write-back (``keep``) keeps its own."""
+        decl = self._decl(name) if keep else _Decl()
+        decl.keys = keys or []
+        decl.view_sql, decl.view_deps = None, {}
+        self._decls[name] = decl
+
     def _pin_keys_prop(
         self, name: str, qualified: str | None = None, force: bool = False
     ) -> None:
-        """Re-pin the declared metadata (keys, column DEFAULTs, CHECK
-        constraints, FOREIGN KEYs) as table properties on a persisted
-        table (overwrites drop table properties). Escaped so names a
-        raw comma-join would corrupt survive the round-trip.
+        """Re-pin the name's declarations as table properties on a
+        persisted table (overwrites drop table properties). Escaped so
+        names a raw comma-join would corrupt survive the round-trip.
         ``qualified`` targets another catalog table carrying ``name``'s
         declarations (the commit staging tables — properties travel
         with the swap rename); ``force`` skips the in-transaction
         deferral (commit publish runs with the tx already detached)."""
-        props: list[tuple[str, str]] = []
-        if self._keys.get(name):
-            props.append(
-                ("mallard.keys", _encode_keys_prop(self._keys[name]))
-            )
-        if self._defaults.get(name):
-            props.append(
-                ("mallard.defaults", json.dumps(self._defaults[name]))
-            )
-        if self._checks.get(name):
-            props.append(
-                ("mallard.checks", json.dumps(self._checks[name]))
-            )
-        if self._fkeys.get(name):
-            props.append(
-                ("mallard.fkeys", json.dumps(self._fkeys[name]))
-            )
-        if self._generated.get(name):
-            props.append(
-                ("mallard.generated", json.dumps(self._generated[name]))
-            )
-        if self._table_enums.get(name):
-            props.append(
-                ("mallard.enums", json.dumps(self._table_enums[name]))
-            )
-        if self._comments.get(name):
-            props.append(
-                ("mallard.comments", json.dumps(self._comments[name]))
-            )
+        props = self._decl(name).props()
         if not props:
             return
         if self._tx is not None and not force:
@@ -1594,7 +1650,7 @@ class MallardEngine:
         rejects a key-less DO UPDATE the same way when the conflict
         target is ambiguous (ADVICE r8: never conflate independent
         constraints into one composite key)."""
-        cons = self._keys.get(name)
+        cons = self._decl(name).keys
         if not cons:
             return None
         if len(cons) > 1:
@@ -1636,31 +1692,13 @@ class MallardEngine:
             )
         self._tx = {
             "tables": dict(self._tables),
-            "views": set(self._views),
-            "view_sql": dict(self._view_sql),
-            "keys": {k: [list(g) for g in v] for k, v in self._keys.items()},
-            "defaults": {k: dict(v) for k, v in self._defaults.items()},
-            "checks": {k: list(v) for k, v in self._checks.items()},
-            "fkeys": {
-                k: [dict(f) for f in v] for k, v in self._fkeys.items()
-            },
+            "decls": {n: d.copy() for n, d in self._decls.items()},
             "persistent": set(self._persistent),
             "macros": dict(self._macros),
             # shallow: entry OBJECTS shared so counters survive rollback
             "sequences": dict(self._sequences),
             "enums": {k: list(v) for k, v in self._enums.items()},
-            "comments": {
-                k: {"table": v.get("table"), "cols": dict(v.get("cols", {}))}
-                for k, v in self._comments.items()
-            },
             "type_aliases": dict(self._type_aliases),
-            "table_enums": {
-                t: {c: dict(m) for c, m in cols.items()}
-                for t, cols in self._table_enums.items()
-            },
-            "generated": {
-                k: list(v) for k, v in self._generated.items()
-            },
             "staged": {},  # name -> staged tmp dir (persistent DML)
             "pending_creates": set(),  # saveAsTable deferred to COMMIT
             "pending_drops": set(),  # warehouse DROP deferred to COMMIT
@@ -2159,20 +2197,12 @@ class MallardEngine:
                 # NEW files, so the old plan's inputs still exist)
                 df.createOrReplaceTempView(self._qualified(name))
         self._tables = snap_tables
-        self._views = tx["views"]
-        self._view_sql = tx.get("view_sql", self._view_sql)
-        self._keys = tx["keys"]
-        self._defaults = tx["defaults"]
-        self._checks = tx["checks"]
-        self._fkeys = tx.get("fkeys", self._fkeys)
+        self._decls = tx["decls"]
         self._persistent = tx["persistent"]
         self._macros = tx["macros"]
-        self._sequences = tx.get("sequences", self._sequences)
-        self._enums = tx.get("enums", self._enums)
-        self._comments = tx.get("comments", self._comments)
-        self._type_aliases = tx.get("type_aliases", self._type_aliases)
-        self._table_enums = tx.get("table_enums", self._table_enums)
-        self._generated = tx.get("generated", self._generated)
+        self._sequences = tx["sequences"]
+        self._enums = tx["enums"]
+        self._type_aliases = tx["type_aliases"]
         # staged dirs stay on disk for txKeepRuns more transactions
         # (a DataFrame handed to user code inside the transaction may
         # still scan them), then reclaim (_tx_retire_dirs)
@@ -2194,14 +2224,14 @@ class MallardEngine:
         and the identity of each one's current plan. Over-capture
         (the name inside a string literal) only costs a spare
         rebuild."""
-        body = self._view_sql.get(view, "")
-        deps: dict[str, int] = {}
-        for t in self._tables:
+        decl = self._decl(view)
+        decl.view_deps = {
+            t: id(df)
+            for t, df in self._tables.items()
             if t != view and re.search(
-                rf"(?i)(?<![\w.]){re.escape(t)}(?![\w.])", body
-            ):
-                deps[t] = id(self._tables[t])
-        self._view_deps[view] = deps
+                rf"(?i)(?<![\w.]){re.escape(t)}(?![\w.])", decl.view_sql
+            )
+        }
 
     def _refresh_stale_views(self) -> None:
         """DuckDB views are LATE-BINDING: they see mutations made to
@@ -2211,24 +2241,26 @@ class MallardEngine:
         pre-mutation plan — rebuild every view whose dependency
         snapshot diverged, to a fixpoint (a view over a refreshed
         view goes stale in turn). Plan-build only, no Spark jobs."""
-        if self._in_view_refresh or not self._views:
+        if self._in_view_refresh:
+            return
+        views = self._view_names()
+        if not views:
             return
         self._in_view_refresh = True
         try:
-            for _ in range(len(self._views) + 1):
+            for _ in range(len(views) + 1):
                 stale = [
                     v
-                    for v in sorted(self._views)
-                    if v in self._view_sql
-                    and any(
+                    for v in views
+                    if any(
                         id(self._tables.get(t)) != i
-                        for t, i in self._view_deps.get(v, {}).items()
+                        for t, i in self._decls[v].view_deps.items()
                     )
                 ]
                 if not stale:
                     return
                 for v in stale:
-                    self._tables[v] = self.sql(self._view_sql[v])
+                    self._tables[v] = self.sql(self._decls[v].view_sql)
                     self._tables[v].createOrReplaceTempView(
                         self._qualified(v)
                     )
@@ -2250,10 +2282,10 @@ class MallardEngine:
         the drop/replace/rename refusals (round-10 review pass 2)."""
         return sorted(
             c
-            for c, fks in self._fkeys.items()
+            for c, d in self._decls.items()
             if c != name
             and c in self._tables
-            and any(fk.get("ref") == name for fk in fks)
+            and any(fk.get("ref") == name for fk in d.fkeys)
         )
 
     def drop(self, name: str) -> None:
@@ -2288,16 +2320,7 @@ class MallardEngine:
                 self._tx["pending_creates"].discard(name)
             self.spark.catalog.dropTempView(self._qualified(name))
         self._tables.pop(name, None)
-        self._views.discard(name)
-        self._view_sql.pop(name, None)
-        self._view_deps.pop(name, None)
-        self._keys.pop(name, None)
-        self._defaults.pop(name, None)
-        self._checks.pop(name, None)
-        self._fkeys.pop(name, None)
-        self._generated.pop(name, None)
-        self._table_enums.pop(name, None)
-        self._comments.pop(name, None)
+        self._decls.pop(name, None)
 
     def health_check(self) -> bool:
         """Liveness probe: run ``SELECT 1`` through the session.
@@ -3141,13 +3164,13 @@ class MallardEngine:
             r"(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
             sql, re.IGNORECASE,
         )
-        if dm and self._table_enums.get(dm.group("name")):
+        if dm and self._decl(dm.group("name")).enums:
             # enum columns physically store VARCHAR; DESCRIBE/PRAGMA
             # table_info should render the DECLARED enum type the way
             # DuckDB does (ENUM('a', 'b') — verified live). Bounded:
             # one row per column.
             name = dm.group("name")
-            enums = self._table_enums[name]
+            enums = self._decl(name).enums
             rows = [
                 (
                     f.name,
@@ -3260,7 +3283,10 @@ class MallardEngine:
             # parsing (round 11; a macro may expand into them, so this
             # runs after macro inlining)
             sql = self._rewrite_seq_in_query(sql)
-        if self._enums or self._type_aliases or self._table_enums:
+        if (
+            self._enums or self._type_aliases
+            or any(d.enums for d in self._decls.values())
+        ):
             # enum positional semantics / ::type casts / enum_*
             # functions (round 11) — text-level, literal-safe
             sql = self._rewrite_enums_in_query(sql)
@@ -4485,7 +4511,7 @@ class MallardEngine:
         KEY`` declarations are ENFORCED on child inserts and parent
         deletes/updates (one bounded anti-join job each — see
         ``_enforce_fk_child`` / ``_enforce_fk_parent``), persisted as
-        ``mallard.fkeys``. Round 11: GENERATED (VIRTUAL) columns
+        a table property. Round 11: GENERATED (VIRTUAL) columns
         are REAL (both DuckDB spellings, chained generation, values
         recomputed on every write path; STORED refuses with DuckDB's
         message). ``COLLATE`` and unmappable
@@ -4708,7 +4734,7 @@ class MallardEngine:
                     f"not exist (REFERENCES binds at create time, "
                     f"like DuckDB)"
                 )
-            pkeys = resolved if ref == name else self._keys.get(ref, [])
+            pkeys = resolved if ref == name else self._decl(ref).keys
             rcols = fk["ref_cols"]
             if rcols is None:
                 if len(pkeys) != 1:
@@ -4816,24 +4842,11 @@ class MallardEngine:
         self.put(
             name, empty, persist=self.ddl_persist, keys=resolved or None
         )
-        if defaults:
-            self._defaults[name] = defaults
-        if checks:
-            self._checks[name] = checks
-        if resolved_fkeys:
-            self._fkeys[name] = resolved_fkeys
-        if generated:
-            self._generated[name] = [(c, e) for c, _t, e in generated]
-        else:
-            self._generated.pop(name, None)
-        if table_enums:
-            self._table_enums[name] = table_enums
-        else:
-            self._table_enums.pop(name, None)
-        if (
-            defaults or checks or resolved_fkeys or generated
-            or table_enums
-        ) and name in self._persistent:
+        decl = self._decl(name)
+        decl.defaults, decl.checks = defaults, checks
+        decl.fkeys, decl.enums = resolved_fkeys, table_enums
+        decl.generated = [(c, e) for c, _t, e in generated]
+        if decl.shapes_writes and name in self._persistent:
             self._pin_keys_prop(name)
         return "OK"
 
@@ -4851,9 +4864,9 @@ class MallardEngine:
             return '"' + ident.replace('"', '""') + '"'
 
         items: list[str] = []
-        defaults = self._defaults.get(name, {})
-        gen = dict(self._generated.get(name, []))
-        enums = self._table_enums.get(name, {})
+        decl = self._decl(name)
+        defaults, enums = decl.defaults, decl.enums
+        gen = dict(decl.generated)
         for f in self._tables[name].schema.fields:
             if f.name in enums:
                 # DuckDB's own export spelling for enum columns
@@ -4873,11 +4886,11 @@ class MallardEngine:
             elif f.name in defaults:
                 item += f" DEFAULT ({defaults[f.name]})"
             items.append(item)
-        for grp in self._keys.get(name, []):
+        for grp in decl.keys:
             items.append("UNIQUE (" + ", ".join(q(c) for c in grp) + ")")
-        for chk in self._checks.get(name, []):
+        for chk in decl.checks:
             items.append(f"CHECK ({chk})")
-        for fk in self._fkeys.get(name, []):
+        for fk in decl.fkeys:
             items.append(
                 "FOREIGN KEY ("
                 + ", ".join(q(c) for c in fk["cols"])
@@ -4909,7 +4922,9 @@ class MallardEngine:
                 f"(parquet / csv — DuckDB's export formats)"
             )
         os.makedirs(d, exist_ok=True)
-        tables = [n for n in sorted(self._tables) if n not in self._views]
+        tables = [
+            n for n in sorted(self._tables) if not self._decl(n).is_view
+        ]
         order: list[str] = []
         remaining = set(tables)
         while remaining:  # parents first (FK-topological)
@@ -4918,7 +4933,7 @@ class MallardEngine:
                 for n in sorted(remaining)
                 if not any(
                     fk["ref"] in remaining and fk["ref"] != n
-                    for fk in self._fkeys.get(n, [])
+                    for fk in self._decl(n).fkeys
                 )
             ]
             if not layer:  # FK cycle: fall back to name order
@@ -4984,7 +4999,7 @@ class MallardEngine:
                     ) else [])
                     + extra
                 )
-            gen = {c for c, _ in self._generated.get(n, [])}
+            gen = {c for c, _ in self._decl(n).generated}
             if gen:
                 # data files carry only the INSERTABLE columns —
                 # DuckDB's export does the same, and the load-side
@@ -4999,15 +5014,10 @@ class MallardEngine:
                 src = n
             self.copy_to(f"COPY {src} TO '{lit}' ({opts})")
             load_lines.append(f"COPY {n} FROM '{lit}' ({opts});")
-        for v in sorted(self._views):
-            vsql = self._view_sql.get(v)
-            if vsql is None:  # pragma: no cover - pre-round-10 view
-                logging.getLogger(__name__).warning(
-                    "EXPORT DATABASE: view %s has no recorded "
-                    "definition text; skipped", v,
-                )
-                continue
-            schema_lines.append(f"CREATE VIEW {v} AS {vsql};")
+        for v in self._view_names():
+            schema_lines.append(
+                f"CREATE VIEW {v} AS {self._decls[v].view_sql};"
+            )
         with open(os.path.join(d, "schema.sql"), "w") as f:
             f.write("\n".join(schema_lines) + "\n")
         with open(os.path.join(d, "load.sql"), "w") as f:
@@ -5549,9 +5559,9 @@ class MallardEngine:
         )
         deps = sorted(
             tname
-            for tname, defs in self._defaults.items()
+            for tname, decl in self._decls.items()
             if tname in self._tables
-            and any(d and pat.search(d) for d in defs.values())
+            and any(d and pat.search(d) for d in decl.defaults.values())
         )
         if deps:
             if (m.group("cascade") or "").upper() == "CASCADE":
@@ -5560,7 +5570,7 @@ class MallardEngine:
             else:
                 col = next(
                     c
-                    for c, d in self._defaults[deps[0]].items()
+                    for c, d in self._decls[deps[0]].defaults.items()
                     if d and pat.search(d)
                 )
                 raise ValueError(
@@ -5737,7 +5747,10 @@ class MallardEngine:
         same-named column, or raise the ambiguity refusal spuriously).
         """
         cols: dict[str, object] = {}
-        for t, colmap in self._table_enums.items():
+        for t, decl in self._decls.items():
+            colmap = decl.enums
+            if not colmap:
+                continue
             hits = [
                 m
                 for m in re.finditer(
@@ -5778,10 +5791,8 @@ class MallardEngine:
             if len(parts) == 2:
                 qual = parts[0]
                 # a KNOWN table qualifier must actually carry the col
-                qmap = self._table_enums.get(qual)
-                if qual in self._tables and (
-                    qmap is None
-                    or not any(c.lower() == base for c in qmap)
+                if qual in self._tables and not any(
+                    c.lower() == base for c in self._decl(qual).enums
                 ):
                     return None
             if got == "ambiguous":
@@ -6091,11 +6102,11 @@ class MallardEngine:
         low = name.lower()
         return sorted(
             t
-            for t, cols in self._table_enums.items()
+            for t, decl in self._decls.items()
             if t in self._tables
             and any(
                 (meta.get("type") or "").lower() == low
-                for meta in cols.values()
+                for meta in decl.enums.values()
             )
         )
 
@@ -6366,13 +6377,13 @@ class MallardEngine:
                 f"COMMENT ON {kind}: Table with name {name} does not "
                 f"exist!"
             )
-        is_view = name in self._views
-        if kind == "TABLE" and is_view:
+        decl = self._decl(name)
+        if kind == "TABLE" and decl.is_view:
             raise ValueError(
                 f"COMMENT ON TABLE: {name} is a view (use COMMENT ON "
                 f"VIEW)"
             )
-        if kind == "VIEW" and not is_view:
+        if kind == "VIEW" and not decl.is_view:
             raise ValueError(
                 f"COMMENT ON VIEW: {name} is a table (use COMMENT ON "
                 f"TABLE)"
@@ -6380,9 +6391,6 @@ class MallardEngine:
         text = (
             None if m.group("null")
             else m.group("lit").replace("''", "'")
-        )
-        entry = self._comments.setdefault(
-            name, {"table": None, "cols": {}}
         )
         if kind == "COLUMN":
             col = m.group("col")
@@ -6399,18 +6407,13 @@ class MallardEngine:
                     f'COMMENT ON COLUMN: column "{col}" does not '
                     f"exist on {name!r}"
                 )
-            if text is None:
-                entry["cols"].pop(r, None)
-            else:
-                entry["cols"][r] = text
+            decl.set_comment(r, text)
         else:
             if m.group("col"):
                 raise ValueError(
                     f"COMMENT ON {kind} takes a bare object name"
                 )
-            entry["table"] = text
-        if not entry["cols"] and entry["table"] is None:
-            self._comments.pop(name, None)
+            decl.set_comment(None, text)
         if name in self._persistent:
             self._pin_keys_prop(name)
         return "OK"
@@ -6430,16 +6433,16 @@ class MallardEngine:
         if which == "tables":
             rows = []
             for i, n in enumerate(tables):
-                if n in self._views:
+                decl = self._decl(n)
+                if decl.is_view:
                     continue
-                c = self._comments.get(n, {})
                 rows.append((
                     self.namespace, 0, "main", 0, n, i,
-                    c.get("table"), None, False,
+                    decl.comments.get("table"), None, False,
                     n not in self._persistent,
-                    bool(self._keys.get(n)), self._estimated_rows(n),
+                    bool(decl.keys), self._estimated_rows(n),
                     len(self._tables[n].columns),
-                    0, len(self._checks.get(n, [])),
+                    0, len(decl.checks),
                     self._render_create_table(n) + ";",
                 ))
             return self.spark.createDataFrame(
@@ -6456,9 +6459,9 @@ class MallardEngine:
         for i, n in enumerate(tables):
             # views INCLUDED: DuckDB 1.0's duckdb_columns() lists view
             # columns (ADVICE r11, verified live)
-            c = self._comments.get(n, {"cols": {}})
-            defaults = self._defaults.get(n, {})
-            enums = self._table_enums.get(n, {})
+            decl = self._decl(n)
+            col_comments = decl.comments.get("cols", {})
+            defaults, enums = decl.defaults, decl.enums
             for j, f in enumerate(self._tables[n].schema.fields):
                 if f.name in enums:
                     dt = "ENUM(" + ", ".join(
@@ -6487,7 +6490,7 @@ class MallardEngine:
                     prec = 24
                 rows.append((
                     self.namespace, 0, "main", 0, n, i, f.name,
-                    j + 1, c.get("cols", {}).get(f.name), False,
+                    j + 1, col_comments.get(f.name), False,
                     defaults.get(f.name), bool(f.nullable), dt, 0,
                     None, prec, 2 if prec is not None else None,
                     scale,
@@ -6518,13 +6521,14 @@ class MallardEngine:
         M = MapType(StringType(), StringType())
         if which == "views":
             rows = []
-            for i, n in enumerate(sorted(self._views)):
-                body = self._view_sql.get(n, "")
+            for i, n in enumerate(self._view_names()):
+                decl = self._decls[n]
                 rows.append((
                     self.namespace, 0, "main", 0, n, i,
-                    self._comments.get(n, {}).get("table"), {}, False,
+                    decl.comments.get("table"), {}, False,
                     False, len(self._tables[n].columns),
-                    f"CREATE VIEW {n} AS {body};" if body else None,
+                    f"CREATE VIEW {n} AS {decl.view_sql};"
+                    if decl.view_sql else None,
                 ))
             schema = StructType([
                 StructField("database_name", S), StructField("database_oid", L),
@@ -6565,7 +6569,8 @@ class MallardEngine:
         if which == "constraints":
             rows = []
             for n in sorted(self._tables):
-                if n in self._views:
+                decl = self._decl(n)
+                if decl.is_view:
                     continue
                 cols = list(self._tables[n].columns)
                 idx = 0
@@ -6573,7 +6578,7 @@ class MallardEngine:
                 def colpos(cs):
                     return [cols.index(c) for c in cs if c in cols]
 
-                for key in self._keys.get(n, []):
+                for key in decl.keys:
                     rows.append((
                         self.namespace, 0, "main", 0, n, 0, idx,
                         "PRIMARY KEY",
@@ -6581,7 +6586,7 @@ class MallardEngine:
                         colpos(key), list(key),
                     ))
                     idx += 1
-                for chk in self._checks.get(n, []):
+                for chk in decl.checks:
                     expr = chk if isinstance(chk, str) else str(chk)
                     rows.append((
                         self.namespace, 0, "main", 0, n, 0, idx,
@@ -6589,7 +6594,7 @@ class MallardEngine:
                         [], [],
                     ))
                     idx += 1
-                for fk in self._fkeys.get(n, []):
+                for fk in decl.fkeys:
                     rows.append((
                         self.namespace, 0, "main", 0, n, 0, idx,
                         "FOREIGN KEY",
@@ -6630,11 +6635,12 @@ class MallardEngine:
         # information_schema.tables
         rows = []
         for n in sorted(self._tables):
+            decl = self._decl(n)
             rows.append((
                 self.namespace, "main", n,
-                "VIEW" if n in self._views else "BASE TABLE",
+                "VIEW" if decl.is_view else "BASE TABLE",
                 None, None, None, None, None, "YES", "NO", None,
-                self._comments.get(n, {}).get("table"),
+                decl.comments.get("table"),
             ))
         return self.spark.createDataFrame(
             rows,
@@ -6697,10 +6703,12 @@ class MallardEngine:
           registers for future inserts;
         - ``DROP COLUMN [IF EXISTS] col`` — refuses when a declared
           key depends on the column (DuckDB's message); single-column
-          CHECKs mentioning it drop with it (observed); FK-involved /
+          CHECKs mentioning it drop with it (observed), as do its
+          comment, DEFAULT and enum binding; FK-involved /
           generated-input columns refuse by name;
-        - ``RENAME COLUMN a TO b`` — DEFAULTs follow the rename
-          (observed); declared keys and enum bindings follow too;
+        - ``RENAME COLUMN a TO b`` — DEFAULTs and comments follow the
+          rename (observed); declared keys, enum bindings and a
+          generated column's rule follow too;
           columns referenced by CHECK/FK/GENERATED expressions refuse
           by name (a silent text rewrite could corrupt semantics);
         - ``ALTER [COLUMN] col [SET DATA] TYPE t [USING expr]`` —
@@ -6779,20 +6787,19 @@ class MallardEngine:
             # DuckDB backfills EXISTING rows with the evaluated
             # default (verified live), not NULL
             new = tbl.withColumn(col, fill.cast(stype))
+            decl = self._decl(name)
             if enum_meta is not None:
                 # register BEFORE the write so the enum membership of
                 # the backfill value enforces (rolled back on failure)
-                self._table_enums.setdefault(name, {})[col] = enum_meta
+                decl.enums[col] = enum_meta
             try:
                 self._write_back(name, new)
             except Exception:
                 if enum_meta is not None:
-                    self._table_enums.get(name, {}).pop(col, None)
-                    if not self._table_enums.get(name):
-                        self._table_enums.pop(name, None)
+                    decl.enums.pop(col, None)
                 raise
             if default is not None:
-                self._defaults.setdefault(name, {})[col] = default.strip()
+                decl.defaults[col] = default.strip()
             if name in self._persistent:
                 self._pin_keys_prop(name)
             return "OK"
@@ -6813,9 +6820,9 @@ class MallardEngine:
                     f'ALTER TABLE {name}: column "{dp.group("col")}" '
                     f"does not exist"
                 )
+            decl = self._decl(name)
             if any(
-                col.lower() in {c.lower() for c in grp}
-                for grp in self._keys.get(name, [])
+                col.lower() in {c.lower() for c in grp} for grp in decl.keys
             ):
                 # DuckDB's dependency error, same shape
                 raise ValueError(
@@ -6824,17 +6831,14 @@ class MallardEngine:
                 )
             if any(
                 col.lower() in {c.lower() for c in fk["cols"]}
-                for fk in self._fkeys.get(name, [])
+                for fk in decl.fkeys
             ):
                 raise ValueError(
                     f'Cannot drop column "{col}" because there is a '
                     f"FOREIGN KEY constraint that depends on it"
                 )
             pat = re.compile(rf"(?i)\b{re.escape(col)}\b")
-            gen_using = [
-                g for g, e in self._generated.get(name, [])
-                if pat.search(e)
-            ]
+            gen_using = [g for g, e in decl.generated if pat.search(e)]
             if gen_using:
                 raise NotImplementedError(
                     f"ALTER TABLE {name} DROP COLUMN {col}: generated "
@@ -6845,22 +6849,13 @@ class MallardEngine:
                 raise ValueError(
                     f"ALTER TABLE {name}: cannot drop the only column"
                 )
-            # single-column CHECKs referencing the column drop with it
-            # (DuckDB behavior, verified live); a CHECK that also
-            # references OTHER columns refuses instead of silently
-            # breaking. Metadata must come off BEFORE the write-back
-            # (which re-enforces checks over the columnless content) —
-            # restored on write failure.
-            remaining = []
-            for chk in self._checks.get(name, []):
-                if not pat.search(chk):
-                    remaining.append(chk)
-                    continue
+            # a CHECK that also references OTHER columns refuses
+            # instead of silently breaking (single-column ones drop
+            # with the column)
+            for chk in filter(pat.search, decl.checks):
                 others = [
                     c for c in tbl.columns
-                    if c != col and re.search(
-                        rf"(?i)\b{re.escape(c)}\b", chk
-                    )
+                    if c != col and re.search(rf"(?i)\b{re.escape(c)}\b", chk)
                 ]
                 if others:
                     raise ValueError(
@@ -6868,46 +6863,15 @@ class MallardEngine:
                         f"({chk}) also references {others} — drop the "
                         f"constraint first"
                     )
-            saved = (
-                self._checks.get(name), self._defaults.get(name),
-                self._table_enums.get(name), self._generated.get(name),
-            )
-            if name in self._checks:
-                if remaining:
-                    self._checks[name] = remaining
-                else:
-                    self._checks.pop(name)
-            d = dict(self._defaults.get(name, {}))
-            d.pop(col, None)
-            if name in self._defaults:
-                if d:
-                    self._defaults[name] = d
-                else:
-                    self._defaults.pop(name)
-            e = dict(self._table_enums.get(name, {}))
-            e.pop(col, None)
-            if name in self._table_enums:
-                if e:
-                    self._table_enums[name] = e
-                else:
-                    self._table_enums.pop(name)
-            gens = self._generated.get(name)
-            if gens:  # dropping a generated column drops its rule
-                kept = [(g, ex) for g, ex in gens if g != col]
-                if kept:
-                    self._generated[name] = kept
-                else:
-                    self._generated.pop(name)
+            # metadata comes off BEFORE the write-back (which
+            # re-enforces checks over the columnless content) and is
+            # restored on write failure
+            saved = decl.copy()
+            decl.drop_column(col)
             try:
                 self._write_back(name, tbl.drop(col))
             except Exception:
-                for attr, val in zip(
-                    ("_checks", "_defaults", "_table_enums",
-                     "_generated"),
-                    saved,
-                ):
-                    if val is not None:
-                        getattr(self, attr)[name] = val
+                self._decls[name] = saved
                 raise
             if name in self._persistent:
                 self._pin_keys_prop(name)
@@ -6933,15 +6897,15 @@ class MallardEngine:
                     f'ALTER TABLE {name}: column with name '
                     f'"{new_col}" already exists!'
                 )
+            decl = self._decl(name)
             pat = re.compile(rf"(?i)\b{re.escape(col)}\b")
             blocked = (
-                [f"CHECK ({c})" for c in self._checks.get(name, [])
-                 if pat.search(c)]
-                + [f"GENERATED {g}" for g, e in
-                   self._generated.get(name, []) if pat.search(e)]
+                [f"CHECK ({c})" for c in decl.checks if pat.search(c)]
+                + [f"GENERATED {g}" for g, e in decl.generated
+                   if pat.search(e)]
                 + [
                     "FOREIGN KEY"
-                    for fk in self._fkeys.get(name, [])
+                    for fk in decl.fkeys
                     if col.lower() in {c.lower() for c in fk["cols"]}
                 ]
             )
@@ -6952,20 +6916,7 @@ class MallardEngine:
                     f"dependent declaration around the rename"
                 )
             self._write_back(name, tbl.withColumnRenamed(col, new_col))
-            d = self._defaults.get(name, {}).pop(col, None)
-            if d is not None:  # DEFAULTs follow the rename (verified)
-                self._defaults[name][new_col] = d
-            em = self._table_enums.get(name, {}).pop(col, None)
-            if em is not None:
-                self._table_enums[name][new_col] = em
-            if self._keys.get(name):  # declared keys follow the rename
-                self._keys[name] = [
-                    [
-                        new_col if c.lower() == col.lower() else c
-                        for c in g
-                    ]
-                    for g in self._keys[name]
-                ]
+            decl.rename_column(col, new_col)
             if name in self._persistent:
                 self._pin_keys_prop(name)
             return "OK"
@@ -6987,7 +6938,7 @@ class MallardEngine:
                     f"does not exist"
                 )
             if ac.group("dd"):
-                self._defaults.get(name, {}).pop(col, None)
+                self._decl(name).defaults.pop(col, None)
                 if name in self._persistent:
                     self._pin_keys_prop(name)
                 return "OK"
@@ -7000,16 +6951,16 @@ class MallardEngine:
                         f"ALTER TABLE {name}: DEFAULT expression "
                         f"{d!r} does not bind: {e}"
                     ) from None
-                self._defaults.setdefault(name, {})[col] = d
+                self._decl(name).defaults[col] = d
                 if name in self._persistent:
                     self._pin_keys_prop(name)
                 return "OK"
-            if any(g == col for g, _ in self._generated.get(name, [])):
+            if any(g == col for g, _ in self._decl(name).generated):
                 raise ValueError(
                     f"ALTER TABLE {name}: Cant alter column {col!r} "
                     f"because it is a generated column!"
                 )
-            if col in self._table_enums.get(name, {}):
+            if col in self._decl(name).enums:
                 raise NotImplementedError(
                     f"ALTER TABLE {name} ALTER COLUMN {col} TYPE: the "
                     f"column is an ENUM — drop and re-add it instead"
@@ -7230,12 +7181,12 @@ class MallardEngine:
                 # must not overwrite a declared PRIMARY KEY (ADVICE
                 # r8); a duplicate of an existing constraint is a
                 # no-op, like DuckDB's idempotent re-index
-                cons = self._keys.get(name) or []
+                decl = self._decl(name)
                 if not any(
                     {c.lower() for c in grp} == {c.lower() for c in keys}
-                    for grp in cons
+                    for grp in decl.keys
                 ):
-                    self._keys[name] = cons + [keys]
+                    decl.keys = decl.keys + [keys]
                 if name in self._persistent:
                     self._pin_keys_prop(name)
             logging.getLogger(__name__).info(
@@ -7309,7 +7260,7 @@ class MallardEngine:
         m = _CREATE_VIEW_RE.match(sql)
         if m:
             name = m.group("name")
-            if name in self._tables and name not in self._views:
+            if name in self._tables and not self._decl(name).is_view:
                 # existing object is a TABLE — DuckDB refuses CREATE
                 # [OR REPLACE] VIEW over a different object class, and
                 # silently converting would let a later DROP VIEW
@@ -7334,10 +7285,9 @@ class MallardEngine:
             body = m.group("select").rstrip("; \n")
             self._tables[name] = self.sql(body)
             self._tables[name].createOrReplaceTempView(self._qualified(name))
-            self._views.add(name)
-            # the definition TEXT rides along for EXPORT DATABASE's
-            # schema.sql (round 10)
-            self._view_sql[name] = body
+            # a replaced view starts from fresh declarations (DuckDB
+            # drops its comment too, verified live)
+            self._decls[name] = _Decl(view_sql=body)
             self._snapshot_view_deps(name)
             return "OK"
         m = _DROP_RE.match(sql)
@@ -7348,7 +7298,7 @@ class MallardEngine:
                 # catalog: DROP VIEW on a table (or DROP TABLE on a
                 # view) must refuse — the destructive path is the
                 # TABLE drop, which deletes persisted data
-                is_view = name in self._views
+                is_view = self._decl(name).is_view
                 kind = m.group("kind").upper()
                 if kind == "VIEW" and not is_view:
                     raise ValueError(f"DROP VIEW: {name} is a table "
@@ -7364,15 +7314,17 @@ class MallardEngine:
         m = _ALTER_RENAME_RE.match(sql)
         if m:
             name, new = m.group("name"), m.group("new")
-            # capture declarations BEFORE put/drop below pop them
-            keys = self._keys.get(name)
-            carried_defaults = self._defaults.get(name)
-            carried_checks = self._checks.get(name)
-            carried_fkeys = self._fkeys.get(name)
-            carried_gen = self._generated.get(name)
-            carried_enums = self._table_enums.get(name)
-            carried_comments = self._comments.get(name)
-            carried_vsql = self._view_sql.get(name)
+            # captured BEFORE put/drop below pop it
+            decl = self._decls.get(name) or _Decl()
+            if (
+                m.group("kind").upper() == "VIEW"
+                and name in self._tables
+                and not decl.is_view
+            ):
+                # DuckDB's refusal, verbatim (verified live)
+                raise ValueError(
+                    "Can only modify table with ALTER TABLE statement"
+                )
             if self._fk_referencing(name):
                 # DuckDB (verified live): renaming a table other
                 # tables' FOREIGN KEYs reference refuses
@@ -7406,55 +7358,24 @@ class MallardEngine:
                 self._tables.pop(name, None)
                 self._tables[new] = self.spark.table(self._qualified(new))
             else:
-                was_view = name in self._views
                 self.put(new, self.table(name))
                 self.drop(name)
-                if was_view:
-                    self._views.add(new)
                 if was_pending:
                     # an in-transaction CREATE-with-persistence being
                     # renamed: the deferred saveAsTable follows the
                     # NEW name instead of silently vanishing at
                     # COMMIT (round-9 review)
                     self._tx["pending_creates"].add(new)
-            if keys:  # declared keys follow the rename
-                self._keys.pop(name, None)
-                self._keys[new] = keys
-            if carried_defaults is not None:  # DEFAULT/CHECK/FK too
-                self._defaults[new] = carried_defaults
-            if carried_checks is not None:
-                self._checks[new] = carried_checks
-            if carried_fkeys is not None:
-                # a SELF-referencing key must follow the rename too,
-                # or enforcement silently dies looking up the old
-                # name (round-10 review pass 2)
-                for fk in carried_fkeys:
-                    if fk.get("ref") == name:
-                        fk["ref"] = new
-                self._fkeys[new] = carried_fkeys
-            if carried_gen is not None:  # GENERATED columns follow
-                self._generated[new] = carried_gen
-            if carried_enums is not None:  # enum column bindings follow
-                self._table_enums[new] = carried_enums
-            if carried_comments is not None:  # comments follow
-                self._comments[new] = carried_comments
-            if carried_vsql is not None:  # view definition follows
-                self._view_sql[new] = carried_vsql
-            self._view_sql.pop(name, None)
-            self._view_deps.pop(name, None)
-            self._defaults.pop(name, None)
-            self._checks.pop(name, None)
-            self._fkeys.pop(name, None)
-            self._generated.pop(name, None)
-            self._table_enums.pop(name, None)
-            self._comments.pop(name, None)
-            # persisted tables: the mallard.* properties follow the
-            # native catalog rename automatically, but a
-            # SELF-referencing FK's content changed (ref now points
-            # at the new name) — re-pin so a fresh engine rediscovers
+            # the declarations (a view's definition included) follow
+            # the rename as one record
+            self._decls.pop(name, None)
+            self._decls[new] = decl
+            # persisted tables: the table properties follow the native
+            # catalog rename automatically, but a SELF-referencing FK's
+            # content changed — re-pin so a fresh engine rediscovers
             # the LIVE declaration, not the pre-rename one (round-10
             # review pass 3)
-            if new in self._persistent and carried_fkeys:
+            if decl.retarget(name, new) and new in self._persistent:
                 self._pin_keys_prop(new)
             return "OK"
         self.sql(sql)
@@ -7814,7 +7735,7 @@ class MallardEngine:
         # GENERATED columns never appear in a COPY file — align the
         # ingest against the insertable subset (round 11; matches
         # DuckDB's COPY arity and this engine's own base-only export)
-        _gen = {c for c, _ in self._generated.get(name, [])}
+        _gen = {c for c, _ in self._decl(name).generated}
         align_fields = (
             [f for f in tgt.schema.fields if f.name not in _gen]
             if tgt is not None else None
@@ -8359,14 +8280,9 @@ class MallardEngine:
             # checked BEFORE the warehouse branch so the persistent
             # path gets the named errors too, not raw Spark ones
             _by_name_checks(name, cols, rest)
-        needs_align = bool(
-            self._defaults.get(name)
-            or self._checks.get(name)
-            or self._fkeys.get(name)
-            or self._generated.get(name)
-            or self._table_enums.get(name)
-            # RETURNING needs the aligned proposed-rows relation
-            or returning is not None
+        # RETURNING needs the aligned proposed-rows relation too
+        needs_align = (
+            self._decl(name).shapes_writes or returning is not None
         )
         if name in self._persistent and self._tx is None and not needs_align:
             # Warehouse table: Spark's native INSERT INTO appends
@@ -8452,7 +8368,7 @@ class MallardEngine:
         from pyspark.sql import functions as F
 
         schema = self._dml_table(name).schema
-        gen = {c for c, _ in self._generated.get(name, [])}
+        gen = {c for c, _ in self._decl(name).generated}
         if gen:
             # GENERATED columns are not insertable (DuckDB: positional
             # arity excludes them; naming one is a binder error) —
@@ -8648,7 +8564,7 @@ class MallardEngine:
                 )
         if unknown:
             raise ValueError(f"UPDATE {name}: unknown columns {sorted(unknown)}")
-        gen_cols = {c for c, _ in self._generated.get(name, [])}
+        gen_cols = {c for c, _ in self._decl(name).generated}
         hit_gen = sorted(set(updates) & gen_cols)
         if hit_gen:
             raise ValueError(
@@ -8887,14 +8803,14 @@ class MallardEngine:
             rhs = expr.strip()
             if re.fullmatch(r"DEFAULT", rhs, re.IGNORECASE):
                 # SET v = DEFAULT works with FROM in DuckDB (verified)
-                d = self._defaults.get(name, {}).get(resolved)
+                d = self._decl(name).defaults.get(resolved)
                 rhs = d if d is not None else "NULL"
             assigns.append((resolved, rhs))
         if unknown:
             raise ValueError(f"UPDATE {name}: unknown columns {sorted(unknown)}")
         if not assigns:
             raise ValueError(f"UPDATE {name}: empty SET list")
-        gen_cols = {c for c, _ in self._generated.get(name, [])}
+        gen_cols = {c for c, _ in self._decl(name).generated}
         hit_gen = sorted({c for c, _ in assigns} & gen_cols)
         if hit_gen:
             raise ValueError(
@@ -8999,7 +8915,7 @@ class MallardEngine:
         relation the fill projects over."""
         from pyspark.sql import functions as F
 
-        d = self._defaults.get(name, {}).get(col)
+        d = self._decl(name).defaults.get(col)
         if d is None:
             return F.lit(None)
         if self._sequences and _SEQ_CALL_RE.search(d):
@@ -9053,7 +8969,7 @@ class MallardEngine:
         write path — the evaluate-on-write equivalent of DuckDB's
         VIRTUAL read-time evaluation (values can never go stale
         because no write path skips this)."""
-        g = self._generated.get(name)
+        g = self._decl(name).generated
         if not g:
             return df
         from pyspark.sql import functions as F
@@ -9071,7 +8987,7 @@ class MallardEngine:
         """Mutation verbs whose projections don't route through
         :meth:`_apply_generated` refuse on generated tables by name —
         never compute-stale silently."""
-        if self._generated.get(name):
+        if self._decl(name).generated:
             raise NotImplementedError(
                 f"{verb} on table {name!r} with GENERATED columns is "
                 f"not supported — use plain INSERT / UPDATE / DELETE "
@@ -9087,7 +9003,7 @@ class MallardEngine:
         errors like DuckDB's enum conversion ("Could not convert
         string 'x' to ...", verified live — the message here names
         the column and members instead of DuckDB's opaque UINT8)."""
-        enums = self._table_enums.get(name)
+        enums = self._decl(name).enums
         if not enums:
             return
         from pyspark.sql import functions as F
@@ -9123,7 +9039,7 @@ class MallardEngine:
         proposed-rows relation on append paths and the written result
         on rewrite paths (rewrite paths scan the table anyway; tables
         that declare CHECKs are dimension-scale by nature)."""
-        checks = self._checks.get(name)
+        checks = self._decl(name).checks
         if not checks:
             return
         from pyspark.sql import functions as F
@@ -9157,7 +9073,7 @@ class MallardEngine:
         ``parent_override`` supplies the parent's POST-statement
         content for self-referencing keys. The violating key is
         reported in DuckDB's message shape."""
-        fks = self._fkeys.get(name)
+        fks = self._decl(name).fkeys
         if not fks:
             return
         from pyspark.sql import functions as F
@@ -9208,10 +9124,10 @@ class MallardEngine:
         foreign key' error, verified live)."""
         from pyspark.sql import functions as F
 
-        for child, fks in self._fkeys.items():
+        for child, decl in self._decls.items():
             if child not in self._tables:
                 continue
-            for fk in fks:
+            for fk in decl.fkeys:
                 if fk["ref"] != name or child == name:
                     continue
                 refs = self._tables[child].select(

@@ -24,6 +24,12 @@ def _sample_table() -> pa.Table:
     )
 
 
+def _declared(eng: MallardEngine, name: str, kind: str):
+    """What ``eng`` declares of ``kind`` (keys, defaults, checks,
+    fkeys) for ``name``; None when nothing is declared."""
+    return getattr(eng._decls.get(name), kind, None) or None
+
+
 def test_put_and_get(engines):
     eng1, _ = engines
     # count=True gives the reference's logged row count; default PUT is
@@ -1500,7 +1506,7 @@ def test_declared_key_upserts_match_duckdb(engines):
     eng1, _ = engines
     ddl = "CREATE TABLE pk_t (k INTEGER PRIMARY KEY, v INTEGER, s VARCHAR)"
     assert eng1.ddl(ddl) == "OK"
-    assert eng1._keys["pk_t"] == [["k"]]
+    assert _declared(eng1, "pk_t", "keys") == [["k"]]
     con = duckdb.connect()
     con.execute(ddl)
     for stmt in [
@@ -1690,7 +1696,7 @@ def test_create_index_surface(engines):
                  "DROP INDEX i1"]:
         assert eng1.ddl(stmt) == "OK"
         con.execute(stmt)
-    assert eng1._keys["ix_t"] == [["k"]]
+    assert _declared(eng1, "ix_t", "keys") == [["k"]]
     for stmt in [
         "INSERT OR REPLACE INTO ix_t VALUES (0, 9), (1, 1)",
         "INSERT INTO ix_t VALUES (1, 5) "
@@ -1838,7 +1844,7 @@ def test_create_table_key_case_insensitive(engines):
     way SQL identifiers do — DuckDB accepts this DDL."""
     eng1, _ = engines
     eng1.ddl("CREATE TABLE ck (id INTEGER, v INTEGER, PRIMARY KEY (ID))")
-    assert eng1._keys["ck"] == [["id"]]
+    assert _declared(eng1, "ck", "keys") == [["id"]]
     eng1.dml("INSERT OR REPLACE INTO ck VALUES (1, 5)")
     eng1.dml("INSERT OR REPLACE INTO ck VALUES (1, 7)")
     assert [(r.id, r.v) for r in eng1.table("ck").collect()] == [(1, 7)]
@@ -1898,7 +1904,7 @@ def test_put_keys_persist_across_sessions(spark):
         ]
         # a fresh engine (same warehouse) rediscovers table AND keys
         eng2 = MallardEngine(spark, "t_pkpersist")
-        assert eng2._keys.get("pt") == [["k"]]
+        assert _declared(eng2, "pt", "keys") == [["k"]]
         eng2.dml("INSERT OR IGNORE INTO pt VALUES (2, 555), (3, 30)")
         assert sorted((r.k, r.v) for r in eng2.table("pt").collect()) == [
             (1, 99), (2, 20), (3, 30)
@@ -1973,7 +1979,7 @@ def test_multiple_unique_constraints_stay_independent(spark):
         "CREATE TABLE mk (a INTEGER PRIMARY KEY, b INTEGER UNIQUE, "
         "v VARCHAR)"
     )
-    assert eng._keys["mk"] == [["a"], ["b"]]
+    assert _declared(eng, "mk", "keys") == [["a"], ["b"]]
     eng.dml("INSERT INTO mk VALUES (1, 10, 'x')")
     with pytest.raises(NotImplementedError, match="multiple"):
         eng.dml("INSERT OR REPLACE INTO mk VALUES (1, 11, 'y')")
@@ -1993,21 +1999,21 @@ def test_multiple_unique_constraints_stay_independent(spark):
         "CREATE TABLE mk2 (a INTEGER, b INTEGER, "
         "PRIMARY KEY (a), UNIQUE (b))"
     )
-    assert eng._keys["mk2"] == [["a"], ["b"]]
+    assert _declared(eng, "mk2", "keys") == [["a"], ["b"]]
     # duplicate constraint (PK + UNIQUE on same column set) dedupes
     eng.ddl(
         "CREATE TABLE mk3 (a INTEGER PRIMARY KEY, v INTEGER, UNIQUE (a))"
     )
-    assert eng._keys["mk3"] == [["a"]]
+    assert _declared(eng, "mk3", "keys") == [["a"]]
     # CREATE UNIQUE INDEX on a PK table ADDS a constraint
     eng.put("ixm", pa.table({"k": [1], "u": [5], "v": [0]}), keys=["k"])
     eng.ddl("CREATE UNIQUE INDEX uix ON ixm (u)")
-    assert eng._keys["ixm"] == [["k"], ["u"]]
+    assert _declared(eng, "ixm", "keys") == [["k"], ["u"]]
     with pytest.raises(NotImplementedError, match="multiple"):
         eng.dml("INSERT OR IGNORE INTO ixm VALUES (1, 5, 9)")
     # re-declaring the SAME unique index is a no-op, not a third key
     eng.ddl("CREATE UNIQUE INDEX uix2 ON ixm (u)")
-    assert eng._keys["ixm"] == [["k"], ["u"]]
+    assert _declared(eng, "ixm", "keys") == [["k"], ["u"]]
 
 
 def test_generated_upsert_sql_quotes_identifiers(spark):
@@ -2030,7 +2036,7 @@ def test_generated_upsert_sql_quotes_identifiers(spark):
     eng.put("qp", df, persist=True, keys=["key col"])
     try:
         eng2 = MallardEngine(spark, "t_qid")
-        assert eng2._keys.get("qp") == [["key col"]]
+        assert _declared(eng2, "qp", "keys") == [["key col"]]
         eng2.dml("INSERT OR REPLACE INTO qp VALUES (1, 77, 'z')")
         assert sorted(tuple(r) for r in eng2.table("qp").collect()) == [
             (1, 77, "z")
@@ -2136,7 +2142,7 @@ def test_transaction_persistent_tables_deferred(spark):
         assert sorted((r.k, r.v) for r in eng2.table("w").collect()) == [
             (2, 22)
         ]
-        assert eng2._keys.get("w") == [["k"]]
+        assert _declared(eng2, "w", "keys") == [["k"]]
         # deferred DROP: gone inside the tx, back after ROLLBACK
         eng.execute("BEGIN")
         eng.drop("w")
@@ -2210,7 +2216,7 @@ def test_commit_staged_swap_is_atomic_across_tables(spark):
         eng.execute("ROLLBACK")
         assert [r.k for r in eng.table("a").collect()] == [1]
         assert [r.k for r in eng.table("b").collect()] == [10]
-        assert eng._keys.get("a") == [["k"]]  # declarations survive
+        assert _declared(eng, "a", "keys") == [["k"]]  # declarations survive
         # and a clean multi-table commit still publishes everything
         eng.execute("BEGIN")
         eng.dml("UPDATE a SET k = 3")
@@ -2222,7 +2228,7 @@ def test_commit_staged_swap_is_atomic_across_tables(spark):
         assert [r.k for r in fresh2.table("a").collect()] == [3]
         assert [r.k for r in fresh2.table("c").collect()] == [103]
         assert "b" not in fresh2.list_tables()
-        assert fresh2._keys.get("a") == [["k"]]  # pin rode the swap
+        assert _declared(fresh2, "a", "keys") == [["k"]]  # pin rode the swap
     finally:
         eng._tx = None
         for n in ("a", "b", "c"):
@@ -2266,7 +2272,7 @@ def test_self_referencing_fk_survives_rename(spark):
     eng.dml("INSERT INTO emp VALUES (1, NULL)")
     eng.dml("INSERT INTO emp VALUES (2, 1)")
     eng.ddl("ALTER TABLE emp RENAME TO staff")
-    assert eng._fkeys["staff"][0]["ref"] == "staff"
+    assert _declared(eng, "staff", "fkeys")[0]["ref"] == "staff"
     with pytest.raises(ValueError, match="foreign key"):
         eng.dml("INSERT INTO staff VALUES (3, 99)")
     eng.dml("INSERT INTO staff VALUES (3, 2)")
@@ -2451,7 +2457,7 @@ def test_export_import_database_round_trip(spark, tmp_path):
     eng.execute(f"EXPORT DATABASE '{d_q}' (FORMAT PARQUET)")
     engq = MallardEngine(spark, "t_expq")
     engq.execute(f"IMPORT DATABASE '{d_q}'")
-    assert engq._keys.get("qt") == [["k v"]]
+    assert _declared(engq, "qt", "keys") == [["k v"]]
     eng.drop("qt")
     for n in ("v1", "t2", "t1", "qt"):  # children before FK parents
         if n in engq._tables:
@@ -2915,7 +2921,7 @@ def test_foreign_keys_persist_and_transactions(spark):
         eng.ddl("CREATE TABLE chi (pk INTEGER REFERENCES par(k))")
         eng.dml("INSERT INTO chi VALUES (1)")
         fresh = MallardEngine(spark, "t_fkp")
-        assert fresh._fkeys.get("chi") == [
+        assert _declared(fresh, "chi", "fkeys") == [
             {"cols": ["pk"], "ref": "par", "ref_cols": ["k"]}
         ]
         with pytest.raises(ValueError, match="foreign key"):
@@ -3162,7 +3168,7 @@ def test_default_values_persist_and_rollback(spark):
         )
         eng.dml("INSERT INTO pd (k) VALUES (1)")
         eng2 = MallardEngine(spark, "t_defp")
-        assert eng2._defaults.get("pd") == {"v": "42"}
+        assert _declared(eng2, "pd", "defaults") == {"v": "42"}
         eng2.dml("INSERT INTO pd (k) VALUES (2)")
         assert sorted(
             (r.k, r.v) for r in eng2.table("pd").collect()
@@ -3171,6 +3177,55 @@ def test_default_values_persist_and_rollback(spark):
         eng.ddl_persist = False
         if "pd" in eng._tables:
             eng.drop("pd")
+
+
+def test_declaration_properties_on_disk_format(spark):
+    """The on-disk form of the declarations is a contract with every
+    existing warehouse: a persisted table carrying the seven
+    declaration properties, written as raw TBLPROPERTIES in exactly
+    the encodings the engine has always written, rediscovers every
+    declared kind in a fresh engine."""
+    spark.sql("DROP TABLE IF EXISTS t_declfmt__fmt")
+    eng = MallardEngine(spark, "t_declfmt")
+    eng.put(
+        "fmt",
+        pa.table({"k": [1], "v": [5], "p": [1], "g": [10], "e": ["a"]}),
+        persist=True,
+    )
+    try:
+        props = {
+            "mallard.keys": "k",
+            "mallard.defaults": '{"v": "5"}',
+            "mallard.checks": '["v > 0"]',
+            "mallard.fkeys":
+                '[{"cols": ["p"], "ref": "fmt", "ref_cols": ["k"]}]',
+            "mallard.generated": '[["g", "v * 2"]]',
+            "mallard.enums": '{"e": {"type": null, "values": ["a", "b"]}}',
+            "mallard.comments": '{"table": "doc", "cols": {"v": "cv"}}',
+        }
+        kv = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
+        spark.sql(f"ALTER TABLE t_declfmt__fmt SET TBLPROPERTIES ({kv})")
+        fresh = MallardEngine(spark, "t_declfmt")
+        got = fresh.sql(
+            "SELECT comment, sql FROM duckdb_tables() "
+            "WHERE table_name = 'fmt'"
+        ).collect()
+        assert [tuple(r) for r in got] == [(
+            "doc",
+            "CREATE TABLE fmt (k BIGINT, v BIGINT DEFAULT (5), p BIGINT, "
+            "g BIGINT GENERATED ALWAYS AS((v * 2)), e ENUM('a', 'b'), "
+            "UNIQUE (k), CHECK (v > 0), "
+            "FOREIGN KEY (p) REFERENCES fmt(k));",
+        )]
+        got = fresh.sql(
+            "SELECT column_name, comment FROM duckdb_columns() "
+            "WHERE table_name = 'fmt' ORDER BY column_index"
+        ).collect()
+        assert [tuple(r) for r in got] == [
+            ("k", None), ("v", "cv"), ("p", None), ("g", None), ("e", None),
+        ]
+    finally:
+        eng.drop("fmt")
 
 
 @pytest.mark.slow
@@ -3244,8 +3299,8 @@ def test_check_constraints_persistent_append(spark):
         with pytest.raises(ValueError, match="CHECK"):
             eng.dml("INSERT INTO pw VALUES (3, -1)")
         eng2 = MallardEngine(spark, "t_chkp")
-        assert eng2._checks.get("pw") == ["v > 0"]
-        assert eng2._defaults.get("pw") == {"v": "5"}
+        assert _declared(eng2, "pw", "checks") == ["v > 0"]
+        assert _declared(eng2, "pw", "defaults") == {"v": "5"}
         assert sorted((r.k, r.v) for r in eng2.table("pw").collect()) == [
             (1, 5), (2, 20)
         ]
@@ -3270,8 +3325,8 @@ def test_replaced_table_drops_stale_default_check_props(spark):
         # replace with a CONSTRAINT-FREE definition via put(persist)
         eng.put("sp", pa.table({"k": [1], "v": [-5]}), persist=True)
         eng2 = MallardEngine(spark, "t_staleprops")
-        assert eng2._defaults.get("sp") is None
-        assert eng2._checks.get("sp") is None
+        assert _declared(eng2, "sp", "defaults") is None
+        assert _declared(eng2, "sp", "checks") is None
         # and the new table accepts what the old CHECK would reject
         eng2.dml("INSERT INTO sp VALUES (2, -1)")
         assert eng2.table("sp").count() == 2
@@ -3303,9 +3358,9 @@ def test_round9_review_fixes(spark):
         eng.ddl(
             r"CREATE TABLE bs (s VARCHAR CHECK (s NOT LIKE '%\\_%'))"
         )
-        declared = eng._checks["bs"]
+        declared = _declared(eng, "bs", "checks")
         eng2 = MallardEngine(spark, "t_r9rev")
-        assert eng2._checks.get("bs") == declared, (
+        assert _declared(eng2, "bs", "checks") == declared, (
             "CHECK lost/corrupted in the property round-trip"
         )
         eng2.dml("INSERT INTO bs VALUES ('plain')")
@@ -3319,9 +3374,9 @@ def test_round9_review_fixes(spark):
     # (2) session RENAME carries DEFAULT/CHECK
     eng.ddl("CREATE TABLE rn (k INTEGER, v INTEGER DEFAULT 4 CHECK (v > 0))")
     eng.ddl("ALTER TABLE rn RENAME TO rn2")
-    assert eng._defaults.get("rn2") == {"v": "4"}
-    assert eng._checks.get("rn2") == ["v > 0"]
-    assert eng._defaults.get("rn") is None
+    assert _declared(eng, "rn2", "defaults") == {"v": "4"}
+    assert _declared(eng, "rn2", "checks") == ["v > 0"]
+    assert _declared(eng, "rn", "defaults") is None
     eng.dml("INSERT INTO rn2 (k) VALUES (1)")
     assert [(r.k, r.v) for r in eng.table("rn2").collect()] == [(1, 4)]
     # (3) in-tx rename of a pending CREATE persists under the NEW name
@@ -3459,7 +3514,7 @@ def test_round9_review_pass2_fixes(spark, tmp_path):
         with pytest.raises(NotImplementedError, match="transaction"):
             eng.put("ck", pa.table({"k": [0]}), persist=True)
         eng.execute("ROLLBACK")
-        assert eng._checks.get("ck") == ["k > 0"]
+        assert _declared(eng, "ck", "checks") == ["k > 0"]
         with pytest.raises(ValueError, match="CHECK"):
             eng.dml("INSERT INTO ck VALUES (-1)")
     finally:
@@ -3867,6 +3922,35 @@ def test_view_late_binding(spark):
     eng.ddl("CREATE VIEW lbv2 AS SELECT sum(v10) AS s FROM lbv")
     eng.dml("DELETE FROM lb WHERE id = 1")
     assert eng.sql("SELECT s FROM lbv2").collect()[0][0] == 90.0
+    eng.ddl("DROP VIEW lbv2")
+
+    def lbv_rows(view):
+        return {
+            r["id"]: r["v10"]
+            for r in eng.sql(f"SELECT * FROM {view}").collect()
+        }
+
+    # a rolled-back DROP VIEW restores the view's dependency snapshot
+    # with its definition, so it keeps seeing later mutations
+    eng.execute("BEGIN; DROP VIEW lbv; ROLLBACK")
+    eng.dml("INSERT INTO lb VALUES (3, 0.5)")
+    assert lbv_rows("lbv") == {2: 90.0, 3: 5.0}
+    # ALTER VIEW RENAME renames within this namespace and the renamed
+    # view stays late-binding
+    eng.ddl("ALTER VIEW lbv RENAME TO lbv3")
+    eng.dml("UPDATE lb SET v = 1.0 WHERE id = 3")
+    assert lbv_rows("lbv3") == {2: 90.0, 3: 10.0}
+    assert "lbv" not in eng.list_tables()
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        MallardEngine(spark, "t_lateview_other").sql(
+            "SELECT * FROM lbv3"
+        ).collect()
+    # ALTER VIEW on a table refuses like DuckDB
+    with pytest.raises(
+        ValueError, match="Can only modify table with ALTER TABLE statement"
+    ):
+        eng.ddl("ALTER VIEW lb RENAME TO lb2")
+    assert "lb" in eng.list_tables()
 
 
 def test_case_insensitive_table_resolution(spark):

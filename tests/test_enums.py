@@ -340,6 +340,27 @@ def test_comment_on_and_introspection(eng, duck):
         run("COMMENT ON TABLE ct IS NULL")
     assert [tuple(r) for r in eng.sql(q).collect()] == \
         duck.execute(q).fetchall()
+    # a column comment drops with its column and follows its rename
+    q3 = (
+        "SELECT column_name, comment FROM duckdb_columns() "
+        "WHERE table_name = 'ct' ORDER BY column_index"
+    )
+    for steps in (
+        [
+            "COMMENT ON COLUMN ct.v IS 'cv'",
+            "ALTER TABLE ct DROP COLUMN v",
+            "ALTER TABLE ct ADD COLUMN v DOUBLE",
+        ],
+        [
+            "COMMENT ON COLUMN ct.v IS 'cv2'",
+            "ALTER TABLE ct RENAME COLUMN v TO v2",
+        ],
+    ):
+        for stmt in steps:
+            eng.execute(stmt)
+            duck.execute(stmt)
+        assert [tuple(r) for r in eng.sql(q3).collect()] == \
+            duck.execute(q3).fetchall(), steps
     # object-class checks + unknown targets error
     with pytest.raises(ValueError, match="does not exist"):
         eng.ddl("COMMENT ON TABLE nosuch IS 'x'")

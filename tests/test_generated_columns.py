@@ -57,6 +57,15 @@ def test_generated_insert_update_delete_state_parity(spark):
     con.execute("UPDATE g SET a = src.w FROM src WHERE g.a = src.k")
     got, want = _both_state(eng, con, "g")
     assert got == want == [(10, 11, "x"), (200, 201, "y")]
+    # a renamed generated column keeps its rule
+    for stmt in (
+        "ALTER TABLE g RENAME COLUMN b TO b2",
+        "INSERT INTO g (a, c) VALUES (7, 'w')",
+    ):
+        eng.execute(stmt)
+        con.execute(stmt)
+    got, want = _both_state(eng, con, "g")
+    assert got == want
     for t in eng.list_tables():
         eng.drop(t)
 
@@ -143,7 +152,7 @@ def test_generated_warehouse_persistence_roundtrip(spark):
     eng.ddl("CREATE TABLE gp (a INTEGER, b INTEGER GENERATED ALWAYS AS (a * 3))")
     eng.dml("INSERT INTO gp (a) VALUES (2)")
     fresh = MallardEngine(spark, "t_gpersist")
-    assert fresh._generated.get("gp") == [("b", "a * 3")]
+    assert fresh._decls["gp"].generated == [("b", "a * 3")]
     fresh.dml("INSERT INTO gp (a) VALUES (4)")
     assert sorted(
         tuple(r) for r in fresh.sql("SELECT * FROM gp").collect()

@@ -470,7 +470,7 @@ def run_scripts(spark, grep: str | None = None, scripts=None):
         # views are diffed by CONTENT below but excluded from the
         # base-table set (DuckDB's information_schema separates them;
         # engine.list_tables mirrors SHOW TABLES, which includes them)
-        eng_views = {v.lower() for v in eng._views}
+        eng_views = {v.lower() for v in eng._view_names()}
         eng_tables = {t.lower() for t in eng.list_tables()} - eng_views
         duck_views = {
             r[0].lower()
