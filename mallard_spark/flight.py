@@ -211,9 +211,11 @@ class SparkFlightServer(flight.FlightServerBase):
             name = descriptor.command.decode("utf-8")
         from mallard_spark.engine import ingest_stream_to_df
 
-        # Spill arriving batches straight to a parquet stage (one batch
-        # in driver memory at a time), then register the distributed
-        # scan — a 100 GB PUT never materializes on the serving process.
+        # Streams under ingest_memory_bytes are ingested from memory and
+        # pinned lazily (the first query stores them as blocks); larger
+        # ones spill to a parquet stage one batch at a time and register
+        # the distributed scan — a 100 GB PUT never materializes on the
+        # serving process.
         df = ingest_stream_to_df(
             self.engine.spark,
             (chunk.data for chunk in reader if chunk.data is not None),
@@ -264,6 +266,8 @@ class SparkFlightServer(flight.FlightServerBase):
                 return
             from mallard_spark.engine import ingest_stream_to_df
 
+            # the transform reads this input once: the lazy pin saves
+            # nothing here and stores the rows as blocks on the way
             in_df = ingest_stream_to_df(
                 self.engine.spark,
                 (chunk.data for chunk in reader if chunk.data is not None),

@@ -109,7 +109,10 @@ def round6_fp(c: Column) -> Column:
     mismatches against F.round over the complete knn_bruteforce pair
     population (probes × corpus) at sf0.001/0.01/0.1 AND the 1M-pair
     sf10 replica. Given equal n, n/1e6 and BigDecimal(n,6).toDouble
-    are both the nearest double to n·10⁻⁶ — identical.
+    are both the nearest double to n·10⁻⁶ — identical. The sf0.01
+    population is re-checked with the full suite
+    (``test_round6_fp_matches_round_on_knn_bruteforce_pairs``, over
+    ``similarity.bruteforce_cosines``).
 
     Scope (round 16): used ONLY where the rounded population has been
     verified per-row — knn_bruteforce. Other cosine consumers score

@@ -66,6 +66,21 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     REJECTED: sf0.1 0.92 s (planning/codegen cost — the r15
     rejected-#6 finding reproduced), sf10 no better than the fold.
     """
+    sims = bruteforce_cosines(spark, sf_dir).select(
+        "probe_id", "neighbor_id", round6_fp(F.col("cos_raw")).alias("cos_sim")
+    )
+    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+    return (
+        sims.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("probe_id", "neighbor_id", "cos_sim", "rank")
+    )
+
+
+def bruteforce_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every (probe, corpus vector) pair knn_bruteforce scores, with its
+    unrounded cosine ``cos_raw``: the population on which ``round6_fp``
+    must agree with ``F.round(c, 6)`` row for row."""
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), as_double("embedding").alias("vp")
@@ -76,20 +91,9 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = dot(F.col("vp"), F.col("vc")) / (
         F.sqrt(F.col("np2")) * F.sqrt(F.col("nc2"))
     )
-    sims = (
-        corpus.join(F.broadcast(probes), F.col("neighbor_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            round6_fp(raw).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("probe_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return corpus.join(
+        F.broadcast(probes), F.col("neighbor_id") != F.col("probe_id")
+    ).select("probe_id", "neighbor_id", raw.alias("cos_raw"))
 
 
 N_LSH_TABLES = 16

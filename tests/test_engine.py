@@ -58,6 +58,99 @@ def test_transfer(engines):
     assert eng2.sql("SELECT COUNT(*) AS n FROM simple_table").collect()[0].n == 5
 
 
+def _leaves(df):
+    """The leaf nodes of ``df``'s analyzed plan (JVM objects)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def _assert_reads_pinned_blocks(df) -> None:
+    """``df`` scans one checkpointed RDD: its rows are block-manager
+    blocks, not a LocalRelation or a parallelized collection that every
+    task would carry."""
+    (leaf,) = _leaves(df)
+    assert leaf.nodeName() == "LogicalRDD", leaf.treeString()
+    assert leaf.rdd().isCheckpointed(), leaf.rdd().toDebugString()
+
+
+def test_put_pins_arrow_rows(spark):
+    """An Arrow PUT under Spark's local-relation threshold is pinned:
+    after one query its plan reads checkpointed blocks instead of a
+    LocalRelation, and it answers the same rows."""
+    eng = MallardEngine(spark, "t_pin")
+    t = pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]})
+    eng.put("t", t)
+    try:
+        assert eng.sql("SELECT count(*) AS n FROM t").collect()[0].n == 3
+        _assert_reads_pinned_blocks(eng.table("t"))
+        assert sorted(map(tuple, eng.table("t").collect())) == sorted(
+            zip(*t.to_pydict().values())
+        )
+    finally:
+        eng.drop("t")
+
+
+def test_put_pins_arrow_rows_over_local_relation_threshold(spark):
+    """Over ``spark.sql.execution.arrow.localRelationThreshold`` Arrow
+    ingest builds a parallelized RDD instead of a LocalRelation; that
+    form carries the rows in every task too, and is pinned the same
+    way."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    eng = MallardEngine(spark, "t_pinrdd")
+    t = pa.table({"k": list(range(1000)), "g": [i % 7 for i in range(1000)]})
+    spark.conf.set(key, "1")
+    try:
+        # the parallelized-RDD ingest form is the one under test
+        assert [n.nodeName() for n in _leaves(spark.createDataFrame(t))] == [
+            "LogicalRDD"
+        ]
+        eng.put("t", t)
+        got = eng.sql("SELECT g, sum(k) AS s FROM t GROUP BY g").collect()
+        want = {g: sum(k for k in range(1000) if k % 7 == g) for g in range(7)}
+        assert {r.g: r.s for r in got} == want
+        _assert_reads_pinned_blocks(eng.table("t"))
+        assert eng.table("t").count() == 1000
+    finally:
+        spark.conf.set(key, old)
+        eng.drop("t")
+
+
+def test_pinned_rows_outlive_replacement_and_gc(spark):
+    """Pinned blocks stay readable while a live plan reads them: a
+    DataFrame held over the PUT table, one held over its UPDATEd
+    version, and a view over the table all answer correctly after the
+    name is re-PUT and the JVM collects garbage (the ContextCleaner
+    frees blocks of unreachable RDDs only)."""
+    import gc
+    import time
+
+    eng = MallardEngine(spark, "t_pinlife")
+    eng.put("t", pa.table({"k": [1, 2, 3], "v": [10, 20, 30]}))
+    try:
+        orig = eng.table("t")
+        assert orig.count() == 3  # stores the pinned blocks
+        eng.execute("UPDATE t SET v = v + 1 WHERE k = 2")
+        upd = eng.table("t")
+        eng.ddl("CREATE VIEW tv AS SELECT k, v * 2 AS v2 FROM t")
+        assert sorted(map(tuple, eng.sql("SELECT * FROM tv").collect())) == [
+            (1, 20), (2, 42), (3, 60)
+        ]
+        eng.put("t", pa.table({"k": [7], "v": [70]}))
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(1)  # the ContextCleaner runs on its own thread
+        assert sorted(map(tuple, orig.collect())) == [(1, 10), (2, 20), (3, 30)]
+        assert sorted(map(tuple, upd.collect())) == [(1, 10), (2, 21), (3, 30)]
+        # DuckDB views bind late: the view reads the replaced table
+        assert [tuple(r) for r in eng.sql("SELECT * FROM tv").collect()] == [
+            (7, 140)
+        ]
+    finally:
+        eng.drop("tv")
+        eng.drop("t")
+
+
 def test_transfer_via_parquet(engines, tmp_path):
     eng1, eng2 = engines
     eng1.put("pq_table", _sample_table())

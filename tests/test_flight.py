@@ -387,6 +387,48 @@ def test_concurrent_clients(servers):
     assert not errors, errors
 
 
+def test_concurrent_first_reads_of_pinned_put(servers):
+    """A table PUT over the wire is pinned lazily, so the first query
+    that scans it stores its blocks. Four clients send their FIRST
+    SELECT on a fresh PUT at the same moment; each must get the answer
+    a serial read gives afterwards."""
+    import threading
+
+    s1, _ = servers
+    n = 20_000
+    t = pa.table({"g": [i % 13 for i in range(n)], "v": [float(i) for i in range(n)]})
+    _put(_client(s1), "pin_race_t", t)
+    ticket = flight.Ticket(
+        b"SELECT g, SUM(v) AS s, COUNT(*) AS c FROM pin_race_t GROUP BY g ORDER BY g"
+    )
+    start = threading.Barrier(4)
+    answers, errors = [None] * 4, []
+
+    def worker(i: int) -> None:
+        try:
+            client = _client(s1)
+            start.wait(timeout=60)
+            answers[i] = client.do_get(ticket).read_all()
+        except Exception as e:  # surface across the thread boundary
+            errors.append((i, repr(e)))
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not errors, errors
+    serial = _client(s1).do_get(ticket).read_all()
+    assert serial.column("c").to_pylist() == [
+        len(range(g, n, 13)) for g in range(13)
+    ]
+    assert serial.column("s").to_pylist() == [
+        float(sum(range(g, n, 13))) for g in range(13)
+    ]
+    for got in answers:
+        assert got.equals(serial)
+
+
 def test_server_manager_lifecycle(spark):
     """FlightServerConfig/FlightServerManager parity: start two
     servers from configs (one with Basic auth), talk to both, shut

@@ -1,6 +1,8 @@
 """Unit semantics for dedup/similarity/text operators on hand-built
 micro-fixtures with known answers (independent of the oracle suite)."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -287,6 +289,30 @@ def test_knn_pq_trained_recall_at_sf01(spark):
         (exact.probe_id == pqt.probe_id) & (F.col("exact_n") == F.col("pqt_n")),
     ).count()
     assert hits / n >= 0.8, f"mean pq_trained recall@5 {hits / n:.3f} < 0.8"
+
+
+@pytest.mark.slow
+def test_round6_fp_matches_round_on_knn_bruteforce_pairs(spark, sf_dir):
+    """``round6_fp`` (rint on x·1e6) stands in for ``F.round(c, 6)``
+    (HALF_UP on the shortest decimal form) in knn_bruteforce. The two
+    can differ on a value at a 6th-decimal .5 boundary, so the swap
+    holds only for the pair population it is applied to: every scored
+    pair at sf0.01 must round the same both ways."""
+    from mallard_spark.functions.vectors import round6_fp
+    from mallard_spark.operators.similarity import bruteforce_cosines
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    c = F.col("cos_raw")
+    got = (
+        bruteforce_cosines(spark, sf001)
+        .agg(
+            F.count("*").alias("pairs"),
+            F.sum((~round6_fp(c).eqNullSafe(F.round(c, 6))).cast("int")).alias("bad"),
+        )
+        .collect()[0]
+    )
+    assert got.pairs > 0
+    assert got.bad == 0, f"{got.bad} of {got.pairs} pairs round differently"
 
 
 @pytest.mark.slow
