@@ -7386,30 +7386,22 @@ def resolve(
     return None, stop_err
 
 
-# statement-leading keywords the engine can hand the translator
-# (DML / COPY / PIVOT are routed before the dialect fallback; CREATE /
-# ALTER / DROP reach it through engine.ddl's pass-through branch)
+# statement-leading keywords the engine can hand the translator, and
+# the opening paren of a parenthesized set-operation operand (DML /
+# COPY / PIVOT are routed before the dialect fallback; CREATE / ALTER
+# / DROP reach it through engine.ddl's pass-through branch)
 _STMT_START_KWS = frozenset(
     {
         "SELECT", "WITH", "FROM", "VALUES", "TABLE", "DESCRIBE", "SHOW",
-        "SUMMARIZE", "EXPLAIN", "CREATE", "ALTER", "DROP",
+        "SUMMARIZE", "EXPLAIN", "CREATE", "ALTER", "DROP", "(",
     }
 )
 
 
 def _statement_shaped(sql: str) -> bool:
-    """True when the first CODE token (comments and whitespace
-    skipped) is a statement-leading keyword or an opening paren
-    (parenthesized set-operation operands)."""
-    mask = code_mask(sql)
-    i = next(
-        (i for i, ch in enumerate(sql) if mask[i] and ch not in _WS), None
-    )
-    if i is None:
-        return False
-    if sql[i] == "(":
-        return True
-    j = i
-    while j < len(sql) and (sql[j].isalnum() or sql[j] == "_"):
-        j += 1
-    return sql[i:j].upper() in _STMT_START_KWS
+    """True when the statement's first code token (comments and
+    whitespace skipped, as the engine's classifier reads it) is a
+    statement-leading keyword or an opening paren."""
+    from mallard_spark.engine import classify
+
+    return classify(sql).verb.split(" ")[0] in _STMT_START_KWS

@@ -40,6 +40,7 @@ Scale notes (round-3 changes):
 from __future__ import annotations
 
 import contextvars
+import enum
 import json
 import logging
 import re
@@ -50,7 +51,7 @@ import uuid
 from collections.abc import Iterator
 from copy import deepcopy
 from dataclasses import dataclass, field
-from typing import TYPE_CHECKING, Any, ClassVar
+from typing import TYPE_CHECKING, Any, ClassVar, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -82,11 +83,102 @@ _WIRE_DUCKDB: contextvars.ContextVar[bool] = contextvars.ContextVar(
 if TYPE_CHECKING:
     import pyarrow as pa
 
-_DDL_RE = re.compile(
-    r"^\s*(CREATE|DROP|ALTER|TRUNCATE|COMMENT\s+ON|"
-    r"EXPORT\s+DATABASE|IMPORT\s+DATABASE)\b",
-    re.IGNORECASE,
-)
+
+class Kind(enum.Enum):
+    """What a statement is, read by :func:`classify` from the keyword
+    or keyword pair that leads it (the member's value).
+    :meth:`MallardEngine.sql` lists the handler of each kind."""
+
+    QUERY = ("SELECT", "WITH", "FROM", "VALUES", "TABLE", "(")
+    RECURSIVE = ("WITH RECURSIVE",)
+    DDL = ("CREATE", "DROP", "ALTER")
+    # the DDL Spark's parser has no grammar for
+    CATALOG_DDL = (
+        "TRUNCATE", "COMMENT ON", "EXPORT DATABASE", "IMPORT DATABASE",
+        "CREATE TYPE", "CREATE SEQUENCE", "DROP TYPE", "DROP SEQUENCE",
+    )
+    DML = ("INSERT", "UPDATE", "DELETE", "MERGE")
+    COPY = ("COPY",)
+    SHOW_TABLES = ("SHOW TABLES",)  # the whole statement
+    SET = ("SET", "RESET")
+    TX = ("BEGIN", "COMMIT", "END", "ROLLBACK", "ABORT")
+    VACUUM = ("VACUUM", "ANALYZE")
+    PRAGMA = ("PRAGMA",)
+    DESCRIBE = ("DESCRIBE", "DESC")
+    SUMMARIZE = ("SUMMARIZE",)
+    PIVOT = ("PIVOT",)
+    UNPIVOT = ("UNPIVOT",)
+    PREPARE = ("PREPARE", "EXECUTE", "DEALLOCATE")
+    REFUSED = ("ATTACH", "DETACH", "CHECKPOINT", "INSTALL", "LOAD")
+    OTHER = ()  # anything else, Spark's own statements included
+
+
+class Statement(NamedTuple):
+    kind: Kind
+    start: int  # offset of the first code token
+    verb: str  # the leading keywords that decided the kind
+
+
+_VERB_KINDS = {verb: kind for kind in Kind for verb in kind.value}
+# modifiers skipped on the way to the deciding keyword (CREATE OR
+# REPLACE TEMP SEQUENCE, FORCE CHECKPOINT)
+_MODIFIERS = frozenset({"OR", "REPLACE", "TEMP", "TEMPORARY", "FORCE"})
+_WORD_RE = re.compile(r"[A-Za-z_]\w*")
+
+
+def classify(sql: str) -> Statement:
+    """The kind of ``sql`` and the offset of its first code token,
+    read from its leading keywords at depth 0. Comments are skipped
+    like DuckDB skips them, so a comment-led statement routes like
+    its bare form."""
+    lx = lex(sql)
+    words: list[str] = []
+    i, n = 0, len(sql)
+    start = n
+    while i < n and len(words) < 5:
+        if sql[i].isspace():
+            i += 1
+        elif not lx.mask[i] and sql[i] in "-/":
+            i = lx.spans[i]  # a comment
+        else:
+            start = min(start, i)
+            m = _WORD_RE.match(sql, i)  # no match at a literal's quote
+            if not m:
+                break
+            words.append(m.group().upper())
+            i = m.end()
+    keys = [w for w in words if w not in _MODIFIERS]
+    pair = " ".join(keys[:2])
+    verb = pair if pair in _VERB_KINDS else (keys or [sql[start:start + 1]])[0]
+    kind = _VERB_KINDS.get(verb, Kind.OTHER)
+    if kind is Kind.SHOW_TABLES and (
+        len(words) > 2 or strip_comments(sql[i:]).strip() not in ("", ";")
+    ):
+        kind = Kind.OTHER  # SHOW TABLES FROM / LIKE: Spark's own statement
+    return Statement(kind, start, verb)
+
+
+# the kinds a script statement routes past sql(): each answers a status
+_STATUS_KINDS = frozenset({Kind.DDL, Kind.CATALOG_DDL, Kind.DML, Kind.COPY})
+# the grammar named when a session-catalog DDL statement does not parse
+_CATALOG_GRAMMARS = {
+    "EXPORT DATABASE": (
+        ValueError, "EXPORT DATABASE '<dir>' [(FORMAT PARQUET|CSV)]"),
+    "IMPORT DATABASE": (ValueError, "IMPORT DATABASE '<dir>'"),
+    "COMMENT ON": (NotImplementedError, "COMMENT ON TABLE|VIEW|COLUMN "
+                   "<name>[.col] IS '<text>'|NULL (no other object class)"),
+    "CREATE TYPE": (ValueError, "CREATE TYPE <name> AS ENUM ('v', ...) or AS "
+                    "<type> (DuckDB 1.0 has no OR REPLACE / IF NOT EXISTS)"),
+}
+_REFUSED_HINTS = {
+    "ATTACH": "each namespace IS a catalog — connect a second "
+              "server/engine instead",
+    "DETACH": "each namespace IS a catalog",
+    "CHECKPOINT": "Spark tables persist via put(persist=True)/CREATE "
+                  "TABLE AS",
+    "INSTALL": "extensions do not apply to a Spark engine",
+    "LOAD": "extensions do not apply to a Spark engine",
+}
 _COMMENT_ON_RE = re.compile(
     r"^\s*COMMENT\s+ON\s+(?P<kind>TABLE|VIEW|COLUMN)\s+"
     r"(?P<name>[A-Za-z_]\w*)(?:\s*\.\s*(?P<col>[A-Za-z_]\w*))?\s+"
@@ -192,7 +284,6 @@ _ALTER_RENAME_RE = re.compile(
     r"(?P<new>[A-Za-z_][\w]*)\s*;?\s*$",
     re.IGNORECASE,
 )
-_DML_RE = re.compile(r"^\s*(INSERT|UPDATE|DELETE|MERGE)\b", re.IGNORECASE)
 
 
 _COPY_RE = re.compile(
@@ -209,7 +300,6 @@ _COPY_FROM_RE = re.compile(
     r"'(?P<path>[^']+)'\s*(?:\((?P<opts>[^)]*)\))?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_SHOW_TABLES_RE = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.IGNORECASE)
 _PIVOT_RE = re.compile(
     r"^\s*PIVOT\s+(?P<src>\(.*\)|[A-Za-z_][\w]*)\s+ON\s+"
     r"(?P<on>[A-Za-z_][\w]*)\s+USING\s+(?P<using>.+?)"
@@ -1466,11 +1556,12 @@ class MallardEngine:
         ``count=True`` returns the row count (the reference logs it,
         flight_server.py:400) at the cost of one job; default is lazy —
         no job runs until the table is queried.
-        Arrow, pandas or row ``data`` is pinned lazily
-        (:func:`pin_driver_rows`): the first query stores its rows as
-        block-manager blocks, and later queries read those instead of
-        shipping the rows inside every task. A DataFrame is registered
-        as given.
+        Arrow, pandas or row ``data`` put as a session table is pinned
+        lazily (:func:`pin_driver_rows`): the first query stores its
+        rows as block-manager blocks, and later queries read those
+        instead of shipping the rows inside every task. A DataFrame is
+        registered as given, and a persisted PUT writes the unpinned
+        rows (a pinned frame's write would store blocks nothing reads).
         ``persist=True`` writes a warehouse table (``saveAsTable``) so
         the data survives the session, like the reference's on-disk
         ``db_path`` (flight_server.py:166-180).
@@ -1583,6 +1674,8 @@ class MallardEngine:
                     f"DROP TABLE IF EXISTS {self._qualified(name)}"
                 )
                 self._persistent.discard(name)
+            elif not isinstance(data, DataFrame):
+                df = pin_driver_rows(df)
             df.createOrReplaceTempView(self._qualified(name))
         self._tables[name] = df
         if self._tx is not None and not persist:
@@ -2222,11 +2315,10 @@ class MallardEngine:
         """``data`` as a DataFrame. A DataFrame passes through as is;
         Arrow, pandas or row data is ingested with ``createDataFrame``
         (Spark 4 reads a ``pa.Table`` through Arrow directly, no
-        ``to_pandas()`` driver copy) and pinned lazily with
-        :func:`pin_driver_rows`."""
+        ``to_pandas()`` driver copy)."""
         if isinstance(data, DataFrame):
             return data
-        return pin_driver_rows(self.spark.createDataFrame(data))
+        return self.spark.createDataFrame(data)
 
     def _snapshot_view_deps(self, view: str) -> None:
         """Record which registered tables the view's definition
@@ -2353,59 +2445,43 @@ class MallardEngine:
         paren-aware) — DuckDB's ``conn.sql`` executes multi-statement
         scripts and answers the LAST statement's relation, so wire
         tickets may carry whole setup scripts."""
-        parts = split_top_level(sql, ";")
+        # a fragment that is only comments/whitespace ("...; -- done")
+        # is not a statement — DuckDB ignores it too
+        return [
+            s.strip() for s in split_top_level(sql, ";")
+            if classify(s).start < len(s)
+        ]
 
-        def has_code(s: str) -> bool:
-            # a fragment that is only comments/whitespace ("...; --
-            # done") is not a statement — DuckDB ignores it too
-            mask = code_mask(s)
-            return any(mask[i] and c not in " \t\r\n" for i, c in enumerate(s))
+    def run_statement(self, stmt: str) -> str | DataFrame:
+        """Run one statement through the handler of its kind
+        (:func:`classify`): DDL, DML and COPY answer a status string
+        (DML with RETURNING, the affected rows), anything else goes to
+        :meth:`sql`. A query's relation is analyzed, not executed, so a
+        discarded non-final query still surfaces its analysis errors
+        (DuckDB discards non-final results too)."""
+        st = classify(stmt)
+        if st.kind in _STATUS_KINDS:
+            return getattr(self, self._HANDLERS[st.kind])(stmt[st.start:])
+        return self.sql(stmt[st.start:])
 
-        return [s.strip() for s in parts if s.strip() and has_code(s)]
-
-    def run_statement(self, stmt: str) -> None:
-        """Execute one NON-FINAL script statement for its side
-        effects: DDL/DML/COPY dispatch to their routers. A bare query
-        is ANALYZED but not executed — its relation would be
-        discarded (DuckDB does the same with non-final results), but
-        analysis errors (missing table, bad column) still surface
-        like they would on the reference instead of being silently
-        swallowed."""
-        if self.is_ddl(stmt):
-            self.ddl(stmt)
-        elif self.is_dml(stmt):
-            self.dml(stmt)
-        elif self.is_copy(stmt):
-            self.copy(stmt)
-        else:
-            self.sql(stmt)  # builds/analyzes the plan; no job runs
-
-    def execute(self, sql: str) -> DataFrame:
-        """Run a (possibly multi-statement) script and return the
-        final statement's result — the reference's ``db_conn.sql``
-        contract. Single statements route exactly like :meth:`sql`;
-        DDL/DML/COPY finals answer the one-row OK status frame the
-        wire path uses."""
+    def run_script(self, sql: str) -> str | DataFrame:
+        """Run a (possibly multi-statement) script and answer its last
+        statement like :meth:`run_statement` — the reference's
+        ``db_conn.sql`` contract, shared by :meth:`execute` and Flight
+        tickets."""
         stmts = self.split_statements(sql) or [sql]
         for pre in stmts[:-1]:
             self.run_statement(pre)
-        last = stmts[-1]
-        if self.is_ddl(last):
-            status = self.ddl(last)
-        elif self.is_dml(last):
-            status = self.dml(last)
-            if isinstance(status, DataFrame):
-                return status  # RETURNING answers the affected rows
-        elif self.is_copy(last):
-            status = self.copy(last)
-        else:
-            return self.sql(last)
-        return self.spark.createDataFrame([(status,)], "status string")
+        return self.run_statement(stmts[-1])
 
-    def copy(self, sql: str) -> str:
-        """Dispatch a COPY statement (either direction —
-        :meth:`copy_to` routes ``COPY ... FROM`` internally)."""
-        return self.copy_to(sql)
+    def execute(self, sql: str) -> DataFrame:
+        """:meth:`run_script`, with a status answered as the one-row
+        ``status`` frame the wire path uses."""
+        out = self.run_script(sql)
+        return self._status_df(out) if isinstance(out, str) else out
+
+    def _status_df(self, status: str) -> DataFrame:
+        return self.spark.createDataFrame([(status,)], "status string")
 
     _UNION_BY_NAME_RE = re.compile(
         r"\bUNION\s+(?:(ALL)\s+)?BY\s+NAME\b", re.IGNORECASE
@@ -2573,7 +2649,7 @@ class MallardEngine:
         r"(?is)^\s*DEALLOCATE\s+(?:PREPARE\s+)?([A-Za-z_]\w*)\s*;?\s*$"
     )
 
-    def _prepare_execute(self, sql: str) -> DataFrame | None:
+    def _prepare_execute(self, sql: str) -> str | DataFrame | None:
         """PREPARE name AS stmt / EXECUTE name(args) / DEALLOCATE.
 
         DuckDB's prepared statements are a plan cache + parameter
@@ -2618,11 +2694,11 @@ class MallardEngine:
                     "supported yet"
                 )
             self._prepared[pm.group(1).lower()] = body
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return "OK"
         dm = self._DEALLOCATE_RE.match(sql)
         if dm:
             self._prepared.pop(dm.group(1).lower(), None)
-            return self.spark.createDataFrame([("OK",)], "status string")
+            return "OK"
         em = self._EXECUTE_RE.match(sql)
         if em and em.group(1).upper() == "IMMEDIATE":
             return None  # Spark's own EXECUTE IMMEDIATE passes through
@@ -2777,16 +2853,14 @@ class MallardEngine:
         "qt" ("my col" INT)``) retry with the backtick conversion
         when the literal spelling fails — same fired-on-failure
         policy as the query path (round 14)."""
-        if "--" in sql or "/*" in sql:
-            sql = strip_comments(sql)  # router grammars are comment-free
+        sql = strip_comments(sql)  # router grammars are comment-free
         return self._retry_dquoted(self._ddl_impl, self._canon_case(sql))
 
     def dml(self, sql: str) -> str:
         """Execute INSERT/UPDATE/DELETE/MERGE (see :meth:`_dml_impl`
         for the supported surface) under the poisoning guard; quoted
         identifiers retry like :meth:`ddl`."""
-        if "--" in sql or "/*" in sql:
-            sql = strip_comments(sql)
+        sql = strip_comments(sql)
         return self._retry_dquoted(self._dml_impl, self._canon_case(sql))
 
     def _canon_case(self, sql: str) -> str:
@@ -2869,6 +2943,8 @@ class MallardEngine:
         """Execute COPY TO/FROM (see :meth:`_copy_to_impl` for the
         supported surface) under the poisoning guard."""
         return self._tx_guard(self._copy_to_impl, sql)
+
+    copy = copy_to  # either direction: COPY ... FROM routes internally
 
     def _expand_macros(self, sql: str) -> str:
         """Inline registered macros — DuckDB's own bind-time
@@ -3001,12 +3077,38 @@ class MallardEngine:
     def sql(
         self, sql: str, *, duckdb_semantics: bool | None = None
     ) -> DataFrame:
-        """Thin wrapper over :meth:`_sql_inner` that resolves the
-        DuckDB-semantics mode (explicit per-call flag > engine opt-in
-        conf > Flight wire ContextVar) and, when on, pins the
-        ContextVar for the call's duration so internal decomposition
-        (UNION BY NAME sides, percent-LIMIT inners, DESCRIBE bodies)
-        inherits it."""
+        """GET: run SQL against this namespace's tables (parity:
+        demo.py:103-106). Unqualified table names are rewritten to the
+        namespaced views, so the SQL a Mallard client sends works as is.
+
+        :func:`classify` reads the statement's kind (leading comments
+        skipped) and the kind picks the handler, which gets the text
+        from the first code token on:
+
+        - SHOW TABLES → ``_show_tables``; SET / RESET →
+          ``_set_statement``; PRAGMA → ``_pragma_statement``;
+        - BEGIN, COMMIT/END, ROLLBACK/ABORT, VACUUM, ANALYZE →
+          ``_tx_statement``;
+        - DESCRIBE, SUMMARIZE, PIVOT, UNPIVOT →
+          ``_describe_statement``, ``_summarize_statement``,
+          ``_pivot_statement``, ``_unpivot_statement``;
+        - PREPARE, EXECUTE, DEALLOCATE → ``_prepare_execute``;
+        - the catalog DDL Spark cannot parse (CREATE/DROP TYPE and
+          SEQUENCE, TRUNCATE, COMMENT ON, EXPORT/IMPORT DATABASE) →
+          :meth:`ddl`, answered as a one-row status frame;
+        - anything else → ``_query``: Spark, then the WITH RECURSIVE
+          fixpoint, the DuckDB-dialect translation and the named
+          refusals (ATTACH, DETACH, CHECKPOINT, INSTALL, LOAD). DDL,
+          DML and COPY sent here go to Spark too; :meth:`execute` and
+          Flight tickets route them to :meth:`ddl`, :meth:`dml` and
+          :meth:`copy`.
+
+        A handler that does not take the statement's form answers
+        None and the statement runs as a query. ``duckdb_semantics``
+        (per-call flag > engine opt-in conf > Flight wire ContextVar),
+        when on, is pinned in the ContextVar for the call, so internal
+        decomposition (UNION BY NAME sides, percent-LIMIT inners,
+        DESCRIBE bodies) inherits it."""
         mode = (
             duckdb_semantics
             if duckdb_semantics is not None
@@ -3020,48 +3122,45 @@ class MallardEngine:
                 _WIRE_DUCKDB.reset(token)
         return self._sql_inner(sql, mode)
 
+    # the handler of each statement kind that has one (see sql()); a
+    # name, so a wrapped method is the one called
+    _HANDLERS: ClassVar[dict[Kind, str]] = {
+        Kind.DDL: "ddl", Kind.CATALOG_DDL: "ddl", Kind.DML: "dml",
+        Kind.COPY: "copy", Kind.SHOW_TABLES: "_show_tables",
+        Kind.SET: "_set_statement", Kind.TX: "_tx_statement",
+        Kind.VACUUM: "_tx_statement", Kind.PRAGMA: "_pragma_statement",
+        Kind.DESCRIBE: "_describe_statement",
+        Kind.SUMMARIZE: "_summarize_statement", Kind.PIVOT: "_pivot_statement",
+        Kind.UNPIVOT: "_unpivot_statement", Kind.PREPARE: "_prepare_execute",
+    }
+
     def _sql_inner(self, sql: str, _duck_mode: bool) -> DataFrame:
-        """GET: run SQL against this namespace's tables.
-
-        Parity: demo.py:103-106 (execute_query). Unqualified table
-        names are rewritten to the namespaced views so the same SQL
-        a Mallard client sends works unchanged.
-
-        ``SHOW TABLES`` answers this namespace's LOGICAL names (the
-        reference's DuckDB shows its catalog, flight_server.py:342 —
-        Spark's raw SHOW TABLES would leak the namespaced physical
-        names and every other namespace's tables). ``DESCRIBE t``
-        passes through the rewriter like any query.
-        """
+        st = classify(sql)
+        sql = sql[st.start:]
         self._refresh_stale_views()
-        if self._tx is not None and self._tx.get("poisoned") and not re.match(
-            r"^\s*(ROLLBACK|ABORT|COMMIT|END\b|BEGIN)", sql, re.IGNORECASE
-        ):
+        if st.kind is not Kind.TX:
             # DuckDB refuses EVERY statement (even SELECT 1) in an
             # aborted transaction except the transaction verbs
             self._tx_check_poisoned()
-        if _SHOW_TABLES_RE.match(sql):
-            return self.spark.createDataFrame(
-                [(n,) for n in self.list_tables()], "name string"
-            )
-        prepared = self._prepare_execute(sql)
-        if prepared is not None:
-            return prepared
-        if re.match(
-            r"(?i)^\s*((EXPORT|IMPORT)\s+DATABASE|TRUNCATE|"
-            r"COMMENT\s+ON|"
-            r"CREATE\s+(OR\s+REPLACE\s+)?(TYPE|(TEMP(ORARY)?\s+)?"
-            r"SEQUENCE)|DROP\s+(TYPE|SEQUENCE))\b",
-            sql,
-        ):
-            # session-catalog DDL Spark's parser has no grammar for
-            # (EXPORT/IMPORT DATABASE round 10; CREATE/DROP TYPE and
-            # SEQUENCE round 11): route to the DDL dispatcher so a
-            # GET ticket carrying them works like on the reference;
-            # unparseable variants get the router's NAMED errors
-            return self.spark.createDataFrame(
-                [(self.ddl(sql),)], "status string"
-            )
+        name = (
+            None if st.kind in (Kind.DDL, Kind.DML, Kind.COPY)
+            else self._HANDLERS.get(st.kind)
+        )
+        out = getattr(self, name)(sql) if name else None
+        if out is None:
+            return self._query(sql, st, _duck_mode)
+        return self._status_df(out) if isinstance(out, str) else out
+
+    def _show_tables(self, sql: str) -> DataFrame:
+        # this namespace's LOGICAL names (the reference's DuckDB shows
+        # its catalog, flight_server.py:342 — Spark's raw SHOW TABLES
+        # would leak the namespaced physical names and every other
+        # namespace's tables)
+        return self.spark.createDataFrame(
+            [(n,) for n in self.list_tables()], "name string"
+        )
+
+    def _set_statement(self, sql: str) -> str | None:
         sm2 = re.match(
             # DuckDB session-tuning SET/RESET (SET threads = 8,
             # SET memory_limit TO '2GB', RESET threads): the reference
@@ -3082,19 +3181,22 @@ class MallardEngine:
             sql, re.IGNORECASE,
         )
         sm2_name = sm2 and (sm2.group("sname") or sm2.group("rname"))
-        if sm2_name and sm2_name.lower() in _TUNING_PRAGMAS:
-            # execution stays a no-op, but the VALUE is remembered so
-            # current_setting() answers it back like DuckDB (round 14)
-            if sm2.group("sname"):
-                self._settings[sm2_name.lower()] = sm2.group("sval").strip()
-            else:
-                self._settings.pop(sm2_name.lower(), None)
-            logging.getLogger(__name__).info(
-                "SET/RESET %s ignored: engine-tuning setting has no "
-                "effect on a Spark session (use Spark confs)",
-                sm2_name,
-            )
-            return self.spark.createDataFrame([("OK",)], "status string")
+        if not sm2_name or sm2_name.lower() not in _TUNING_PRAGMAS:
+            return None
+        # execution stays a no-op, but the VALUE is remembered so
+        # current_setting() answers it back like DuckDB (round 14)
+        if sm2.group("sname"):
+            self._settings[sm2_name.lower()] = sm2.group("sval").strip()
+        else:
+            self._settings.pop(sm2_name.lower(), None)
+        logging.getLogger(__name__).info(
+            "SET/RESET %s ignored: engine-tuning setting has no "
+            "effect on a Spark session (use Spark confs)",
+            sm2_name,
+        )
+        return "OK"
+
+    def _tx_statement(self, sql: str) -> str | None:
         tx = re.match(
             r"^\s*(?P<verb>BEGIN(?:\s+TRANSACTION)?|COMMIT|"
             r"END(?:\s+TRANSACTION)?|ROLLBACK|ABORT|"
@@ -3102,73 +3204,68 @@ class MallardEngine:
             r"(?:\s+(?P<tbl>[A-Za-z_]\w*))?\s*;?\s*$",
             sql, re.IGNORECASE,
         )
-        if tx:
-            verb = " ".join(tx.group("verb").upper().split())
-            if verb in ("ROLLBACK", "ABORT"):
-                # round 9: real rollback via the session-catalog
-                # snapshot (see _begin) — deferred warehouse effects
-                # are discarded, shadows dropped
-                self._rollback()
-                return self.spark.createDataFrame(
-                    [("OK",)], "status string"
-                )
-            if verb.startswith("BEGIN"):
-                self._begin()
-                return self.spark.createDataFrame(
-                    [("OK",)], "status string"
-                )
-            if verb.startswith(("COMMIT", "END")):
-                self._commit()
-                return self.spark.createDataFrame(
-                    [("OK",)], "status string"
-                )
-            if verb.startswith("VACUUM"):
-                # VACUUM: DuckDB's own VACUUM is essentially a no-op.
-                logging.getLogger(__name__).info(
-                    "%s accepted as a no-op", verb,
-                )
-                if not verb.endswith("ANALYZE"):
-                    return self.spark.createDataFrame(
-                        [("OK",)], "status string"
-                    )
-            # ANALYZE [table] / VACUUM ANALYZE: recompute optimizer
-            # statistics — REAL work for warehouse tables (Spark's
-            # ANALYZE TABLE), a no-op for session views (Spark derives
-            # their stats from the plan)
-            targets = (
-                [tx.group("tbl")] if tx.group("tbl") else
-                sorted(self._persistent)
+        if not tx:
+            return None
+        verb = " ".join(tx.group("verb").upper().split())
+        if verb in ("ROLLBACK", "ABORT"):
+            # round 9: real rollback via the session-catalog
+            # snapshot (see _begin) — deferred warehouse effects
+            # are discarded, shadows dropped
+            self._rollback()
+            return "OK"
+        if verb.startswith("BEGIN"):
+            self._begin()
+            return "OK"
+        if verb.startswith(("COMMIT", "END")):
+            self._commit()
+            return "OK"
+        if verb.startswith("VACUUM"):
+            # VACUUM: DuckDB's own VACUUM is essentially a no-op.
+            logging.getLogger(__name__).info(
+                "%s accepted as a no-op", verb,
             )
-            for t in targets:
-                if t in self._persistent:
-                    self.spark.sql(
-                        f"ANALYZE TABLE {self._qualified(t)} "
-                        f"COMPUTE STATISTICS"
-                    )
-                elif t not in self._tables:
-                    raise KeyError(
-                        f"ANALYZE: unknown table {t!r} in namespace "
-                        f"{self.namespace!r}"
-                    )
-            return self.spark.createDataFrame([("OK",)], "status string")
-        pm = _PIVOT_RE.match(sql)
-        if pm:
-            return self._pivot_statement(pm)
+            if not verb.endswith("ANALYZE"):
+                return "OK"
+        # ANALYZE [table] / VACUUM ANALYZE: recompute optimizer
+        # statistics — REAL work for warehouse tables (Spark's
+        # ANALYZE TABLE), a no-op for session views (Spark derives
+        # their stats from the plan)
+        targets = (
+            [tx.group("tbl")] if tx.group("tbl") else
+            sorted(self._persistent)
+        )
+        for t in targets:
+            if t in self._persistent:
+                self.spark.sql(
+                    f"ANALYZE TABLE {self._qualified(t)} "
+                    f"COMPUTE STATISTICS"
+                )
+            elif t not in self._tables:
+                raise KeyError(
+                    f"ANALYZE: unknown table {t!r} in namespace "
+                    f"{self.namespace!r}"
+                )
+        return "OK"
+
+    def _unpivot_statement(self, sql: str) -> DataFrame | None:
         um = _UNPIVOT_RE.match(sql)
-        if um:
-            # DuckDB UNPIVOT ... INTO NAME/VALUE → Spark's native
-            # UNPIVOT(value FOR name IN (cols)); identical output
-            # shape and ordering (value-checked in tests)
-            stmt = (
-                f"SELECT * FROM {um.group('src')} __u "
-                f"UNPIVOT ({um.group('value')} FOR {um.group('name')} "
-                f"IN ({um.group('cols')}))"
-            )
-            if um.group("ord"):
-                stmt += f" ORDER BY {um.group('ord')}"
-            if um.group("lim"):
-                stmt += f" LIMIT {um.group('lim')}"
-            return self.sql(stmt)
+        if not um:
+            return None
+        # DuckDB UNPIVOT ... INTO NAME/VALUE → Spark's native
+        # UNPIVOT(value FOR name IN (cols)); identical output
+        # shape and ordering (value-checked in tests)
+        stmt = (
+            f"SELECT * FROM {um.group('src')} __u "
+            f"UNPIVOT ({um.group('value')} FOR {um.group('name')} "
+            f"IN ({um.group('cols')}))"
+        )
+        if um.group("ord"):
+            stmt += f" ORDER BY {um.group('ord')}"
+        if um.group("lim"):
+            stmt += f" LIMIT {um.group('lim')}"
+        return self.sql(stmt)
+
+    def _describe_statement(self, sql: str) -> DataFrame | None:
         dm = re.match(
             r"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?"
             r"(?P<name>[A-Za-z_]\w*)\s*;?\s*$",
@@ -3201,6 +3298,37 @@ class MallardEngine:
             return self.spark.createDataFrame(
                 rows, "col_name string, data_type string, comment string"
             )
+        dm = re.match(r"^\s*DESCRIBE\s+(SELECT|WITH|FROM)\b", sql, re.IGNORECASE)
+        if not dm:
+            return None
+        # DuckDB's DESCRIBE <query> answers its 6-column relation
+        # (column_name, column_type, null, key, default, extra)
+        # with DUCKDB type names — round 13; the earlier Spark
+        # `DESCRIBE QUERY` delegation answered Spark's 3-column
+        # shape, which a migrating client reads by name. Analyze
+        # the query (no execution) and map each field's type.
+        schema = self.sql(sql[dm.start(1):]).schema
+        rows = [
+            (
+                f.name,
+                _duck_type_name(f.dataType),
+                # DuckDB 1.0's DESCRIBE <query> answers 'YES' in
+                # the null column for EVERY result column —
+                # verified live, including constant projections
+                # (round 14, ADVICE r13): emit it unconditionally
+                # rather than Spark's per-field nullability
+                "YES",
+                None, None, None,
+            )
+            for f in schema.fields
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "column_name string, column_type string, null string, "
+            "key string, default string, extra string",
+        )
+
+    def _pragma_statement(self, sql: str) -> str | DataFrame | None:
         pm2 = re.match(
             # both PRAGMA forms: call `PRAGMA p('arg')` and assignment
             # `PRAGMA p=value` (DuckDB's primary syntax)
@@ -3209,71 +3337,45 @@ class MallardEngine:
             sql,
             re.IGNORECASE,
         )
-        if pm2:
-            # the PRAGMAs DuckDB clients actually read; the rest get
-            # a named refusal instead of a parse error
-            p = pm2.group("p").lower()
-            if p == "table_info" and pm2.group("arg"):
-                return self.sql(f"DESCRIBE {pm2.group('arg')}")
-            if p == "show_tables":
-                return self.sql("SHOW TABLES")
-            if p == "version":
-                return self.spark.createDataFrame(
-                    [(f"spark-{self.spark.version}",)], "library_version string"
-                )
-            if p == "database_list":
-                return self.spark.createDataFrame(
-                    [(0, self.namespace, None)], "seq long, name string, file string"
-                )
-            if p in _TUNING_PRAGMAS:
-                # engine-tuning / session PRAGMAs succeed silently on
-                # the reference (DuckDB applies them); a setup script
-                # containing `PRAGMA threads=4; SELECT ...` must not
-                # fail the whole ticket here. Logged no-op (round-5
-                # ADVICE) — the Spark-side knobs are session confs.
-                # The value is remembered for current_setting().
-                val = pm2.group("pval") or pm2.group("arg")
-                if val:
-                    self._settings[p] = val.strip()
-                logging.getLogger(__name__).info(
-                    "PRAGMA %s ignored: engine-tuning pragma has no "
-                    "effect on a Spark session (use Spark confs)", p
-                )
-                return self.spark.createDataFrame([("OK",)], "status string")
-            raise NotImplementedError(
-                f"PRAGMA {p} has no Spark equivalent (supported: "
-                "table_info, show_tables, version, database_list; "
-                "tuning pragmas are accepted as logged no-ops)"
-            )
-        dm = re.match(r"^\s*DESCRIBE\s+(SELECT|WITH|FROM)\b", sql, re.IGNORECASE)
-        if dm:
-            # DuckDB's DESCRIBE <query> answers its 6-column relation
-            # (column_name, column_type, null, key, default, extra)
-            # with DUCKDB type names — round 13; the earlier Spark
-            # `DESCRIBE QUERY` delegation answered Spark's 3-column
-            # shape, which a migrating client reads by name. Analyze
-            # the query (no execution) and map each field's type.
-            inner = re.sub(r"^\s*DESCRIBE\s+", "", sql, count=1)
-            schema = self.sql(inner).schema
-            rows = [
-                (
-                    f.name,
-                    _duck_type_name(f.dataType),
-                    # DuckDB 1.0's DESCRIBE <query> answers 'YES' in
-                    # the null column for EVERY result column —
-                    # verified live, including constant projections
-                    # (round 14, ADVICE r13): emit it unconditionally
-                    # rather than Spark's per-field nullability
-                    "YES",
-                    None, None, None,
-                )
-                for f in schema.fields
-            ]
+        if not pm2:
+            return None
+        # the PRAGMAs DuckDB clients actually read; the rest get
+        # a named refusal instead of a parse error
+        p = pm2.group("p").lower()
+        if p == "table_info" and pm2.group("arg"):
+            return self.sql(f"DESCRIBE {pm2.group('arg')}")
+        if p == "show_tables":
+            return self.sql("SHOW TABLES")
+        if p == "version":
             return self.spark.createDataFrame(
-                rows,
-                "column_name string, column_type string, null string, "
-                "key string, default string, extra string",
+                [(f"spark-{self.spark.version}",)], "library_version string"
             )
+        if p == "database_list":
+            return self.spark.createDataFrame(
+                [(0, self.namespace, None)], "seq long, name string, file string"
+            )
+        if p in _TUNING_PRAGMAS:
+            # engine-tuning / session PRAGMAs succeed silently on
+            # the reference (DuckDB applies them); a setup script
+            # containing `PRAGMA threads=4; SELECT ...` must not
+            # fail the whole ticket here. Logged no-op (round-5
+            # ADVICE) — the Spark-side knobs are session confs.
+            # The value is remembered for current_setting().
+            val = pm2.group("pval") or pm2.group("arg")
+            if val:
+                self._settings[p] = val.strip()
+            logging.getLogger(__name__).info(
+                "PRAGMA %s ignored: engine-tuning pragma has no "
+                "effect on a Spark session (use Spark confs)", p
+            )
+            return "OK"
+        raise NotImplementedError(
+            f"PRAGMA {p} has no Spark equivalent (supported: "
+            "table_info, show_tables, version, database_list; "
+            "tuning pragmas are accepted as logged no-ops)"
+        )
+
+    def _summarize_statement(self, sql: str) -> DataFrame | None:
         sm = re.match(r"^\s*SUMMARIZE\s+(?P<q>(SELECT|WITH|FROM)\b.*)$",
                       sql, re.IGNORECASE | re.DOTALL)
         if sm:
@@ -3286,6 +3388,9 @@ class MallardEngine:
             # min/quartiles/max per column); the column layout differs
             # from DuckDB's, which a porting client reads, not joins.
             return self.table(m.group("name")).summary()
+        return None
+
+    def _query(self, sql: str, st: Statement, _duck_mode: bool) -> DataFrame:
         if self._macros:
             sql = self._expand_macros(sql)
         if self._sequences and _SEQ_CALL_RE.search(sql):
@@ -3491,9 +3596,7 @@ class MallardEngine:
             _is_union_err = (
                 "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in str(first_err)
             )
-            if _is_union_err or re.match(
-                r"^\s*WITH\s+RECURSIVE\b", out, re.IGNORECASE
-            ):
+            if _is_union_err or st.kind is Kind.RECURSIVE:
                 # WITH RECURSIVE ... UNION ALL runs natively on Spark 4
                 # (value-checked vs DuckDB in tests/test_dialect.py).
                 # The deduplicating UNION form CANNOT be mechanically
@@ -3508,21 +3611,7 @@ class MallardEngine:
                 # WITH RECURSIVE statement gets a fixpoint attempt —
                 # a None (shape not covered) re-raises the ORIGINAL
                 # error unless it was the dedup-UNION one.
-                if _is_union_err:
-                    fixed = self._recursive_union_fixpoint(out)
-                else:
-                    # the statement may carry DIALECT syntax the
-                    # fixpoint's inner spark.sql cannot parse — any
-                    # Spark-level failure here falls through to the
-                    # translator (which re-runs the fixpoint on the
-                    # translated text); engine-level errors
-                    # (no-fixpoint cap, arm arity) still propagate
-                    try:
-                        fixed = self._recursive_union_fixpoint(out)
-                    except (ValueError, NotImplementedError):
-                        raise
-                    except Exception:
-                        fixed = None
+                fixed = self._fixpoint(out, first_err)
                 if fixed is not None:
                     return fixed
                 if _is_union_err:
@@ -3536,35 +3625,14 @@ class MallardEngine:
                         "walks: dedup_clusters (connected components) "
                         "and graph_pagerank (iterative rank)."
                     ) from first_err
-            um = re.match(
-                r"(?i)^\s*(ATTACH|DETACH|"
-                r"FORCE\s+CHECKPOINT|FORCE\s+INSTALL|"
-                r"CHECKPOINT|INSTALL|LOAD)\b",
-                out,
-            )
-            if um:
+            if st.kind is Kind.REFUSED:
                 # DuckDB session/storage statements with no Spark
-                # equivalent — name the alternative instead of leaking
+                # equivalent (FORCE CHECKPOINT / INSTALL get the same
+                # guidance) — name the alternative instead of leaking
                 # a parse error
-                verb = " ".join(um.group(1).upper().split())
-                verb = verb.removeprefix("FORCE ")  # same guidance
-                hints = {
-                    "ATTACH": "each namespace IS a catalog — connect a "
-                              "second server/engine instead",
-                    "DETACH": "each namespace IS a catalog",
-                    "CHECKPOINT": "Spark tables persist via "
-                                  "put(persist=True)/CREATE TABLE AS",
-                    "INSTALL": "extensions do not apply to a Spark engine",
-                    "LOAD": "extensions do not apply to a Spark engine",
-                }
-                hint = hints.get(
-                    verb,
-                    "Spark has no user-defined type catalog — spell the "
-                    "shape directly in CREATE TABLE (STRUCT/LIST/MAP "
-                    "column types are supported)",
-                )
                 raise NotImplementedError(
-                    f"{verb} is not supported on this engine: {hint}"
+                    f"{st.verb} is not supported on this engine: "
+                    f"{_REFUSED_HINTS[st.verb]}"
                 ) from first_err
             # DuckDB-dialect fallback: the reference's engine IS
             # DuckDB, so clients send DuckDB SQL (`//`, QUALIFY,
@@ -3580,12 +3648,9 @@ class MallardEngine:
                 try:
                     return self.spark.sql(translated)
                 except Exception as retry_err:
-                    retry_union = (
+                    if st.kind is not Kind.RECURSIVE and (
                         "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE"
-                        in str(retry_err)
-                    )
-                    if not retry_union and not re.match(
-                        r"^\s*WITH\s+RECURSIVE\b", translated, re.IGNORECASE
+                        not in str(retry_err)
                     ):
                         raise
                     # dialect syntax AND a recursive CTE (dedup
@@ -3593,17 +3658,7 @@ class MallardEngine:
                     # run the fixpoint on the TRANSLATED text
                     # (resolve never resubmits `out` itself, whose
                     # fixpoint already ran above)
-                    if retry_union:
-                        fixed = self._recursive_union_fixpoint(translated)
-                    else:
-                        try:
-                            fixed = self._recursive_union_fixpoint(
-                                translated
-                            )
-                        except (ValueError, NotImplementedError):
-                            raise
-                        except Exception:
-                            fixed = None
+                    fixed = self._fixpoint(translated, retry_err)
                     if fixed is None:
                         raise retry_err
                     return fixed
@@ -3842,6 +3897,24 @@ class MallardEngine:
                 # column, a type mismatch)
                 raise resolved_err from first_err
             raise first_err
+
+    def _fixpoint(self, sql: str, err: Exception) -> DataFrame | None:
+        """:meth:`_recursive_union_fixpoint` for a statement Spark
+        failed with ``err``."""
+        try:
+            return self._recursive_union_fixpoint(sql)
+        except (ValueError, NotImplementedError):
+            raise
+        except Exception:
+            # after the dedup-UNION error every failure propagates;
+            # otherwise the statement may carry DIALECT syntax the
+            # fixpoint's inner spark.sql cannot parse — any Spark-level
+            # failure falls through to the translator (which re-runs
+            # the fixpoint on the translated text); engine-level errors
+            # (no-fixpoint cap, arm arity) still propagate
+            if "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in str(err):
+                raise
+            return None
 
     def _recursive_union_fixpoint(self, sql: str) -> DataFrame | None:
         """DuckDB's deduplicating ``WITH RECURSIVE name AS (base
@@ -4322,12 +4395,10 @@ class MallardEngine:
         cover: expression arguments, multiple COLUMNS in one item,
         COLUMNS outside select list/WHERE, non-SELECT statements.
         """
-        if not re.match(r"^\s*SELECT\b", sql, re.IGNORECASE):
-            return None
+        sm = re.match(r"^\s*SELECT\b\s*(DISTINCT\s+)?", sql, re.IGNORECASE)
         f = find_kw(sql, "FROM", at_depth=0)
-        if f < 0:
+        if not sm or f < 0:
             return None
-        sm = re.match(r"^\s*SELECT\s+(DISTINCT\s+)?", sql, re.IGNORECASE)
         select_list = sql[sm.end() : f]
         tail = sql[f:]
         # FROM clause text = up to the first depth-0 clause keyword
@@ -5313,7 +5384,7 @@ class MallardEngine:
         self._csv_views[key] = name
         return name
 
-    def _pivot_statement(self, m: "re.Match") -> DataFrame:
+    def _pivot_statement(self, sql: str) -> DataFrame | None:
         """DuckDB ``PIVOT src ON col USING aggs [GROUP BY ...]`` with
         AUTOMATIC pivot-value detection — the engine runs the distinct
         probe DuckDB runs internally, then builds Spark's PIVOT-IN
@@ -5324,6 +5395,9 @@ class MallardEngine:
         >1000-value pivot column, which errors rather than exploding
         the schema).
         """
+        m = _PIVOT_RE.match(sql)
+        if not m:
+            return None
         src, on = m.group("src"), m.group("on")
         frm = src
         vals = [
@@ -5467,14 +5541,6 @@ class MallardEngine:
         )
 
     # -- DDL ----------------------------------------------------------
-    @staticmethod
-    def is_ddl(sql: str) -> bool:
-        """Parity: flight_server.py:354-355 (_is_ddl_statement).
-        Leading comments are skipped (round 15)."""
-        if "--" in sql or "/*" in sql:
-            sql = strip_comments(sql)
-        return bool(_DDL_RE.match(sql))
-
     # -- sequences (round 11) ------------------------------------------
     #
     # DuckDB CREATE SEQUENCE / nextval() / currval() (the reference
@@ -7079,14 +7145,6 @@ class MallardEngine:
                     f"(...) per table for option-faithful exports"
                 )
             return self._export_database(d, fmt, csv_opts)
-        if re.match(r"(?i)^\s*(EXPORT|IMPORT)\s+DATABASE\b", sql):
-            # EXPORT/IMPORT-shaped but unparseable: name the grammar
-            # instead of leaking Spark's parse error on fall-through
-            raise ValueError(
-                f"cannot parse {sql.strip()[:80]!r} — expected "
-                f"EXPORT DATABASE '<dir>' [(FORMAT PARQUET|CSV)] or "
-                f"IMPORT DATABASE '<dir>'"
-            )
         m = _CREATE_SEQ_RE.match(sql)
         if m:
             return self._ddl_create_sequence(m)
@@ -7096,28 +7154,21 @@ class MallardEngine:
         m = _COMMENT_ON_RE.match(sql)
         if m:
             return self._ddl_comment_on(m)
-        if re.match(r"(?i)^\s*COMMENT\s+ON\b", sql):
-            raise NotImplementedError(
-                f"cannot handle {sql.strip()[:80]!r} — COMMENT ON "
-                f"TABLE|VIEW|COLUMN <name>[.col] IS '<text>'|NULL is "
-                f"supported; other object classes are not"
-            )
         m = _CREATE_TYPE_RE.match(sql)
         if m:
             return self._ddl_create_type(m)
         m = _DROP_TYPE_RE.match(sql)
         if m:
             return self._ddl_drop_type(m)
-        if re.match(r"(?i)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?TYPE\b", sql):
-            # CREATE OR REPLACE TYPE / IF NOT EXISTS / unparseable
-            # member list: DuckDB 1.0's parser rejects these spellings
-            # too — name the accepted grammar instead of leaking a
-            # Spark parse error
-            raise ValueError(
-                f"cannot parse {sql.strip()[:80]!r} — expected "
-                f"CREATE TYPE <name> AS ENUM ('v', ...) or CREATE "
-                f"TYPE <name> AS <type> (DuckDB 1.0 has no OR "
-                f"REPLACE / IF NOT EXISTS forms for types)"
+        grammar = _CATALOG_GRAMMARS.get(classify(sql).verb)
+        if grammar:
+            # a catalog verb its grammar above did not parse (CREATE
+            # OR REPLACE TYPE / IF NOT EXISTS, which DuckDB 1.0's
+            # parser rejects too, an unparseable member list): name
+            # the accepted grammar instead of leaking Spark's parse
+            # error on fall-through
+            raise grammar[0](
+                f"cannot parse {sql.strip()[:80]!r} — expected {grammar[1]}"
             )
         m = _CREATE_AS_RE.match(sql)
         if m:
@@ -7392,30 +7443,6 @@ class MallardEngine:
         return "OK"
 
     # -- DML ----------------------------------------------------------
-    @staticmethod
-    def is_dml(sql: str) -> bool:
-        """INSERT / UPDATE / DELETE / MERGE statement?
-
-        Parity: the reference passes any SQL a ticket carries straight
-        to DuckDB (flight_server.py:342-352), which executes mutation
-        SQL natively; on Spark these need routing (see :meth:`dml`).
-        """
-        if "--" in sql or "/*" in sql:
-            sql = strip_comments(sql)
-        return bool(_DML_RE.match(sql))
-
-    @staticmethod
-    def is_copy(sql: str) -> bool:
-        """``COPY <table|(query)> TO 'path'`` or ``COPY <table> FROM
-        'path'`` statement?
-
-        Parity: the reference passes COPY tickets straight to DuckDB
-        (flight_server.py:342-352), whose clients use them to export
-        results and ingest files."""
-        if "--" in sql or "/*" in sql:
-            sql = strip_comments(sql)
-        return bool(_COPY_RE.match(sql) or _COPY_FROM_RE.match(sql))
-
     def _copy_to_impl(self, sql: str) -> str:
         """Execute ``COPY ... TO 'path'`` and return "OK" (same
         answer shape as :meth:`ddl`).
@@ -7921,9 +7948,8 @@ class MallardEngine:
         any table size.
         """
         returning: str | None = None
-        if re.match(
-            r"^\s*(INSERT|UPDATE|DELETE)\b", sql, re.IGNORECASE
-        ):
+        verb = classify(sql).verb
+        if verb in ("INSERT", "UPDATE", "DELETE"):
             r = find_kw(sql, "RETURNING", at_depth=0)
             if r >= 0:
                 # RETURNING (round 11): split the clause off here so
@@ -7998,7 +8024,7 @@ class MallardEngine:
                 returning=returning,
             )
         oc = _split_on_conflict(sql)
-        if oc is not None and re.match(r"^\s*INSERT\b", sql, re.IGNORECASE):
+        if oc is not None and verb == "INSERT":
             return self._dml_insert_conflict(
                 oc[0], oc[1], returning=returning
             )
@@ -8059,7 +8085,7 @@ class MallardEngine:
             return self._dml_delete(
                 m.group("name"), where, alias=alias, returning=returning
             )
-        if re.match(r"^\s*MERGE\b", sql, re.IGNORECASE):
+        if verb == "MERGE":
             from mallard_spark.merge_sql import execute_merge
 
             return execute_merge(self, sql)
@@ -9282,7 +9308,7 @@ class MallardEngine:
         """
         if command in self._exchangers:
             return self._exchangers[command].apply(self._to_df(data))
-        if _is_sql_command(command):
+        if classify(command).kind is not Kind.OTHER:
             # execute() routes DDL/DML/COPY to their executors (OK
             # status frame) and queries to sql(), and runs
             # multi-statement scripts like the reference's conn.sql
@@ -9425,14 +9451,6 @@ def stream_df_arrow(
             shutil.rmtree(tmp, ignore_errors=True)
 
     return dataset.schema, gen()
-
-
-_SQL_KEYWORDS = ("SELECT", "INSERT", "UPDATE", "DELETE", "CREATE", "DROP", "ALTER", "WITH")
-
-
-def _is_sql_command(command: str) -> bool:
-    """Parity: flight_server.py:320-331 (_is_sql_query)."""
-    return command.upper().lstrip().startswith(_SQL_KEYWORDS)
 
 
 # keywords that may directly follow an unaliased FROM/JOIN table

@@ -166,35 +166,14 @@ class SparkFlightServer(flight.FlightServerBase):
         return self._wire_pinned(self._do_get_inner, context, ticket)
 
     def _do_get_inner(self, context, ticket: flight.Ticket):
-        sql = ticket.ticket.decode("utf-8")
-        stmts = self.engine.split_statements(sql)
-        if len(stmts) > 1:
-            # DuckDB's conn.sql runs whole scripts and answers the
-            # last statement; mirror that for setup-script tickets
-            for pre in stmts[:-1]:
-                self.engine.run_statement(pre)
-            sql = stmts[-1]
-        if self.engine.is_ddl(sql):
-            # Parity: flight_server.py:357-359 — run DDL, answer OK.
-            status = self.engine.ddl(sql)
-            return flight.RecordBatchStream(pa.table({"status": [status]}))
-        if self.engine.is_dml(sql):
-            # Parity: flight_server.py:342-352 passes mutation SQL
-            # straight to DuckDB; Spark needs the engine's DML router
-            # (INSERT appends / UPDATE-DELETE rewrites). Same one-row
-            # OK answer shape as DDL — except RETURNING (round 11),
-            # which answers the affected rows like DuckDB does
-            status = self.engine.dml(sql)
-            if not isinstance(status, str):
-                schema, batches = self.engine.stream_arrow(status)
-                return flight.GeneratorStream(schema, batches)
-            return flight.RecordBatchStream(pa.table({"status": [status]}))
-        if self.engine.is_copy(sql):
-            # COPY ... TO 'path' — DuckDB clients export query results
-            # through tickets; single-file semantics in engine.copy_to
-            status = self.engine.copy_to(sql)
-            return flight.RecordBatchStream(pa.table({"status": [status]}))
-        schema, batches = self.engine.stream_arrow(sql)
+        # Parity: flight_server.py:342-359 — DuckDB's conn.sql runs
+        # the whole script and answers its last statement; a DDL, DML
+        # or COPY status answers one OK row without a Spark job (DML
+        # RETURNING answers the affected rows like DuckDB does)
+        out = self.engine.run_script(ticket.ticket.decode("utf-8"))
+        if isinstance(out, str):
+            return flight.RecordBatchStream(pa.table({"status": [out]}))
+        schema, batches = self.engine.stream_arrow(out)
         return flight.GeneratorStream(schema, batches)
 
     # -- PUT: Arrow stream → named table -------------------------------
@@ -277,9 +256,9 @@ class SparkFlightServer(flight.FlightServerBase):
             out_df = self.engine.exchange(command, in_df)
             self._stream_df(out_df, writer)
             return
-        from mallard_spark.engine import _is_sql_command
+        from mallard_spark.engine import Kind, classify
 
-        if _is_sql_command(command):
+        if classify(command).kind is not Kind.OTHER:
             # Parity: flight_server.py:333-340 — SQL via exchange.
             # engine.exchange routes DDL/DML to the ddl()/dml()
             # executors (answering the OK status frame) and plain

@@ -5,7 +5,7 @@ demo.py:508-540 of /root/reference."""
 import pyarrow as pa
 import pytest
 
-from mallard_spark.engine import MallardEngine
+from mallard_spark.engine import Kind, MallardEngine, classify
 from mallard_spark.exchange import AddProcessedExchanger, Exchanger
 
 
@@ -224,9 +224,9 @@ def test_ddl_create_drop_alter(engines):
     assert eng1.sql("SELECT COUNT(*) AS n FROM derived2").collect()[0].n == 4
     assert eng1.ddl("DROP TABLE derived2") == "OK"
     assert "derived2" not in eng1.list_tables()
-    assert eng1.is_ddl("CREATE TABLE x AS SELECT 1")
-    assert eng1.is_ddl("  drop table x")
-    assert not eng1.is_ddl("SELECT 1")
+    assert classify("CREATE TABLE x AS SELECT 1").kind is Kind.DDL
+    assert classify("  drop table x") == (Kind.DDL, 2, "DROP")
+    assert classify("SELECT 1").kind is Kind.QUERY
 
 
 def test_persistent_table_survives_new_session(spark):
@@ -244,6 +244,25 @@ def test_persistent_table_survives_new_session(spark):
         assert eng2.sql("SELECT COUNT(*) AS n FROM durable").collect()[0].n == 5
     finally:
         eng.drop("durable")
+
+
+def test_persisted_put_stores_no_blocks(spark):
+    """A persisted PUT of Arrow rows writes them unpinned: the write
+    and a query leave no new entry in Spark's RDD storage (a pinned
+    frame's write stores its rows as blocks that nothing reads)."""
+    eng = MallardEngine(spark, "t_persist_nopin")
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored() -> set[int]:
+        return {info.id() for info in jsc.getRDDStorageInfo()}
+
+    before = stored()
+    eng.put("big", pa.table({"k": list(range(100_000))}), persist=True)
+    try:
+        assert eng.sql("SELECT count(*) AS n FROM big").collect()[0].n == 100_000
+        assert stored() - before == set()
+    finally:
+        eng.drop("big")
 
 
 def test_sql_rewrites_quoted_table_refs(engines):
@@ -357,7 +376,7 @@ def test_merge_upsert_state_parity_duckdb(engines):
     eng1, _ = engines
     eng1.put("mg_t", pa.table({"k": [1, 2, 3], "v": [10, 20, 30]}))
     eng1.put("mg_s", pa.table({"k": [2, 3, 4], "v": [99, 33, 40]}))
-    assert eng1.is_dml("MERGE INTO mg_t USING mg_s ON mg_t.k = mg_s.k")
+    assert classify("MERGE INTO mg_t USING mg_s ON mg_t.k = mg_s.k").kind is Kind.DML
     assert eng1.dml(
         "MERGE INTO mg_t USING mg_s ON mg_t.k = mg_s.k "
         "WHEN MATCHED THEN UPDATE SET v = mg_s.v "
@@ -1663,6 +1682,59 @@ def test_set_tuning_settings_logged_noop(engines):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+_RECURSIVE_DEDUP = (
+    "WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n % 3 + 1 FROM r) "
+    "SELECT n FROM r ORDER BY n"
+)
+
+
+@pytest.mark.parametrize("comment", ["-- lead\n", "/* lead */ "])
+@pytest.mark.parametrize(
+    "script",
+    [
+        "SHOW TABLES",
+        "SET threads = 2",
+        "BEGIN; {c}ROLLBACK",
+        "PRAGMA version",
+        "SUMMARIZE cl_t",
+        "ATTACH 'other.db'",
+        "COPY cl_t TO '{path}'",
+        _RECURSIVE_DEDUP,
+    ],
+)
+def test_comment_led_statement_routes_like_bare_form(
+    spark, tmp_path, script, comment
+):
+    """DuckDB skips comments before a statement, so a migrating client's
+    commented script must route each statement like its bare form: the
+    same answer, or the same error type and message."""
+    eng = MallardEngine(spark, "t_comment_led")
+    eng.put("cl_t", pa.table({"k": [1, 2, 3], "g": ["a", "b", "b"]}))
+
+    def run(c: str, path: str):
+        try:
+            rows = eng.execute(c + script.format(c=c, path=path)).collect()
+            return sorted(tuple(r) for r in rows)
+        except Exception as e:
+            return type(e), str(e)
+
+    bare = run("", str(tmp_path / "bare.csv"))
+    led = run(comment, str(tmp_path / "led.csv"))
+    assert led == bare
+    if script.startswith("COPY"):
+        assert (tmp_path / "led.csv").read_bytes() == (
+            tmp_path / "bare.csv"
+        ).read_bytes()
+
+
+def test_comment_led_set_stores_no_spark_conf(spark):
+    """A comment-led DuckDB tuning SET is the same logged no-op as the
+    bare form, not a Spark conf called ``threads``."""
+    eng = MallardEngine(spark, "t_comment_set")
+    assert eng.execute("-- c\nSET threads = 2").collect()[0].status == "OK"
+    assert spark.conf.get("threads", None) is None
 
 
 def test_copy_options_mapped_or_refused(spark, tmp_path):

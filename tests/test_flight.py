@@ -606,6 +606,22 @@ def test_show_tables_and_describe_over_wire(servers):
     assert {"id", "value"} <= set(desc.column("col_name").to_pylist())
 
 
+def test_comment_led_show_tables_ticket_stays_in_namespace(servers):
+    """A script ticket whose SHOW TABLES follows a comment answers this
+    namespace's logical names only, not Spark's namespaced physical
+    names of every engine on the session."""
+    s1, s2 = servers
+    _put(_client(s2), "other_secret", _sample())
+    _put(_client(s1), "mine_t", _sample())
+    got = _client(s1).do_get(
+        flight.Ticket(b"SELECT 1;\n-- list\nSHOW TABLES")
+    ).read_all()
+    assert got.column_names == ["name"]
+    names = got.column("name").to_pylist()
+    assert sorted(names) == sorted(s1.engine.list_tables())
+    assert "mine_t" in names and "other_secret" not in names
+
+
 def test_copy_to_ticket_over_wire(spark, tmp_path):
     """COPY ... TO 'path' through a do_get ticket — the DuckDB client
     export flow the reference serves by passing the SQL to DuckDB."""

@@ -3,7 +3,7 @@ likely to harbor edge cases: the SQL table-reference rewriter and the
 content-addressed split routing."""
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from mallard_spark.engine import _replace_table_ref
@@ -98,10 +98,13 @@ def test_split_routing_is_total_and_stable(doc_id):
 @settings(max_examples=200, deadline=None)
 def test_split_top_level_roundtrip(parts):
     """Joining split parts with the separator reproduces the input,
-    and splitting quote/paren-free text equals str.split."""
+    and splitting quote/paren/comment-free text equals str.split (a
+    comment opener swallows the commas after it; the explicit cases
+    below check that)."""
     s = ",".join(parts)
     got = split_top_level(s)
     assert ",".join(got) == s
+    assume("--" not in s and "/*" not in s)
     assert got == s.split(",")
 
 
@@ -127,6 +130,9 @@ def test_split_top_level_respects_nesting_and_quotes():
         "a INT",
         " -- x, y\n b INT",
     ]
+    # an unterminated block comment runs to the end, commas included
+    assert split_top_level("/*,0") == ["/*,0"]
+    assert split_top_level("a -- x,y\n,b") == ["a -- x,y\n", "b"]
 
 
 @pytest.mark.parametrize(

@@ -508,6 +508,14 @@ SELECT epoch(TIMESTAMPTZ '2024-01-01 05:00:00+02') AS r
 SELECT timezone('America/New_York', TIMESTAMP '2024-01-01 05:00:00') AS r
 SELECT to_timestamp(1704085200) AS r
 SELECT timestamp '2024-01-01 05:00:00' AT TIME ZONE 'America/New_York' AS r
+-- comment-led statements route like their bare forms (DuckDB skips
+-- leading comments; a line that starts with -- is a corpus comment,
+-- so these lead with a block comment)
+/* hdr */ SELECT g, count(*) AS n FROM t GROUP BY g ORDER BY g
+/* list */ SHOW TABLES
+/* pragma */ PRAGMA version -- novalue
+/* columns */ DESCRIBE t -- novalue
+/* profile */ SUMMARIZE t -- novalue
 """
 
 
@@ -610,8 +618,10 @@ def run_corpus(eng, con, grep: str | None = None, corpus: str | None = None,
                wire: bool = False):
     """Run every corpus statement on BOTH engines; return
     (gaps, statement_count). A gap is a RAW engine error on a
-    DuckDB-legal statement, or (for SELECTs without the -- novalue
-    marker) a VALUE-multiset mismatch."""
+    DuckDB-legal statement, or (for SELECTs and SHOW TABLES without
+    the -- novalue marker) a VALUE-multiset mismatch."""
+    from mallard_spark.sqllex import strip_comments
+
     gaps = []
     n = 0
     for raw in (x.strip() for x in (corpus or CORPUS).strip().splitlines()):
@@ -651,7 +661,9 @@ def run_corpus(eng, con, grep: str | None = None, corpus: str | None = None,
             and status is None
             and duck_ok
             and rows is not None
-            and stmt.upper().startswith(("SELECT", "WITH"))
+            and strip_comments(stmt).lstrip().upper().startswith(
+                ("SELECT", "WITH", "SHOW TABLES")
+            )
         ):
             # rows compare as VALUE MULTISETS (per-row values sorted):
             # column order/naming legitimately diverges (* REPLACE

@@ -378,6 +378,21 @@ CREATE TABLE src (g VARCHAR, k VARCHAR, v INTEGER);
 INSERT INTO src VALUES ('r1', 'a', 1), ('r1', 'b', 2), ('r2', 'a', 3);
 CREATE TABLE a AS PIVOT src ON k USING sum(v) GROUP BY g
 """),
+    ("comment_led_statements", """
+-- schema
+CREATE TABLE a (id INTEGER, v INTEGER);
+/* seed */ INSERT INTO a VALUES (1, 10), (2, 20), (3, 30);
+-- one unit of work
+BEGIN;
+UPDATE a SET v = v + 1 WHERE id = 1;
+/* keep it */ COMMIT;
+-- undo a delete
+BEGIN TRANSACTION;
+DELETE FROM a WHERE id = 2;
+/* changed our mind */ ROLLBACK;
+-- read back
+SELECT id, v FROM a ORDER BY id
+"""),
 ]
 
 
@@ -419,6 +434,7 @@ def run_scripts(spark, grep: str | None = None, scripts=None):
 
     from dialect_probe import _norm
     from mallard_spark.engine import MallardEngine
+    from mallard_spark.sqllex import strip_comments
 
     gaps = []
     n = 0
@@ -527,9 +543,9 @@ def run_scripts(spark, grep: str | None = None, scripts=None):
         # --- final SELECT values (same multiset compare as the
         # SELECT corpus) ---
         last = [s for s in eng.split_statements(script) if s.strip()][-1]
-        if final_rows is not None and last.upper().startswith(
-            ("SELECT", "WITH")
-        ):
+        if final_rows is not None and strip_comments(
+            last
+        ).lstrip().upper().startswith(("SELECT", "WITH")):
             want = con.execute(last).fetchall()
             got_n = sorted(
                 repr(sorted((_norm(v) for v in tuple(r)), key=repr))
