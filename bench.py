@@ -1,13 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark the benched registry queries at $SPARK_GRAFT_SF_DIR
+(default sf0.1).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": <sf>}
+  {"metric": "headline_queries_total_runtime", "value": <headline total
+   sec>, "unit": "sec", "queries": {...}, "streaming": {...},
+   "streaming_total": ..., "iterative": {...}, "iterative_total": ...,
+   "sf": <sf>, "phase_probe": {...}, "phase_probe_post_headline": {...},
+   "phase_probe_post": {...}, "scan_cache": ...}
 
-Queries are executed with the noop sink (full computation, no
-result materialization on the driver) after a small JVM warmup, so
-the numbers measure the plans, not collection overhead.
+Each query is its best of 2 runs through the noop sink (full
+computation, no result materialization on the driver), after a small
+JVM warmup, so the numbers measure the plans, not collection overhead.
+Streaming and iterative queries are reported apart from the headline
+total: their cost is micro-batch or per-round scheduling machinery,
+which has no like-for-like DuckDB batch comparison. The q1 phase probe
+runs before the headline group, after it and at the end, so a slow VM
+phase during the run is labeled in the artifact instead of reading as
+a regression.
 """
 
 from __future__ import annotations
@@ -15,283 +25,57 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q3_bucketed",  # same logical plan, bucketed facts: zero exchanges
-    "q5_local_supplier_volume",
-    "q9_product_profit",
-    "q18_large_volume_customer",
-    "running_totals",
-    "ev_hourly_agg",
-    "ev_sessionize",
-    "ev_asof_join",
-    "ev_zscore_anomalies",
-    "quantiles_by_flag",
-    "text_token_stats",
-    "text_chunking",
-    "decontaminate_overlap",
-    "decontaminate_bloom",
-    "mix_sources",
-    "dedup_minhash_lsh",
-    "dedup_substring_windows",
-    "url_canonicalize_dedup",
-    "quality_perplexity_proxy",
-    "knn_bruteforce",
-    "knn_lsh_multiprobe",
-    "knn_ivfpq",
-    "exchange_add_processed",
-]
-
-# Iterative / floor-bound ops, reported under their own key like the
-# streaming set: each is a driver LOOP of materialized rounds whose
-# sf0.1 working set is tiny (bpe_train_merges trains on ~200
-# word-symbol rows; knn_pq_trained Lloyd-iterates 80k subvectors), so
-# the measured time is ~20 jobs of fixed scheduler/materialize floor,
-# not plan cost — the same single-row-group floor documented in
-# PLANS.md, multiplied by rounds. A single-process engine running the
-# oracle SQL in-memory has no such floor at this scale and the
-# comparison inverts at real data sizes (the per-round working set
-# grows; the floor doesn't). Kept out of the ratio-bearing headline
-# total for the same reason streaming is; tracked here so
-# round-over-round regressions stay visible.
-ITERATIVE = [
-    "bpe_train_merges",
-    "knn_pq_trained",
-    "mm_phash_dedup",
-]
-
-# Streaming ops (VERDICT r3 #7): timed the same way — the stream runs
-# to completion inside fn() (processAllAvailable over the file
-# source) — but reported under a separate key: their cost is
-# micro-batch + state-store machinery, which has no meaningful
-# apples-to-apples DuckDB-batch-SQL comparison, so they must not
-# pollute the batch total a baseline ratio is computed from.
-STREAMING = [
-    "stream_windowed_agg",
-    "stream_dedup_minhash",
-    "stream_interval_join",
-]
-
-# Committed calm per-query record (BENCH_r14.json, probe 1.017 s calm)
-# used ONLY to size the degraded-phase retry threshold below — never
-# as a result. Round 16 (VERDICT r15 item #2): the flat 15 s outlier
-# threshold let mid-run degradation land 2-12 s samples unretried; a
-# per-query bound of ~4x the committed calm time self-heals those.
-R14_CALM_SEC = {
-    "q1_pricing_summary": 0.874, "q3_shipping_priority": 0.704,
-    "q3_bucketed": 0.737, "q5_local_supplier_volume": 0.656,
-    "q9_product_profit": 0.716, "q18_large_volume_customer": 0.731,
-    "running_totals": 0.704, "ev_hourly_agg": 0.447,
-    "ev_sessionize": 0.38, "ev_asof_join": 0.548,
-    "ev_zscore_anomalies": 0.346, "quantiles_by_flag": 1.587,
-    "text_token_stats": 0.303, "text_chunking": 0.292,
-    "decontaminate_overlap": 0.937, "decontaminate_bloom": 1.739,
-    "mix_sources": 0.478, "dedup_minhash_lsh": 1.465,
-    "dedup_substring_windows": 0.956, "url_canonicalize_dedup": 0.478,
-    "quality_perplexity_proxy": 0.776, "knn_bruteforce": 0.499,
-    "knn_lsh_multiprobe": 1.694, "knn_ivfpq": 0.677,
-    "exchange_add_processed": 1.017,
-    "stream_windowed_agg": 0.88, "stream_dedup_minhash": 4.301,
-    "stream_interval_join": 2.592,
-    "bpe_train_merges": 0.753, "knn_pq_trained": 2.749,
-    "mm_phash_dedup": 2.198,
-}
-
-
-def _retry_threshold(name: str) -> float:
-    # 4x the committed calm time, floored at 2 s so sub-0.5 s queries
-    # don't retry on ordinary JVM noise; 15 s for anything unrecorded.
-    return max(4.0 * R14_CALM_SEC.get(name, 3.75), 2.0)
+from perfbench.batch import HEADLINE, ITERATIVE, STREAMING  # noqa: E402
+from tools.ab import SRC, noop, probe, spark_session, time_query  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 32))
 
     from mallard_spark.registry import load_all
-    from mallard_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="mallard_bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    # Shared scan relations (round 11, VERDICT r10 item #4): the bench
-    # measures the SERVING model — the reference loads data into
-    # DuckDB native tables once and serves every query from its
-    # buffer pool (flight_server.py:173-180), so the parquet
-    # re-decode this engine used to pay per query was a protocol
-    # asymmetry, not a plan cost. First touch decodes and pins, the
-    # timed best-of-2 min shows steady-state serving like every other
-    # serve-path cache here. Recorded in the artifact for provenance.
+    spark = spark_session("mallard_bench")
+    # the serving model: the reference loads data into DuckDB native
+    # tables once and serves every query from its buffer pool, so the
+    # first touch decodes and pins and the best-of-2 reads steady state
     scan_cache = os.environ.get("SPARK_GRAFT_SCAN_CACHE", "memory")
     spark.conf.set("spark.mallard.scanCache", scan_cache)
     specs = load_all()
 
     # JVM / codegen warmup on the smallest SF, plus one tiny
-    # mapInPandas so Python workers (pandas import, Arrow channel)
-    # are spawned before anything is timed
-    specs["q1_pricing_summary"].fn(spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    specs["exchange_add_processed"].fn(spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    # mapInPandas so Python workers are spawned before anything is timed
+    warm_dir = os.path.join(os.path.dirname(SRC), "sf0.001")
+    for name in ("q1_pricing_summary", "exchange_add_processed"):
+        noop(specs[name].fn(spark, warm_dir))
 
-    # Phase probe (round 10, judge item #6): the VM has multi-minute
-    # page-fault-servicing phases where identical plans run 2-10×
-    # slower (root-caused round 9, PLANS.md). One fixed control —
-    # q1 at sf0.1, best-of-3, ~0.7 s calm — is timed BEFORE the bench
-    # and recorded alongside the numbers, so a degraded-phase sample
-    # is labeled as such in the committed artifact instead of reading
-    # as a regression. Round 16 (VERDICT r15 item #2): the probe is
-    # ALSO taken after each query group and at the end, so mid-run
-    # degradation is visible in the artifact, not just at the start.
-    def probe() -> dict:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            specs["q1_pricing_summary"].fn(
-                spark, "/root/testdata/sf0.1"
-            ).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        return {
-            "control": "q1_pricing_summary@sf0.1 best-of-3",
-            "sec": round(best, 3),
-            "calm_threshold_sec": 1.5,
-            "phase": "calm" if best < 1.5 else "degraded",
-        }
-
-    phase_probe = probe()
-
-    # best-of-2: single-run numbers on this box swing up to 10× on
-    # identical plans (JVM compile/GC noise); the min is the plan cost.
-    # Each run rebuilds the DataFrame (queries with an internal
-    # materialize barrier do real work at build time, so build must
-    # stay inside the clock); the scan-handle cache in load_table
-    # keeps redundant parquet-footer reads out of the rebuild.
-    per_query: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = specs[name].fn
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        per_query[name] = round(best, 3)
-
-    # the VM has minutes-long degradation phases where heavy stages run
-    # 10-40× slow (verified not data/plan-dependent: same query is
-    # 1 s in isolation); give outliers one delayed retry. Round 16:
-    # the threshold is per-query (~4x the committed r14 calm time,
-    # VERDICT r15 item #2) instead of a flat 15 s, so 2-12 s degraded
-    # samples self-heal instead of landing in the artifact.
-    def retry_outliers(timed: dict[str, float]) -> None:
-        for name, secs in list(timed.items()):
-            if secs > _retry_threshold(name):
-                time.sleep(10)
-                t0 = time.perf_counter()
-                specs[name].fn(spark, sf_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                timed[name] = round(min(secs, time.perf_counter() - t0), 3)
-
-    retry_outliers(per_query)
-    probe_post_headline = probe()
-
-    per_stream: dict[str, float] = {}
-    for name in STREAMING:
-        fn = specs[name].fn
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        per_stream[name] = round(best, 3)
-
-    retry_outliers(per_stream)
-
-    per_iter: dict[str, float] = {}
-    for name in ITERATIVE:
-        fn = specs[name].fn
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        per_iter[name] = round(best, 3)
-
-    retry_outliers(per_iter)
-    probe_post = probe()
+    out: dict = {"phase_probe": probe(spark)}
+    for key, names, probe_key in (
+        ("queries", HEADLINE, "phase_probe_post_headline"),
+        ("streaming", STREAMING, None),
+        ("iterative", ITERATIVE, "phase_probe_post"),
+    ):
+        out[key] = {n: time_query(spark, specs[n].fn, sf_dir, 2) for n in names}
+        if probe_key:
+            out[probe_key] = probe(spark)
 
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    out = {
+    print(json.dumps({
         "metric": "headline_queries_total_runtime",
-        "value": round(sum(per_query.values()), 3),
+        "value": round(sum(out["queries"].values()), 3),
         "unit": "sec",
-        "queries": per_query,
-        "streaming": per_stream,
-        "streaming_total": round(sum(per_stream.values()), 3),
-        "iterative": per_iter,
-        "iterative_total": round(sum(per_iter.values()), 3),
+        **out,
+        "streaming_total": round(sum(out["streaming"].values()), 3),
+        "iterative_total": round(sum(out["iterative"].values()), 3),
         "sf": sf_val,
-        "phase_probe": phase_probe,
-        # Round 16 (VERDICT r15 item #2): mid-run phase visibility —
-        # the same control probe after the headline group and at the
-        # very end. A calm pre-probe with a degraded post-probe marks
-        # the per-query samples as phase-contaminated.
-        "phase_probe_post_headline": probe_post_headline,
-        "phase_probe_post": probe_post,
-        "outlier_retry": "per-query, 4x BENCH_r14 calm sec (floor 2s)",
         "scan_cache": scan_cache,
-    }
-    # 10× (synthetic sf1) totals, measured by tools/bench_sf1.py under
-    # the SYMMETRIC protocol (both engines warmed, same best-of-N) and
-    # committed as BENCH10X_r11.json — attached here WITH PROVENANCE so
-    # the round record carries both scales; this block is a copy of
-    # that committed measurement, not a fresh run. (r11 replaces the
-    # r09 block the round-10 VERDICT flagged as protocol-tainted.)
-    here = os.path.dirname(os.path.abspath(__file__))
-    # round 16: prefer the freshest committed scaled measurement;
-    # fall back to the r12 artifacts where no newer one exists
-    for key, fnames in (("sf1", ["BENCH10X_r12.json"]),
-                        ("sf10", ["BENCH100X_r16.json",
-                                  "BENCH100X_r12.json"])):
-        fname = next(
-            (f for f in fnames if os.path.exists(os.path.join(here, f))),
-            fnames[-1],
-        )
-        p = os.path.join(here, fname)
-        if os.path.exists(p):
-            try:
-                with open(p) as f:
-                    scaled = json.load(f)
-                out[key] = {
-                    "source": f"{fname} (tools/bench_sf1.py, committed "
-                    "measurement)",
-                    "spark_total": scaled.get("spark_total"),
-                    "duckdb_total": scaled.get("duckdb_total"),
-                    "ratio_total": scaled.get("ratio_total"),
-                }
-                if scaled.get("per_session_paired_ratio_totals"):
-                    # min-merging across sessions rewards the higher-
-                    # variance engine (PLANS.md r11); the paired
-                    # per-session totals are the like-for-like read
-                    out[key]["per_session_paired_ratio_totals"] = (
-                        scaled["per_session_paired_ratio_totals"]
-                    )
-            except Exception:
-                pass
-    print(json.dumps(out))
+    }))
 
 
 if __name__ == "__main__":

@@ -109,7 +109,12 @@ class Kind(enum.Enum):
     PIVOT = ("PIVOT",)
     UNPIVOT = ("UNPIVOT",)
     PREPARE = ("PREPARE", "EXECUTE", "DEALLOCATE")
-    REFUSED = ("ATTACH", "DETACH", "CHECKPOINT", "INSTALL", "LOAD")
+    # the SHOW forms besides a whole SHOW TABLES list Spark's session
+    # catalog, every namespace's physical names included
+    REFUSED = (
+        "ATTACH", "DETACH", "CHECKPOINT", "INSTALL", "LOAD",
+        "SHOW TABLE", "SHOW VIEWS", "SHOW ALL",
+    )
     OTHER = ()  # anything else, Spark's own statements included
 
 
@@ -154,7 +159,7 @@ def classify(sql: str) -> Statement:
     if kind is Kind.SHOW_TABLES and (
         len(words) > 2 or strip_comments(sql[i:]).strip() not in ("", ";")
     ):
-        kind = Kind.OTHER  # SHOW TABLES FROM / LIKE: Spark's own statement
+        kind = Kind.REFUSED  # SHOW TABLES FROM / LIKE
     return Statement(kind, start, verb)
 
 
@@ -178,6 +183,11 @@ _REFUSED_HINTS = {
                   "TABLE AS",
     "INSTALL": "extensions do not apply to a Spark engine",
     "LOAD": "extensions do not apply to a Spark engine",
+    **dict.fromkeys(
+        ("SHOW TABLES", "SHOW TABLE", "SHOW VIEWS", "SHOW ALL"),
+        "a namespace lists only its own tables — use SHOW TABLES, or "
+        "query duckdb_tables()",
+    ),
 }
 _COMMENT_ON_RE = re.compile(
     r"^\s*COMMENT\s+ON\s+(?P<kind>TABLE|VIEW|COLUMN)\s+"
@@ -3132,6 +3142,7 @@ class MallardEngine:
         Kind.DESCRIBE: "_describe_statement",
         Kind.SUMMARIZE: "_summarize_statement", Kind.PIVOT: "_pivot_statement",
         Kind.UNPIVOT: "_unpivot_statement", Kind.PREPARE: "_prepare_execute",
+        Kind.REFUSED: "_refuse",
     }
 
     def _sql_inner(self, sql: str, _duck_mode: bool) -> DataFrame:
@@ -3150,6 +3161,15 @@ class MallardEngine:
         if out is None:
             return self._query(sql, st, _duck_mode)
         return self._status_df(out) if isinstance(out, str) else out
+
+    def _refuse(self, sql: str) -> None:
+        # DuckDB session/storage statements with no Spark equivalent,
+        # and the SHOW forms that would list other namespaces: name
+        # the alternative before Spark sees the statement
+        verb = classify(sql).verb
+        raise NotImplementedError(
+            f"{verb} is not supported on this engine: {_REFUSED_HINTS[verb]}"
+        )
 
     def _show_tables(self, sql: str) -> DataFrame:
         # this namespace's LOGICAL names (the reference's DuckDB shows
@@ -3625,15 +3645,6 @@ class MallardEngine:
                         "walks: dedup_clusters (connected components) "
                         "and graph_pagerank (iterative rank)."
                     ) from first_err
-            if st.kind is Kind.REFUSED:
-                # DuckDB session/storage statements with no Spark
-                # equivalent (FORCE CHECKPOINT / INSTALL get the same
-                # guidance) — name the alternative instead of leaking
-                # a parse error
-                raise NotImplementedError(
-                    f"{st.verb} is not supported on this engine: "
-                    f"{_REFUSED_HINTS[st.verb]}"
-                ) from first_err
             # DuckDB-dialect fallback: the reference's engine IS
             # DuckDB, so clients send DuckDB SQL (`//`, QUALIFY,
             # EXCLUDE, DISTINCT ON). Translate and retry ONLY after
@@ -3938,7 +3949,7 @@ class MallardEngine:
         reading an earlier, completed one) runs the fixpoints
         sequentially, and MUTUAL recursion (a reference cycle) runs a
         LOCKSTEP fixpoint — both semantics pinned against live
-        DuckDB 1.0 (see ``run_lockstep``). Returns None for shapes
+        DuckDB 1.0 (see ``run_group``). Returns None for shapes
         this does not cover (several deduplicating UNIONs in one
         body, UNION ALL members inside a mutual cycle — DuckDB 1.0
         itself fails to terminate there —, a base arm reading a cycle
@@ -4155,76 +4166,14 @@ class MallardEngine:
                 text = _replace_table_ref(text, nm, iv)
             return text
 
-        def run_fixpoint(
-            name: str, rcols: str | None, body: str,
-            split: tuple, iview: str, tag: str
-        ) -> DataFrame | None:
-            base_end, step_start, dedup = split
-            arm_prefix = (
-                f"WITH {_render(prefix_items)} " if prefix_items else ""
-            )
-            base_sql = arm_prefix + body[:base_end]
-            step_sql = _replace_table_ref(
-                arm_prefix + body[step_start:], name, iview
-            )
-            base_df = self.spark.sql(base_sql)
-            if rcols:
-                cols = [c.strip().strip('`"') for c in rcols.split(",")]
-                if len(cols) != len(base_df.columns):
-                    return None
-                base_df = base_df.toDF(*cols)
-            schema = base_df.schema
-
-            def align(df: DataFrame) -> DataFrame:
-                if len(df.columns) != len(schema.fields):
-                    raise ValueError(
-                        f"WITH RECURSIVE {name}: the recursive arm yields "
-                        f"{len(df.columns)} columns, the base "
-                        f"{len(schema.fields)}"
-                    )
-                df = df.toDF(*[f.name for f in schema.fields])
-                return df.select(
-                    [F.col(f.name).cast(f.dataType).alias(f.name)
-                     for f in schema.fields]
-                )
-
-            frontier = materialize(
-                base_df.distinct() if dedup else base_df,
-                f"rec_{salt}_{tag}_f0",
-            )
-            acc = frontier
-            if not frontier.isEmpty():
-                for i in range(1, max_rounds + 1):
-                    frontier.createOrReplaceTempView(iview)
-                    new = align(self.spark.sql(step_sql))
-                    if dedup:
-                        # SQL-standard deduplicating semantics: the
-                        # working table is ONLY the never-seen rows
-                        new = new.distinct().subtract(acc)
-                    frontier = materialize(new, f"rec_{salt}_{tag}_f{i}")
-                    if frontier.isEmpty():
-                        break  # fixpoint — even in round max_rounds exactly
-                    acc = acc.union(frontier)
-                    if i % 8 == 0:
-                        acc = materialize(
-                            acc, f"rec_{salt}_{tag}_acc{i}"
-                        )
-                else:
-                    raise ValueError(
-                        f"WITH RECURSIVE {name}: no fixpoint after "
-                        f"{max_rounds} rounds (raise "
-                        f"spark.mallard.recursiveMaxIterations if the "
-                        f"recursion genuinely needs more)"
-                    )
-            acc.createOrReplaceTempView(iview)
-            return acc
-
-        def run_lockstep(group: list[int]) -> bool | None:
-            """DuckDB's mutual-recursion evaluation for one cycle:
-            SYNCHRONOUS rounds — every member's step reads every
-            member's PREVIOUS-round frontier; a member's new frontier
-            is its step output minus its own accumulated set; the
-            loop stops when a full round adds nothing to any member
+        def run_group(group: list[int]) -> bool | None:
+            """DuckDB's recursive evaluation of one reference cycle; a
+            lone self-recursive CTE is a cycle of one. SYNCHRONOUS
+            rounds: every member's step reads every member's
+            PREVIOUS-round frontier. A deduplicating (UNION) member's
+            new frontier is its step output minus its own accumulated
+            set, a UNION ALL member's the step output verbatim. The
+            loop stops when a round adds nothing to any member
             (semantics verified live against DuckDB 1.0)."""
             arm_prefix = (
                 f"WITH {_render(prefix_items)} " if prefix_items else ""
@@ -4243,11 +4192,11 @@ class MallardEngine:
                 split = _split_union(body)
                 if split is None:
                     return None
-                base_end, step_start, _dedup = split
+                base_end, step_start, dedup = split
                 base_sql = body[:base_end]
                 if any(_refs(base_sql, m) for m in gnames):
-                    # DuckDB's binder errors when a cycle member's
-                    # BASE arm reads another member (verified live)
+                    # DuckDB's binder errors when a BASE arm reads a
+                    # member of its own cycle (verified live)
                     return None
                 step_sql = body[step_start:]
                 for m in gnames:
@@ -4262,11 +4211,9 @@ class MallardEngine:
                     base_df = base_df.toDF(*cols)
                 members.append({
                     "name": n, "iview": iview_of[n], "tag": str(i),
-                    "step_sql": arm_prefix + step_sql,
+                    "step_sql": arm_prefix + step_sql, "dedup": dedup,
                     "schema": base_df.schema, "base_df": base_df,
                 })
-            for mb in members:
-                iviews.append(mb["iview"])
 
             def align(mb: dict, df: DataFrame) -> DataFrame:
                 schema = mb["schema"]
@@ -4283,31 +4230,39 @@ class MallardEngine:
                 )
 
             for mb in members:
-                f0 = materialize(
-                    mb["base_df"].distinct(),
+                iviews.append(mb["iview"])
+                base = mb["base_df"]
+                mb["acc"] = materialize(
+                    base.distinct() if mb["dedup"] else base,
                     f"rec_{salt}_{mb['tag']}_f0",
                 )
-                mb["frontier"] = f0
-                mb["acc"] = f0
-                f0.createOrReplaceTempView(mb["iview"])
-            for r in range(1, max_rounds + 1):
-                # SYNCHRONOUS rounds: every member's step reads the
-                # PREVIOUS round's frontiers — all new frontiers are
-                # materialized before ANY view updates (verified live
-                # on DuckDB 1.0: with p ⇄ q, p's round-r rows come
-                # from q's round-(r-1) frontier, not q's round-r one)
-                new_frontiers = [
-                    materialize(
-                        align(mb, self.spark.sql(mb["step_sql"]))
-                        .distinct()
-                        .subtract(mb["acc"]),
-                        f"rec_{salt}_{mb['tag']}_f{r}",
+                mb["acc"].createOrReplaceTempView(mb["iview"])
+            added = any(not mb["acc"].isEmpty() for mb in members)
+            r = 0
+            while added:
+                r += 1
+                if r > max_rounds:
+                    raise ValueError(
+                        f"WITH RECURSIVE {', '.join(gnames)}: no fixpoint "
+                        f"after {max_rounds} rounds (raise "
+                        f"spark.mallard.recursiveMaxIterations if the "
+                        f"recursion genuinely needs more)"
                     )
-                    for mb in members
-                ]
+                # all new frontiers are materialized before ANY view
+                # updates (verified live on DuckDB 1.0: with p ⇄ q,
+                # p's round-r rows come from q's round-(r-1) frontier)
+                new_frontiers = []
+                for mb in members:
+                    new = align(mb, self.spark.sql(mb["step_sql"]))
+                    if mb["dedup"]:
+                        # SQL-standard deduplicating semantics: the
+                        # working table is ONLY the never-seen rows
+                        new = new.distinct().subtract(mb["acc"])
+                    new_frontiers.append(
+                        materialize(new, f"rec_{salt}_{mb['tag']}_f{r}")
+                    )
                 added = False
                 for mb, fr in zip(members, new_frontiers):
-                    mb["frontier"] = fr
                     fr.createOrReplaceTempView(mb["iview"])
                     if not fr.isEmpty():
                         added = True
@@ -4316,15 +4271,6 @@ class MallardEngine:
                             mb["acc"] = materialize(
                                 mb["acc"], f"rec_{salt}_{mb['tag']}_acc{r}"
                             )
-                if not added:
-                    break
-            else:
-                raise ValueError(
-                    f"WITH RECURSIVE {', '.join(gnames)}: no fixpoint "
-                    f"after {max_rounds} rounds (raise "
-                    f"spark.mallard.recursiveMaxIterations if the "
-                    f"recursion genuinely needs more)"
-                )
             for mb in members:
                 mb["acc"].createOrReplaceTempView(mb["iview"])
                 subst[mb["name"]] = mb["iview"]
@@ -4343,23 +4289,8 @@ class MallardEngine:
                     # the whole cycle runs once, at its LAST member
                     # (every helper an arm may read is inlined by then)
                     continue
-                if len(g) > 1:
-                    if run_lockstep(sorted(g)) is None:
-                        return None
-                    continue
-                iview = f"__mallard_rec_{salt}_{idx}"
-                iviews.append(iview)
-                b2 = apply_subst(b_i)
-                # substitution changes the text length — recompute
-                # the UNION split on the substituted body
-                split = _split_union(b2)
-                if split is None:
+                if run_group(sorted(g)) is None:
                     return None
-                if run_fixpoint(
-                    n_i, c_i, b2, split, iview, str(idx)
-                ) is None:
-                    return None  # column-list arity mismatch
-                subst[n_i] = iview
             outer = apply_subst(outer)
             if prefix_items:
                 outer = f"WITH {_render(prefix_items)} {outer}"

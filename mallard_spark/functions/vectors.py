@@ -34,7 +34,8 @@ def _dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     bit-identical to the fold's. Unrolled ``GetArrayItem`` chains are
     ordinary codegen-able expressions; the fold is an interpreted
     lambda (no codegen), measured 2-3x slower per row
-    (tools/ab_unroll.py)."""
+    (OPTIMIZATION_r15.md #12; the equality is re-checked by
+    ``tests/test_operators.py::test_cosine6_fast_forms_match_cosine6_on_knn_bruteforce_pairs``)."""
     acc: Column = F.lit(0.0)
     for i in range(dim):
         acc = acc + a[i] * b[i]
@@ -52,7 +53,7 @@ def dot64(a: Column, b: Column) -> Column:
     JIT-compilable methods; unguarded inside whole-stage codegen the
     giant fused method exceeds the JIT's huge-method limit and runs
     as interpreted bytecode, measured 2.4x SLOWER than the fold
-    (tools/ab_unroll.py: fold 4.00 s / guarded 1.99 s / unguarded
+    (OPTIMIZATION_r15.md #12: fold 4.00 s / guarded 1.99 s / unguarded
     9.75 s on the knn_graph candidate join at sf0.1).
 
     OPT-IN, not the default: the ~130-node tree (vs ~10 for the

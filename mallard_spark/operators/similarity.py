@@ -130,27 +130,12 @@ def _plane(salt: str, t: int, p: int) -> list[int]:
     return [_plane_int(salt, t, p, i) for i in range(EMB_DIM)]
 
 
-def lsh_bucket_expr(salt: str, t: int, n_planes: int) -> str:
-    """Spark-SQL bucket id for table ``t`` over column ``qv``
-    (quantized BIGINT vector): sign bits of ``n_planes`` integer
-    hyperplane dot products packed into an int. Plane vectors are
-    constant array literals (see :func:`_plane_int`); the per-row
-    work is pure multiplies in whole-stage codegen."""
-    bits = []
-    for p in range(n_planes):
-        lit = ", ".join(f"{k}L" for k in _plane(salt, t, p))
-        dot_p = (
-            f"aggregate(zip_with(qv,"
-            f" slice(array({lit}), 1, size(qv)),"
-            f" (x, y) -> x * y), 0L, (a, b) -> a + b)"
-        )
-        bits.append(f"(CASE WHEN {dot_p} > 0 THEN {1 << p} ELSE 0 END)")
-    return " + ".join(bits)
-
-
 def lsh_bucket_sql(salt: str, t: int, n_planes: int) -> str:
-    """DuckDB mirror of :func:`lsh_bucket_expr` (same buckets, exact):
-    the identical Python-precomputed plane literals, indexed."""
+    """DuckDB bucket id for table ``t`` over column ``qv`` (quantized
+    BIGINT vector): sign bits of ``n_planes`` integer hyperplane dot
+    products packed into an int, the same buckets as
+    :func:`_lsh_signature_fn`, from the identical Python-precomputed
+    plane literals."""
     bits = []
     for p in range(n_planes):
         lit = ", ".join(str(k) for k in _plane(salt, t, p))
@@ -162,12 +147,6 @@ def lsh_bucket_sql(salt: str, t: int, n_planes: int) -> str:
     return " + ".join(bits)
 
 
-QUANT_VEC_EXPR = (
-    f"CASE WHEN size(v) <= {EMB_DIM} "
-    f"THEN transform(v, x -> cast(floor(x * {LSH_Q}.0D) as bigint)) "
-    f"ELSE raise_error(concat('embedding dim ', cast(size(v) AS string), "
-    f"' exceeds LSH plane length {EMB_DIM}')) END"
-)
 QUANT_VEC_SQL = f"list_transform(v, x -> CAST(FLOOR(x * {LSH_Q}.0) AS BIGINT))"
 
 
@@ -175,8 +154,9 @@ def _lsh_signature_fn(salt: str, n_tables: int, n_planes: int):
     """mapInArrow body for :func:`_lsh_buckets`: (vec_id, v) batches →
     (vec_id, v, bks) where bks[t] is table t's bucket id.
 
-    Bit-identical to the JVM-expression form (:func:`lsh_bucket_expr`,
-    kept as the semantic spec and DuckDB-oracle mirror): qv =
+    Bit-identical to the JVM-expression form (the semantic spec
+    ``tests/test_operators.py::lsh_bucket_expr`` checks it against)
+    and to the DuckDB oracle's :func:`lsh_bucket_sql`: qv =
     floor(x * 2^20) in double then int64 — exact for float32 inputs —
     and every dot product is int64 arithmetic, so numpy's integer
     matmul reproduces the exact sign bits. The plane matrix is built
@@ -1111,7 +1091,7 @@ def _l2sq(a, b):
 
     Round 15 measured-and-kept-as-is: a guarded unrolled form wins
     on the isolated encode join (fold 1.37 s → 0.83 s,
-    tools/ab_unroll.py) but regresses the BENCHED consumers at sf0.1
+    OPTIMIZATION_r15.md #12) but regresses the BENCHED consumers at sf0.1
     (knn_pq_trained 2.06 → 2.64 s, knn_ivfpq 0.61 → 1.45 s measured
     with the whole unroll batch in) — the bigger expression tree
     costs planning/codegen per job across the many bounded stages of
@@ -2056,7 +2036,7 @@ def knn_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     a tenant's search never scans other tenants; here the probe set
     is tiny and broadcast, and the label equality rides the same
     broadcast-hash join — at index scale you'd prepend label to the
-    LSH bucket key (same one-line change in lsh_bucket_expr's key).
+    LSH bucket key (same one-line change in _lsh_buckets' key).
     """
     from pyspark.sql import Window as W
 
@@ -2148,7 +2128,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Σ|bucket|² across 8 tables), the one regime where the
     # unrolled-codegen cross-dot pays for its bigger plan — paired
     # A/B on this exact shape at sf0.1: fold 4.00 s → 1.99 s
-    # (tools/ab_unroll.py; bounded-candidate queries measured the
+    # (OPTIMIZATION_r15.md #12; bounded-candidate queries measured the
     # OPPOSITE, see the dot64 docstring).
     sims = (
         a.join(b, ["tbl", "bucket"])

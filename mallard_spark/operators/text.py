@@ -647,7 +647,9 @@ def _entropy_batch(batches):
       expression over the COMPLETE documents corpus at
       sf0.001/0.01/0.1 and the 1M-doc sf10 replica — 0 mismatches
       (see OPTIMIZATION_r16.md). The expression form stays below as
-      the semantic spec and DuckDB-oracle mirror.
+      the semantic spec and DuckDB-oracle mirror; the sf0.01 corpus is
+      re-checked against it with the suite
+      (``tests/test_operators.py::test_entropy_arrow_pass_matches_hof_spec``).
 
     The final ``round(, 6)`` and the empty-text CASE stay in the JVM
     projection, so this pass only reproduces the raw fold.

@@ -67,25 +67,10 @@ from pyspark.sql import functions as F
 #: (DECIMAL(12,2) money columns, DECIMAL(4,2) rate columns)
 
 
-def ulong_decimal(col: str | Column, prec: int = 12, scale: int = 2) -> Column:
-    """Exact unscaled int64 of ``CAST(col AS DECIMAL(prec, scale))``
-    via the decimal cast itself — the semantic SPEC of ``ulong`` (and
-    the form the DuckDB oracles still run).
-
-    The decimal cast is the SAME cast (same HALF_UP rounding) the
-    plain decimal-sum formulation applies per row; the ``* 10^scale``
-    is exact decimal arithmetic; the final cast to long is exact
-    because the value is integral and |unscaled| < 10^prec.
-    """
-    c = col if isinstance(col, Column) else F.col(col)
-    return (c.cast(f"decimal({prec},{scale})") * (10 ** scale)).cast(
-        "long"
-    )
-
-
 def ulong(col: str | Column, prec: int = 12, scale: int = 2) -> Column:
     """Exact unscaled int64 of a scale-decimal money double — the
-    value ``ulong_decimal`` produces — computed in pure FP.
+    value ``CAST(col AS DECIMAL(prec, scale))`` holds, times
+    ``10^scale`` — computed in pure FP.
 
     Round 16 (guide §1.2 per-task work): the decimal-cast chain
     allocates a JVM ``Decimal`` per row per column (the double →
@@ -109,14 +94,16 @@ def ulong(col: str | Column, prec: int = 12, scale: int = 2) -> Column:
       fl(d·10^s) lies within |c|·2⁻⁵¹ + ½ulp of the integer c — far
       inside (c−0.5, c+0.5) for |c| < 10¹² — so the half-up round
       recovers exactly c, the same integer the decimal cast yields.
-      Verified per-row equal to ``ulong_decimal`` (null-safe) over
+      Verified per-row equal to the decimal-cast form (null-safe) over
       every money column at sf0.001/0.01/0.1 and the 60M-row sf10
-      replica: 0 mismatches (tools/ab_ulong.py).
+      replica: 0 mismatches (OPTIMIZATION_r16.md). The sf0.01 columns
+      are re-checked with the suite
+      (``tests/test_fixedpoint.py::test_ulong_matches_decimal_cast_on_every_money_column``).
     - OFF-grid doubles are OUTSIDE this function's contract: Spark's
       double→decimal cast rounds the SHORTEST decimal representation
       of the double (BigDecimal.valueOf / Double.toString — 1.005
       casts to 1.01 even though the stored double is 1.00499…), which
-      no pure-FP product can reproduce. Use ``ulong_decimal`` for
+      no pure-FP product can reproduce. Use the decimal cast for
       arbitrary doubles; every engine call site feeds schema money
       columns, which are grid by construction (and verified above).
     """

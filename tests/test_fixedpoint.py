@@ -11,20 +11,20 @@ blocks, and the plan shape (long partial sums, pruning intact).
 
 Round 16: ``ulong`` is the pure-FP fast form contracted to
 scale-decimal-grid inputs (every schema money column);
-``ulong_decimal`` is the general HALF_UP reference. Both contracts
-are pinned below.
+``ulong_decimal`` below is the general HALF_UP reference it is checked
+against. Both contracts are pinned here.
 """
 
 import os
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mallard_spark.plans.fixedpoint import (
     fx_double,
     fx_two_phase,
     ulong,
-    ulong_decimal,
     urev,
 )
 
@@ -32,6 +32,32 @@ SF001 = "/root/testdata/sf0.01"
 
 D = "decimal(12,2)"
 P = "decimal(4,2)"
+
+# every money column of the schema: (table, column, precision, scale)
+MONEY_COLS = [
+    ("lineitem", "l_quantity", 12, 2),
+    ("lineitem", "l_extendedprice", 12, 2),
+    ("lineitem", "l_discount", 4, 2),
+    ("lineitem", "l_tax", 4, 2),
+    ("orders", "o_totalprice", 12, 2),
+    ("events", "value", 12, 2),
+]
+
+
+def ulong_decimal(col: str | Column, prec: int = 12, scale: int = 2) -> Column:
+    """Exact unscaled int64 of ``CAST(col AS DECIMAL(prec, scale))``
+    via the decimal cast itself — the semantic spec of ``ulong`` (and
+    the form the DuckDB oracles still run).
+
+    The decimal cast is the same cast (same HALF_UP rounding) the
+    plain decimal-sum formulation applies per row; the ``* 10^scale``
+    is exact decimal arithmetic; the final cast to long is exact
+    because the value is integral and |unscaled| < 10^prec.
+    """
+    c = col if isinstance(col, Column) else F.col(col)
+    return (c.cast(f"decimal({prec},{scale})") * (10 ** scale)).cast(
+        "long"
+    )
 
 
 def test_ulong_decimal_matches_decimal_cast_rounding(spark):
@@ -72,6 +98,23 @@ def test_ulong_fp_matches_decimal_on_money_grid(spark):
         ulong_decimal("x").alias("ref"), ulong("x").alias("fast")
     ).collect()[0]
     assert (off.ref, off.fast) == (101, 100)
+
+
+@pytest.mark.skipif(not os.path.exists(SF001), reason="sf0.01 testdata missing")
+def test_ulong_matches_decimal_cast_on_every_money_column(spark):
+    """``ulong``'s exactness rests on every stored money double lying
+    on the scale-decimal grid, a property of the data, not of the
+    code: every row of every money column at sf0.01 must convert to
+    the same integer both ways (null-safe)."""
+    for table, col, prec, scale in MONEY_COLS:
+        df = spark.read.parquet(os.path.join(SF001, f"{table}.parquet"))
+        got = df.agg(
+            F.count("*").alias("rows"),
+            F.sum((~ulong(col, prec, scale).eqNullSafe(
+                ulong_decimal(col, prec, scale))).cast("int")).alias("bad"),
+        ).collect()[0]
+        assert got.rows > 0, f"{table} is empty"
+        assert got.bad == 0, f"{table}.{col}: {got.bad} of {got.rows} rows differ"
 
 
 def test_ulong_null_passthrough(spark):

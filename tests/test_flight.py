@@ -622,6 +622,32 @@ def test_comment_led_show_tables_ticket_stays_in_namespace(servers):
     assert "mine_t" in names and "other_secret" not in names
 
 
+@pytest.mark.parametrize("stmt", [
+    "SHOW TABLES LIKE '*'",
+    "SHOW TABLES FROM default",
+    "SHOW VIEWS",
+    "SHOW TABLE EXTENDED LIKE '*'",
+])
+def test_catalog_listing_show_forms_stay_in_namespace(servers, stmt):
+    """Spark answers these SHOW forms from the session catalog, which
+    holds every namespace's physical names; they get a named refusal
+    that points at SHOW TABLES, on the engine and over the wire, and
+    no answer or message names another namespace's table."""
+    s1, s2 = servers
+    _put(_client(s2), "ns_secret", _sample())
+    _put(_client(s1), "ns_mine", _sample())
+    for run in (
+        lambda: s1.engine.sql(stmt).collect(),
+        lambda: _client(s1).do_get(flight.Ticket(stmt.encode())).read_all(),
+    ):
+        try:
+            text = str(run())
+        except Exception as e:
+            text = str(e)
+        assert "ns_secret" not in text
+        assert "use SHOW TABLES" in text and "duckdb_tables()" in text, text
+
+
 def test_copy_to_ticket_over_wire(spark, tmp_path):
     """COPY ... TO 'path' through a do_get ticket — the DuckDB client
     export flow the reference serves by passing the SQL to DuckDB."""

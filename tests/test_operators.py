@@ -905,3 +905,138 @@ def test_ivfpq_persisted_index_add_parity(spark):
         for t in ("t_ivfpq_full", "t_ivfpq_full__params",
                   "t_ivfpq_inc", "t_ivfpq_inc__params"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+# --- fast paths against their semantic specs -------------------------
+#
+# Each Arrow pass or rewritten expression below replaced a slower form
+# that stays here as its spec. The equalities are exact but rest on the
+# data (a log2 ulp, an FP fold at a 6th-decimal boundary), so each is
+# re-checked over the full sf0.01 population, per row and null-safe.
+
+
+def _sf001(sf_dir):
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
+
+
+def test_entropy_arrow_pass_matches_hof_spec(spark, sf_dir):
+    """``text_entropy``'s Arrow pass (``_entropy_batch``) against the
+    higher-order fold in its docstring, both rounded to 6 dp: numpy's
+    log2 is not provably the JVM's per ulp."""
+    from mallard_spark.operators.text import text_entropy
+    from mallard_spark.sources.readers import load_table
+
+    sf001 = _sf001(sf_dir)
+    spec = F.expr(
+        "CASE WHEN length(text) = 0 THEN 0.0 ELSE"
+        " round(aggregate(array_sort(array_distinct(split(text, ''))),"
+        " cast(0.0 as double),"
+        " (acc, c) -> acc + (size(filter(split(text, ''), x -> x = c))"
+        "   / cast(length(text) as double))"
+        "  * log2(cast(length(text) as double)"
+        "         / size(filter(split(text, ''), x -> x = c)))), 6)"
+        " END"
+    )
+    want = load_table(spark, sf001, "documents").select("doc_id", spec.alias("want"))
+    got = (
+        text_entropy(spark, sf001)
+        .join(want, "doc_id", "full")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum((~F.col("char_entropy").eqNullSafe(F.col("want"))).cast("int")).alias("bad"),
+        )
+        .collect()[0]
+    )
+    assert got.rows > 0
+    assert got.bad == 0, f"{got.bad} of {got.rows} documents differ"
+
+
+def lsh_bucket_expr(salt: str, t: int, n_planes: int) -> str:
+    """Spark-SQL bucket id for table ``t`` over column ``qv`` (quantized
+    BIGINT vector): the sign bits of ``n_planes`` integer hyperplane dot
+    products packed into an int — the spec ``_lsh_signature_fn``'s numpy
+    matmul reproduces."""
+    from mallard_spark.operators.similarity import _plane
+
+    bits = []
+    for p in range(n_planes):
+        lit = ", ".join(f"{k}L" for k in _plane(salt, t, p))
+        dot_p = (
+            f"aggregate(zip_with(qv,"
+            f" slice(array({lit}), 1, size(qv)),"
+            f" (x, y) -> x * y), 0L, (a, b) -> a + b)"
+        )
+        bits.append(f"(CASE WHEN {dot_p} > 0 THEN {1 << p} ELSE 0 END)")
+    return " + ".join(bits)
+
+
+@pytest.mark.parametrize("config", ["lsh", "mp", "graph", "emb"])
+def test_lsh_signature_buckets_match_expression_spec(spark, sf_dir, config):
+    """Every (vector, table) bucket of the Arrow signature pass equals
+    the JVM-expression spec, for each (salt, tables, planes) an
+    operator uses."""
+    from mallard_spark.operators import dedup, similarity as sim
+    from mallard_spark.sources.readers import load_table
+
+    salt, n_tables, n_planes = {
+        "lsh": ("lsh", sim.N_LSH_TABLES, sim.N_PLANES),
+        "mp": ("mp", sim.MP_TABLES, sim.MP_PLANES),
+        "graph": ("graph", sim.KG_TABLES, sim.KG_PLANES),
+        "emb": (dedup.EMB_SALT, dedup.EMB_LSH_TABLES, dedup.EMB_LSH_PLANES),
+    }[config]
+    vecs = load_table(spark, _sf001(sf_dir), "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
+    qv = vecs.selectExpr(
+        "vec_id", f"transform(v, x -> cast(floor(x * {sim.LSH_Q}.0D) as bigint)) AS qv"
+    )
+    want = qv.select(
+        "vec_id",
+        F.posexplode(F.array(*[
+            F.expr(lsh_bucket_expr(salt, t, n_planes)) for t in range(n_tables)
+        ])).alias("tbl", "want"),
+    )
+    got = (
+        sim._lsh_buckets(vecs, n_tables=n_tables, n_planes=n_planes, salt=salt)
+        .join(want, ["vec_id", "tbl"], "full")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum((~F.col("bucket").eqNullSafe(F.col("want"))).cast("int")).alias("bad"),
+        )
+        .collect()[0]
+    )
+    assert got.rows > 0
+    assert got.bad == 0, f"{got.bad} of {got.rows} buckets differ"
+
+
+def test_cosine6_fast_forms_match_cosine6_on_knn_bruteforce_pairs(spark, sf_dir):
+    """``cosine6_norms`` (carried self-dots, optionally the unrolled
+    cross-dot) and ``cosine6_unrolled`` against ``cosine6`` over every
+    pair ``knn_bruteforce`` scores at sf0.01."""
+    from mallard_spark.functions.vectors import cosine6_norms, cosine6_unrolled, dot
+    from mallard_spark.operators.similarity import bruteforce_cosines
+    from mallard_spark.sources.readers import load_table
+
+    sf001 = _sf001(sf_dir)
+    emb = load_table(spark, sf001, "embeddings").select(
+        "vec_id", as_double("embedding").alias("v")
+    )
+    pairs = (
+        bruteforce_cosines(spark, sf001)
+        .join(emb.toDF("probe_id", "a"), "probe_id")
+        .join(emb.toDF("neighbor_id", "b"), "neighbor_id")
+    )
+    a, b = F.col("a"), F.col("b")
+    want = cosine6(a, b)
+    forms = [
+        cosine6_norms(a, b, dot(a, a), dot(b, b)),
+        cosine6_norms(a, b, dot(a, a), dot(b, b), unroll=True),
+        cosine6_unrolled(a, b),
+    ]
+    got = pairs.agg(
+        F.count("*").alias("pairs"),
+        *[F.sum((~f.eqNullSafe(want)).cast("int")).alias(f"bad{i}")
+          for i, f in enumerate(forms)],
+    ).collect()[0]
+    assert got.pairs > 0
+    assert (got.bad0, got.bad1, got.bad2) == (0, 0, 0), got
