@@ -160,8 +160,8 @@ def run_scale_bench(rows: int = 5_000_000, spark=None) -> dict[str, Any]:
     flights-like table served over the wire (README.md:9-18 measures
     GET/TRANSFER/EXCHANGE rows/sec on a 24M-row preloaded table).
     Here the table is preloaded into the server's catalog and GET
-    streams it through the adaptive serving path (big results take
-    the distributed parquet stage).
+    streams it through the adaptive serving path (big results stream
+    one partition at a time).
 
     Each verb runs TWICE and the better run is reported (both raw
     timings kept under ``runs_seconds``). Round-9 profiling

@@ -3572,7 +3572,7 @@ class MallardEngine:
                 # a guaranteed runtime error that the on-failure
                 # resolution can never see
                 try:
-                    self.spark.sql(probe)
+                    _analyze(self.spark, probe)
                     pre_route = True
                 except Exception:
                     pre_route = False
@@ -3605,309 +3605,313 @@ class MallardEngine:
             # (first-only regexp_replace, 1-based indexing, log10,
             # ...) apply even when no TEXTUAL rule fires (round 14)
             df, _ = resolve(
-                out, self.spark.sql, csv_resolver=self._csv_auto_view,
-                force_fired=True,
+                out, lambda text: _analyze(self.spark, text),
+                csv_resolver=self._csv_auto_view, force_fired=True,
             )
             if df is not None:
                 return df
         try:
-            return self.spark.sql(out)
-        except Exception as first_err:
-            _is_union_err = (
-                "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in str(first_err)
-            )
-            if _is_union_err or st.kind is Kind.RECURSIVE:
-                # WITH RECURSIVE ... UNION ALL runs natively on Spark 4
-                # (value-checked vs DuckDB in tests/test_dialect.py).
-                # The deduplicating UNION form CANNOT be mechanically
-                # rewritten to UNION ALL (the dedup is what terminates
-                # a cyclic walk) — round 6 runs it as a driver-side
-                # semi-naive FIXPOINT instead (the textbook Datalog
-                # evaluation): iterate the recursive arm, keep only
-                # never-seen rows, stop when a round adds nothing.
-                # Round 9: mutual recursion fails Spark analysis with
-                # OTHER error classes (the forward reference resolves
-                # as a missing relation/column), so any failed
-                # WITH RECURSIVE statement gets a fixpoint attempt —
-                # a None (shape not covered) re-raises the ORIGINAL
-                # error unless it was the dedup-UNION one.
-                fixed = self._fixpoint(out, first_err)
-                if fixed is not None:
-                    return fixed
-                if _is_union_err:
-                    raise NotImplementedError(
-                        "this WITH RECURSIVE ... UNION form is not "
-                        "supported (self/chained/mutual recursion "
-                        "with one base UNION step per member runs as "
-                        "a fixpoint loop): rewrite with UNION ALL "
-                        "plus an explicit termination predicate, or "
-                        "use the built-in graph operators for cyclic "
-                        "walks: dedup_clusters (connected components) "
-                        "and graph_pagerank (iterative rank)."
-                    ) from first_err
-            # DuckDB-dialect fallback: the reference's engine IS
-            # DuckDB, so clients send DuckDB SQL (`//`, QUALIFY,
-            # EXCLUDE, DISTINCT ON). Translate and retry ONLY after
-            # vanilla parsing/analysis failed — a query Spark already
-            # accepts can never change meaning. The typed readings of
-            # `//`, `len()` and the other type-dependent constructs
-            # are settled from Spark's own analysis errors (see
-            # dialect.resolve).
-            from mallard_spark.dialect import resolve
+            return _analyze(self.spark, out)
+        except Exception as e:
+            first_err = e
+        _is_union_err = (
+            "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in str(first_err)
+        )
+        if _is_union_err or st.kind is Kind.RECURSIVE:
+            # WITH RECURSIVE ... UNION ALL runs natively on Spark 4
+            # (value-checked vs DuckDB in tests/test_dialect.py).
+            # The deduplicating UNION form CANNOT be mechanically
+            # rewritten to UNION ALL (the dedup is what terminates
+            # a cyclic walk) — round 6 runs it as a driver-side
+            # semi-naive FIXPOINT instead (the textbook Datalog
+            # evaluation): iterate the recursive arm, keep only
+            # never-seen rows, stop when a round adds nothing.
+            # Round 9: mutual recursion fails Spark analysis with
+            # OTHER error classes (the forward reference resolves
+            # as a missing relation/column), so any failed
+            # WITH RECURSIVE statement gets a fixpoint attempt —
+            # a None (shape not covered) re-raises the ORIGINAL
+            # error unless it was the dedup-UNION one.
+            fixed = self._fixpoint(out, first_err)
+            if fixed is not None:
+                return fixed
+            if _is_union_err:
+                raise NotImplementedError(
+                    "this WITH RECURSIVE ... UNION form is not "
+                    "supported (self/chained/mutual recursion "
+                    "with one base UNION step per member runs as "
+                    "a fixpoint loop): rewrite with UNION ALL "
+                    "plus an explicit termination predicate, or "
+                    "use the built-in graph operators for cyclic "
+                    "walks: dedup_clusters (connected components) "
+                    "and graph_pagerank (iterative rank)."
+                ) from _surfaced(first_err)
+        # DuckDB-dialect fallback: the reference's engine IS
+        # DuckDB, so clients send DuckDB SQL (`//`, QUALIFY,
+        # EXCLUDE, DISTINCT ON). Translate and retry ONLY after
+        # vanilla parsing/analysis failed — a query Spark already
+        # accepts can never change meaning. The typed readings of
+        # `//`, `len()` and the other type-dependent constructs
+        # are settled from Spark's own analysis errors (see
+        # dialect.resolve).
+        from mallard_spark.dialect import resolve
 
-            def analyzed(translated: str) -> DataFrame:
-                try:
-                    return self.spark.sql(translated)
-                except Exception as retry_err:
-                    if st.kind is not Kind.RECURSIVE and (
-                        "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE"
-                        not in str(retry_err)
-                    ):
-                        raise
-                    # dialect syntax AND a recursive CTE (dedup
-                    # UNION, chained, or mutual) in one statement:
-                    # run the fixpoint on the TRANSLATED text
-                    # (resolve never resubmits `out` itself, whose
-                    # fixpoint already ran above)
-                    fixed = self._fixpoint(translated, retry_err)
-                    if fixed is None:
-                        raise retry_err
-                    return fixed
+        def analyzed(translated: str) -> DataFrame:
+            try:
+                return _analyze(self.spark, translated)
+            except Exception as e:
+                retry_err = e
+            if st.kind is not Kind.RECURSIVE and (
+                "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" not in str(retry_err)
+            ):
+                raise retry_err
+            # dialect syntax AND a recursive CTE (dedup UNION,
+            # chained, or mutual) in one statement: run the fixpoint
+            # on the TRANSLATED text (resolve never resubmits `out`
+            # itself, whose fixpoint already ran above)
+            fixed = self._fixpoint(translated, retry_err)
+            if fixed is None:
+                raise retry_err
+            return fixed
 
-            df, resolved_err = resolve(
-                out, analyzed, vanilla_err=first_err,
-                csv_resolver=self._csv_auto_view,
-            )
-            if df is not None:
-                return df
-            # untranslatable DuckDB constructs get NAMED refusals
-            # instead of the raw parse error — checked AFTER the
-            # translation attempt (a query that merely MENTIONS the
-            # construct in a literal, or that another rule could fix,
-            # must not be refused) and only at code level (the mask
-            # skips string literals and comments)
-            if _code_level_search(r"(?i)\bCOLUMNS\s*\(", out):
-                # DuckDB's dynamic star (round 6): the engine HAS
-                # catalog access, so COLUMNS(*) / COLUMNS('regex') /
-                # COLUMNS(['a','b']) / COLUMNS(c -> pred) expand
-                # against the resolved FROM schema at rewrite time
-                # (the PIVOT distinct-probe pattern). Expression-
-                # argument / renaming forms keep the refusal.
-                expanded = self._expand_columns_star(out)
-                if expanded is not None:
-                    return self.sql(expanded)
-                raise NotImplementedError(
-                    "this COLUMNS(...) form is not supported (the "
-                    "engine expands COLUMNS(*), COLUMNS('regex'), "
-                    "COLUMNS(['a','b']), and COLUMNS(c -> pred) in "
-                    "select lists and WHERE of a plain SELECT): "
-                    "use * EXCLUDE (cols), * REPLACE (expr AS col), "
-                    "or list the columns explicitly."
-                ) from first_err
-            if _code_level_search(r"(?i)\bread_csv(?:_auto)?\s*\(", out):
-                # single-literal-path calls — bare or with the mapped
-                # named options — are handled by the sniffing resolver
-                # above; only unresolvable call shapes reach here
-                # (non-literal/expression path, list-of-paths
-                # argument) and must not be silently dropped
-                raise NotImplementedError(
-                    "this read_csv call shape is not supported (the "
-                    "engine sniffs read_csv_auto('path') with a "
-                    "single quoted path, plus named reader options — "
-                    "delim/header/quote/names/columns/types/nullstr/"
-                    "ignore_errors/...); for anything else use "
-                    "COPY <table> FROM 'path' (HEADER ...)"
-                ) from first_err
-            if _code_level_search(r"(?i)\bPOSITIONAL\s+JOIN\b", out):
-                # DuckDB's POSITIONAL JOIN zips tables by physical row
-                # order — a property a distributed engine does not
-                # have (partitioned scans define no global order), so
-                # a mechanical rewrite would silently zip arbitrary
-                # rows. Refuse with the deterministic alternative.
-                raise NotImplementedError(
-                    "POSITIONAL JOIN is not supported: row order is "
-                    "undefined on a distributed engine. Join on an "
-                    "explicit key instead, e.g. row_number() OVER "
-                    "(ORDER BY <deterministic key>) on both sides."
-                ) from first_err
-            if _code_level_search(
-                r"(?i)\bLIMIT\s+\d+(?:\.\d+)?\s*(?:%|\bPERCENT\b)", out
-            ):
-                # the pre-vanilla percent-LIMIT handler is top-level
-                # only (a nested one would need the subquery's row
-                # count mid-plan) — refuse by name instead of leaking
-                # Spark's parse error (round 14, VERDICT r13 #7)
-                raise NotImplementedError(
-                    "percent LIMIT inside a subquery is not supported "
-                    "(top-level LIMIT n% / n PERCENT is): compute the "
-                    "row budget explicitly, e.g. a row_number() OVER "
-                    "(ORDER BY ...) <= CAST(count(*) OVER () * 0.5 AS "
-                    "BIGINT) filter."
-                ) from first_err
-            # DuckDB long-tail functions with no Spark equivalent
-            # (round 14, VERDICT r13 what's-missing #8) — named
-            # refusals with the closest working alternative
-            for entry in (
-                (r"(?i)\b(?:gamma|lgamma)\s*\(",
-                 "gamma()/lgamma() have no Spark SQL equivalent: for "
-                 "integer n, gamma(n) = factorial(n - 1) (Spark's "
-                 "factorial supports 0..20); otherwise precompute or "
-                 "use a Pandas UDF"),
-                (r"(?i)\bnextafter\s*\(",
-                 "nextafter() has no Spark SQL equivalent (no IEEE "
-                 "next-representable-double function)"),
-                (r"(?i)\bbitstring_agg\s*\(",
-                 "bitstring_agg is not supported: build a bitmap "
-                 "with integer aggregates instead, e.g. "
-                 "bit_or(shiftleft(1L, CAST(x - min_x AS INT)))"),
-                (r"(?i)\bstats\s*\(",
-                 "stats() is a DuckDB debugging function with no "
-                 "Spark equivalent: use DESCRIBE <query> or "
-                 "SUMMARIZE for column statistics"),
-                (r"(?i)\bstruct_insert\s*\(",
-                 "struct_insert is not supported: rebuild the struct "
-                 "with named_struct(... existing fields ..., "
-                 "'new_key', value)"),
-                # entries with a third element only refuse when the
-                # ORIGINAL error mentions that token (round 15,
-                # ADVICE r14 #4): these patterns are broad enough to
-                # appear in queries failing for unrelated reasons —
-                # e.g. a user UDF named bar() — and must not mask the
-                # true cause
-                (r"(?i)\bCOLLATE\b",
-                 "COLLATE is not supported: spell case-insensitive "
-                 "comparisons explicitly (lower(a) = lower(b)); for "
-                 "case-insensitive ORDER BY, sort on lower(col)",
-                 "collat"),
-                (r"(?i)\balias\s*\(",
-                 "alias() is not supported (its answer depends on "
-                 "the enclosing projection alias, which a rewrite "
-                 "cannot see): spell the column name as a string "
-                 "literal",
-                 "alias"),
-                (r"(?i)\bformat\s*\(",
-                 "this format() spec is not supported (mapped: {}, "
-                 "{N}, and {:[ <|>][+| ][#][0][width][,][.prec]"
-                 "[d|s|f|F|e|E|x|X|o|b]} — pinned to fmt semantics "
-                 "incl. half-even {:.Nf} rounding and NULL "
-                 "propagation); g/G/c/n/%-types, ^ alignment, "
-                 "non-space fill and dynamic {} width have no exact "
-                 "Java-printf equivalent: use printf() with %-codes "
-                 "or format_string() directly",
-                 "format"),
-                (r"(?i)\b(?:median|mode|quantile(?:_cont|_disc)?"
-                 r"|percentile(?:_cont|_disc)?|approx_quantile)\s*\(",
-                 "a percentile-family aggregate with a window ORDER "
-                 "BY/frame is not supported (Spark's window "
-                 "percentile takes no frame; DuckDB also dispatches "
-                 "median by input type): emulate over the frame with "
-                 "array_sort(collect_list(x) OVER (...)) and index "
-                 "the middle element(s)",
-                 "window frame"),
-                (r"(?i)\bstrftime\s*\(",
-                 "this strftime call is not supported: every "
-                 "DuckDB-1.0 % code maps for LITERAL formats "
-                 "(incl. the week family %U/%V/%W/%u/%w/%G and "
-                 "%c/%f/%g/%n/%x/%X/%z/%Z, round 15) — a non-literal "
-                 "format string cannot be translated; use "
-                 "date_format() with a Java pattern directly",
-                 "strftime"),
-                (r"(?i)\b(?:try_)?strptime\s*\(",
-                 "this strptime % code has no exact to_timestamp "
-                 "pattern equivalent (mapped for parsing: "
-                 "%Y %y %m %d %H %I %M %S %p %j %a %A %b %B "
-                 "%c %x %X %f %g, their %-variants, and %%; the "
-                 "week-number/zone family %U %V %W %u %w %G %n %z %Z "
-                 "is output-only): use to_timestamp() with a Java "
-                 "pattern directly",
-                 "strptime"),
-                (r"(?i)\bparse_(filename|dirname|dirpath|path)\s*\(",
-                 "the parse_* path family is not supported: compose "
-                 "from split(path, '/') — e.g. element_at(split(p, "
-                 "'/'), -1) for parse_filename"),
-                (r"(?i)\b(left|right|substring|length)_grapheme\s*\(",
-                 "grapheme-cluster string functions are not "
-                 "supported (Spark indexes by codepoint): "
-                 "left/right/substr are exact for non-combining "
-                 "text"),
-                (r"(?i)\bnfc_normalize\s*\(",
-                 "nfc_normalize has no Spark SQL equivalent: "
-                 "normalize at ingest (Pandas UDF over "
-                 "unicodedata.normalize) or store NFC text"),
-                (r"(?i)\btxid_current\s*\(",
-                 "txid_current() is not supported: this engine's "
-                 "transactions are session-scoped (BEGIN/COMMIT/"
-                 "ROLLBACK work; there is no global xid counter)"),
-                (r"(?i)\b(UNION|EXCEPT|INTERSECT)\s+(ALL\s+)?BY\s+NAME\b",
-                 "set operators BY NAME inside a subquery are not "
-                 "supported (top-level UNION [ALL] BY NAME is): "
-                 "hoist the combination to the top level or align "
-                 "the column lists explicitly"),
-                (r"(?i)\b(damerau_levenshtein|jaro_similarity|"
-                 r"jaro_winkler_similarity)\s*\(",
-                 "this string-similarity function has no Spark "
-                 "equivalent: levenshtein() is built in; for "
-                 "jaro/damerau use a Pandas UDF"),
-                (r"(?i)\bjson_(merge_patch|structure|contains)\s*\(",
-                 "this JSON function has no Spark equivalent: "
-                 "json_transform/from_json cover typed extraction; "
-                 "merge documents upstream or with a Pandas UDF"),
-                (r"(?i)\b(vector_type|current_query)\s*\(",
-                 "DuckDB introspection/debug functions do not apply "
-                 "to a Spark engine"),
-                (r"(?i)\bsetseed\s*\(",
-                 "setseed() cannot seed Spark SQL's per-partition "
-                 "RNG: pass an explicit seed to rand(seed) / "
-                 "randn(seed) instead"),
-                (r"(?i)\bbar\s*\(",
-                 "bar() renders eighth-block progress bars with no "
-                 "Spark equivalent: repeat(chr(9608), n) approximates "
-                 "whole blocks",
-                 "bar"),
-                (r"(?i)\bcurrent_local(time|timestamp)?\s*\(\s*\)"
-                 r"|\blocaltime\b(?!\s*\()",
-                 "TIME-of-day values are not supported (Spark has no "
-                 "TIME type): use localtimestamp()/current_timestamp"),
-                (r"(?i)\bstrip_accents\s*\(",
-                 "strip_accents has no Spark SQL equivalent: fold "
-                 "accents at ingest (unicodedata in a Pandas UDF) or "
-                 "translate() for a known character set"),
-                (r"(?i)\bmd5_number\s*\(",
-                 "md5_number returns a 128-bit HUGEINT that exceeds "
-                 "Spark's DECIMAL(38) range: use md5_number_lower/"
-                 "md5_number_upper (mapped) or md5() text"),
-                # only the `b` prefix is code-level (the '1010' body
-                # is a masked literal), so the lookahead keeps the
-                # matched span checkable
-                (r"(?i)(?<![\w'])b(?='[01]+')"
-                 r"|::\s*BIT\b|\bAS\s+BIT\s*\)"
-                 r"|\b(?:get_bit|set_bit|bit_position)\s*\(",
-                 "the BIT/BITSTRING type (b'1010' literals, ::BIT "
-                 "casts, get_bit/set_bit/bit_position) is not "
-                 "supported: use integer bit arithmetic (&, |, "
-                 "shiftleft) or a BOOLEAN array"),
-                (r"(?i)\bunnest\s*\([^()]*recursive\s*:=",
-                 "unnest(.., recursive := true) is not supported: "
-                 "flatten one list level with explode(flatten(l)); "
-                 "struct fields unnest with col.* expansion"),
-            ):
-                rx, msg = entry[0], entry[1]
-                if len(entry) == 3 and entry[2] not in str(
-                    first_err
-                ).lower():
-                    continue
-                if _code_level_search(rx, out):
-                    raise NotImplementedError(msg) from first_err
-            if (
-                resolved_err is not None
-                and _is_parse_error(first_err)
-                and not _is_parse_error(resolved_err)
-            ):
-                # Spark could not parse the DuckDB text, but a reading
-                # of it parsed and names the real problem (an unknown
-                # column, a type mismatch)
-                raise resolved_err from first_err
-            raise first_err
+        df, resolved_err = resolve(
+            out, analyzed, vanilla_err=first_err,
+            csv_resolver=self._csv_auto_view,
+        )
+        if df is not None:
+            return df
+        # the errors leave the engine from here on, so they become
+        # the exceptions spark.sql raises
+        past = _analyzed_past(first_err, resolved_err)
+        first_err = _surfaced(first_err)
+        # untranslatable DuckDB constructs get NAMED refusals
+        # instead of the raw parse error — checked AFTER the
+        # translation attempt (a query that merely MENTIONS the
+        # construct in a literal, or that another rule could fix,
+        # must not be refused) and only at code level (the mask
+        # skips string literals and comments)
+        if _code_level_search(r"(?i)\bCOLUMNS\s*\(", out):
+            # DuckDB's dynamic star (round 6): the engine HAS
+            # catalog access, so COLUMNS(*) / COLUMNS('regex') /
+            # COLUMNS(['a','b']) / COLUMNS(c -> pred) expand
+            # against the resolved FROM schema at rewrite time
+            # (the PIVOT distinct-probe pattern). Expression-
+            # argument / renaming forms keep the refusal.
+            expanded = self._expand_columns_star(out)
+            if expanded is not None:
+                return self.sql(expanded)
+            raise NotImplementedError(
+                "this COLUMNS(...) form is not supported (the "
+                "engine expands COLUMNS(*), COLUMNS('regex'), "
+                "COLUMNS(['a','b']), and COLUMNS(c -> pred) in "
+                "select lists and WHERE of a plain SELECT): "
+                "use * EXCLUDE (cols), * REPLACE (expr AS col), "
+                "or list the columns explicitly."
+            ) from first_err
+        if _code_level_search(r"(?i)\bread_csv(?:_auto)?\s*\(", out):
+            # single-literal-path calls — bare or with the mapped
+            # named options — are handled by the sniffing resolver
+            # above; only unresolvable call shapes reach here
+            # (non-literal/expression path, list-of-paths
+            # argument) and must not be silently dropped
+            raise NotImplementedError(
+                "this read_csv call shape is not supported (the "
+                "engine sniffs read_csv_auto('path') with a "
+                "single quoted path, plus named reader options — "
+                "delim/header/quote/names/columns/types/nullstr/"
+                "ignore_errors/...); for anything else use "
+                "COPY <table> FROM 'path' (HEADER ...)"
+            ) from first_err
+        if _code_level_search(r"(?i)\bPOSITIONAL\s+JOIN\b", out):
+            # DuckDB's POSITIONAL JOIN zips tables by physical row
+            # order — a property a distributed engine does not
+            # have (partitioned scans define no global order), so
+            # a mechanical rewrite would silently zip arbitrary
+            # rows. Refuse with the deterministic alternative.
+            raise NotImplementedError(
+                "POSITIONAL JOIN is not supported: row order is "
+                "undefined on a distributed engine. Join on an "
+                "explicit key instead, e.g. row_number() OVER "
+                "(ORDER BY <deterministic key>) on both sides."
+            ) from first_err
+        if _code_level_search(
+            r"(?i)\bLIMIT\s+\d+(?:\.\d+)?\s*(?:%|\bPERCENT\b)", out
+        ):
+            # the pre-vanilla percent-LIMIT handler is top-level
+            # only (a nested one would need the subquery's row
+            # count mid-plan) — refuse by name instead of leaking
+            # Spark's parse error (round 14, VERDICT r13 #7)
+            raise NotImplementedError(
+                "percent LIMIT inside a subquery is not supported "
+                "(top-level LIMIT n% / n PERCENT is): compute the "
+                "row budget explicitly, e.g. a row_number() OVER "
+                "(ORDER BY ...) <= CAST(count(*) OVER () * 0.5 AS "
+                "BIGINT) filter."
+            ) from first_err
+        # DuckDB long-tail functions with no Spark equivalent
+        # (round 14, VERDICT r13 what's-missing #8) — named
+        # refusals with the closest working alternative
+        for entry in (
+            (r"(?i)\b(?:gamma|lgamma)\s*\(",
+             "gamma()/lgamma() have no Spark SQL equivalent: for "
+             "integer n, gamma(n) = factorial(n - 1) (Spark's "
+             "factorial supports 0..20); otherwise precompute or "
+             "use a Pandas UDF"),
+            (r"(?i)\bnextafter\s*\(",
+             "nextafter() has no Spark SQL equivalent (no IEEE "
+             "next-representable-double function)"),
+            (r"(?i)\bbitstring_agg\s*\(",
+             "bitstring_agg is not supported: build a bitmap "
+             "with integer aggregates instead, e.g. "
+             "bit_or(shiftleft(1L, CAST(x - min_x AS INT)))"),
+            (r"(?i)\bstats\s*\(",
+             "stats() is a DuckDB debugging function with no "
+             "Spark equivalent: use DESCRIBE <query> or "
+             "SUMMARIZE for column statistics"),
+            (r"(?i)\bstruct_insert\s*\(",
+             "struct_insert is not supported: rebuild the struct "
+             "with named_struct(... existing fields ..., "
+             "'new_key', value)"),
+            # entries with a third element only refuse when the
+            # ORIGINAL error mentions that token (round 15,
+            # ADVICE r14 #4): these patterns are broad enough to
+            # appear in queries failing for unrelated reasons —
+            # e.g. a user UDF named bar() — and must not mask the
+            # true cause
+            (r"(?i)\bCOLLATE\b",
+             "COLLATE is not supported: spell case-insensitive "
+             "comparisons explicitly (lower(a) = lower(b)); for "
+             "case-insensitive ORDER BY, sort on lower(col)",
+             "collat"),
+            (r"(?i)\balias\s*\(",
+             "alias() is not supported (its answer depends on "
+             "the enclosing projection alias, which a rewrite "
+             "cannot see): spell the column name as a string "
+             "literal",
+             "alias"),
+            (r"(?i)\bformat\s*\(",
+             "this format() spec is not supported (mapped: {}, "
+             "{N}, and {:[ <|>][+| ][#][0][width][,][.prec]"
+             "[d|s|f|F|e|E|x|X|o|b]} — pinned to fmt semantics "
+             "incl. half-even {:.Nf} rounding and NULL "
+             "propagation); g/G/c/n/%-types, ^ alignment, "
+             "non-space fill and dynamic {} width have no exact "
+             "Java-printf equivalent: use printf() with %-codes "
+             "or format_string() directly",
+             "format"),
+            (r"(?i)\b(?:median|mode|quantile(?:_cont|_disc)?"
+             r"|percentile(?:_cont|_disc)?|approx_quantile)\s*\(",
+             "a percentile-family aggregate with a window ORDER "
+             "BY/frame is not supported (Spark's window "
+             "percentile takes no frame; DuckDB also dispatches "
+             "median by input type): emulate over the frame with "
+             "array_sort(collect_list(x) OVER (...)) and index "
+             "the middle element(s)",
+             "window frame"),
+            (r"(?i)\bstrftime\s*\(",
+             "this strftime call is not supported: every "
+             "DuckDB-1.0 % code maps for LITERAL formats "
+             "(incl. the week family %U/%V/%W/%u/%w/%G and "
+             "%c/%f/%g/%n/%x/%X/%z/%Z, round 15) — a non-literal "
+             "format string cannot be translated; use "
+             "date_format() with a Java pattern directly",
+             "strftime"),
+            (r"(?i)\b(?:try_)?strptime\s*\(",
+             "this strptime % code has no exact to_timestamp "
+             "pattern equivalent (mapped for parsing: "
+             "%Y %y %m %d %H %I %M %S %p %j %a %A %b %B "
+             "%c %x %X %f %g, their %-variants, and %%; the "
+             "week-number/zone family %U %V %W %u %w %G %n %z %Z "
+             "is output-only): use to_timestamp() with a Java "
+             "pattern directly",
+             "strptime"),
+            (r"(?i)\bparse_(filename|dirname|dirpath|path)\s*\(",
+             "the parse_* path family is not supported: compose "
+             "from split(path, '/') — e.g. element_at(split(p, "
+             "'/'), -1) for parse_filename"),
+            (r"(?i)\b(left|right|substring|length)_grapheme\s*\(",
+             "grapheme-cluster string functions are not "
+             "supported (Spark indexes by codepoint): "
+             "left/right/substr are exact for non-combining "
+             "text"),
+            (r"(?i)\bnfc_normalize\s*\(",
+             "nfc_normalize has no Spark SQL equivalent: "
+             "normalize at ingest (Pandas UDF over "
+             "unicodedata.normalize) or store NFC text"),
+            (r"(?i)\btxid_current\s*\(",
+             "txid_current() is not supported: this engine's "
+             "transactions are session-scoped (BEGIN/COMMIT/"
+             "ROLLBACK work; there is no global xid counter)"),
+            (r"(?i)\b(UNION|EXCEPT|INTERSECT)\s+(ALL\s+)?BY\s+NAME\b",
+             "set operators BY NAME inside a subquery are not "
+             "supported (top-level UNION [ALL] BY NAME is): "
+             "hoist the combination to the top level or align "
+             "the column lists explicitly"),
+            (r"(?i)\b(damerau_levenshtein|jaro_similarity|"
+             r"jaro_winkler_similarity)\s*\(",
+             "this string-similarity function has no Spark "
+             "equivalent: levenshtein() is built in; for "
+             "jaro/damerau use a Pandas UDF"),
+            (r"(?i)\bjson_(merge_patch|structure|contains)\s*\(",
+             "this JSON function has no Spark equivalent: "
+             "json_transform/from_json cover typed extraction; "
+             "merge documents upstream or with a Pandas UDF"),
+            (r"(?i)\b(vector_type|current_query)\s*\(",
+             "DuckDB introspection/debug functions do not apply "
+             "to a Spark engine"),
+            (r"(?i)\bsetseed\s*\(",
+             "setseed() cannot seed Spark SQL's per-partition "
+             "RNG: pass an explicit seed to rand(seed) / "
+             "randn(seed) instead"),
+            (r"(?i)\bbar\s*\(",
+             "bar() renders eighth-block progress bars with no "
+             "Spark equivalent: repeat(chr(9608), n) approximates "
+             "whole blocks",
+             "bar"),
+            (r"(?i)\bcurrent_local(time|timestamp)?\s*\(\s*\)"
+             r"|\blocaltime\b(?!\s*\()",
+             "TIME-of-day values are not supported (Spark has no "
+             "TIME type): use localtimestamp()/current_timestamp"),
+            (r"(?i)\bstrip_accents\s*\(",
+             "strip_accents has no Spark SQL equivalent: fold "
+             "accents at ingest (unicodedata in a Pandas UDF) or "
+             "translate() for a known character set"),
+            (r"(?i)\bmd5_number\s*\(",
+             "md5_number returns a 128-bit HUGEINT that exceeds "
+             "Spark's DECIMAL(38) range: use md5_number_lower/"
+             "md5_number_upper (mapped) or md5() text"),
+            # only the `b` prefix is code-level (the '1010' body
+            # is a masked literal), so the lookahead keeps the
+            # matched span checkable
+            (r"(?i)(?<![\w'])b(?='[01]+')"
+             r"|::\s*BIT\b|\bAS\s+BIT\s*\)"
+             r"|\b(?:get_bit|set_bit|bit_position)\s*\(",
+             "the BIT/BITSTRING type (b'1010' literals, ::BIT "
+             "casts, get_bit/set_bit/bit_position) is not "
+             "supported: use integer bit arithmetic (&, |, "
+             "shiftleft) or a BOOLEAN array"),
+            (r"(?i)\bunnest\s*\([^()]*recursive\s*:=",
+             "unnest(.., recursive := true) is not supported: "
+             "flatten one list level with explode(flatten(l)); "
+             "struct fields unnest with col.* expansion"),
+        ):
+            rx, msg = entry[0], entry[1]
+            if len(entry) == 3 and entry[2] not in str(
+                first_err
+            ).lower():
+                continue
+            if _code_level_search(rx, out):
+                raise NotImplementedError(msg) from first_err
+        if resolved_err is not None and (
+            past
+            or _is_parse_error(first_err) and not _is_parse_error(resolved_err)
+        ):
+            # Spark could not parse the DuckDB text, or rejected the
+            # construct a reading translated away, and the reading
+            # names the real problem (an unknown column, a type
+            # mismatch)
+            raise _surfaced(resolved_err) from first_err
+        raise first_err
 
     def _fixpoint(self, sql: str, err: Exception) -> DataFrame | None:
         """:meth:`_recursive_union_fixpoint` for a statement Spark
@@ -5456,14 +5460,12 @@ class MallardEngine:
     ) -> tuple["pa.Schema", Iterator["pa.RecordBatch"]]:
         """GET as a true stream: (schema, batch iterator).
 
-        Large results are staged to parquet by a distributed write,
-        then record batches stream off disk one at a time — driver
-        memory is bounded regardless of result size (replaces the
-        round-2 ``toArrow()`` driver materialization the VERDICT
-        flagged as the serving-path scale-killer). Results estimated
-        under ``driver_max_bytes`` skip the stage (see
-        :func:`stream_df_arrow`). Accepts an already-built DataFrame
-        too (round 11 — RETURNING answers stream through here).
+        Results estimated over ``driver_max_bytes`` stream one
+        partition at a time, so driver memory is bounded regardless of
+        result size; smaller ones come from one ``toArrow()`` collect
+        (see :func:`stream_df_arrow`). Accepts an already-built
+        DataFrame too (round 11 — RETURNING answers stream through
+        here).
         """
         df = sql if isinstance(sql, DataFrame) else self.sql(sql)
         return stream_df_arrow(
@@ -9263,7 +9265,8 @@ def pin_driver_rows(df: DataFrame) -> DataFrame:
     carries only a block id (lineitem at sf0.01, 60k rows: a
     filter-group-by 177 → 85 ms, a ``count(*)`` 126 → 54 ms). The
     optimized plan's size estimate carries over to the checkpoint, so
-    :func:`stream_df_arrow` routes the answers the same way.
+    :func:`stream_df_arrow` still answers small results over it with
+    one ``toArrow()`` collect instead of a job per partition.
     ``.cache()`` does not help: its partitions still hold the rows.
 
     Failure domain: the blocks live in the executors' block managers,
@@ -9294,8 +9297,8 @@ def ingest_stream_to_df(
     running size crosses the threshold, the
     already-buffered batches and the rest of the stream are spilled to
     a parquet staging file (one batch in memory at a time) and read
-    back distributed — the inverse of :func:`stream_df_arrow`, for the
-    do_put / do_exchange ingest side. The reference accumulates the
+    back distributed — the do_put / do_exchange ingest counterpart of
+    :func:`stream_df_arrow`'s bounded answer path. The reference accumulates the
     whole stream in RAM (flight_server.py:369-382), which a 100 GB PUT
     would OOM; here driver memory stays bounded at any stream size.
 
@@ -9347,17 +9350,23 @@ def stream_df_arrow(
     """(schema, record-batch iterator) for a DataFrame — the serving
     path for Flight do_get/do_exchange.
 
-    Results Catalyst estimates under ``driver_max_bytes`` are served
-    straight from ``toArrow`` (one collect, no staging job — the fast
-    path for interactive queries). Anything larger — or anything
-    whose size can't be estimated — is staged through a distributed
-    parquet write and streamed off disk one batch at a time, so
-    driver memory stays bounded no matter how big the result is.
-    (The estimate is Catalyst's optimized-plan ``sizeInBytes``; it
-    overestimates unknown inputs to 8 EB, which safely routes them
-    to the staged path.)
+    Answers Catalyst estimates at or under ``driver_max_bytes`` come
+    from one ``toArrow()`` collect. Anything larger, or anything whose
+    size can't be estimated (unknown inputs estimate at 8 EB), streams
+    one partition at a time: Spark's own Arrow batches
+    (``toArrowBatchRdd``) are pulled with
+    ``toLocalIterator(prefetchPartitions=True)`` and decoded against
+    the schema ``toArrow()`` builds, so the driver holds at most two
+    partitions and no write job runs. ``toArrow()`` stays for small
+    answers because every partition is a job of its own: a 5-row
+    aggregate takes 85-99 ms partition-wise against 48-62 ms (4 vCPU).
+    Batches hold at most ``batch_rows`` rows.
     """
-    import pyarrow.dataset as ds
+    import pyarrow as pa
+    from pyspark.errors.exceptions.captured import unwrap_spark_exception
+    from pyspark.rdd import RDD
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -9367,21 +9376,26 @@ def stream_df_arrow(
         table = df.toArrow()
         return table.schema, iter(table.to_batches(max_chunksize=batch_rows))
 
-    tmp = tempfile.mkdtemp(prefix="mallard_stream_")
-    df.write.mode("overwrite").parquet(tmp)
-    dataset = ds.dataset(tmp, format="parquet")
-    if not dataset.files:  # empty result wrote no part files
-        shutil.rmtree(tmp, ignore_errors=True)
-        table = df.limit(0).toArrow()
-        return table.schema, iter(table.to_batches())
+    spark = df.sparkSession
+    schema = to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+    )
+    messages = RDD(
+        df._jdf.toArrowBatchRdd().toJavaRDD(), spark.sparkContext,
+        NoOpSerializer(),
+    )
 
     def gen() -> Iterator["pa.RecordBatch"]:
-        try:
-            yield from dataset.scanner(batch_size=batch_rows).to_batches()
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        # a failed job raises what toArrow() would raise for it
+        with unwrap_spark_exception():
+            for message in messages.toLocalIterator(prefetchPartitions=True):
+                batch = pa.ipc.read_record_batch(pa.py_buffer(message), schema)
+                for start in range(0, batch.num_rows, batch_rows):
+                    yield batch.slice(start, batch_rows)
 
-    return dataset.schema, gen()
+    return schema, gen()
 
 
 # keywords that may directly follow an unaliased FROM/JOIN table
@@ -9395,6 +9409,108 @@ _TABLE_REF_FOLLOW_KWS = frozenset(
         "LATERAL", "SELECT",
     }
 )
+
+
+class _Rejected(Exception):
+    """Spark's rejection of a text :func:`_analyze` submitted, with the
+    Py4J error left unconverted. PySpark's conversion fetches the JVM
+    stack string, converts the cause chain and logs an ERROR record:
+    about 100 ms, against the 4-9 ms the analysis took, and a rejected
+    reading is a normal step of :func:`dialect.resolve`.
+    ``getCondition`` and ``getQueryContext`` read the Java exception
+    the way PySpark's exceptions do; :func:`_surfaced` converts the
+    error once it leaves the engine."""
+
+    def __init__(self, py4j_err, text: str):
+        super().__init__()
+        self.py4j_err = py4j_err
+        self.java_exception = py4j_err.java_exception
+        self.text = text
+
+    def __str__(self) -> str:
+        return self.java_exception.getMessage() or ""
+
+    def getCondition(self) -> str | None:
+        from py4j.protocol import Py4JError
+
+        try:
+            return self.java_exception.getCondition()
+        except Py4JError:  # not a SparkThrowable
+            return None
+
+    def getQueryContext(self) -> list:
+        from py4j.protocol import Py4JError
+        from pyspark.errors.exceptions.captured import (
+            DataFrameQueryContext,
+            SQLQueryContext,
+        )
+
+        try:
+            contexts = self.java_exception.getQueryContext()
+        except Py4JError:  # not a SparkThrowable
+            return []
+        return [
+            SQLQueryContext(q) if q.contextType().toString() == "SQL"
+            else DataFrameQueryContext(q)
+            for q in contexts
+        ]
+
+
+def _analyze(spark: SparkSession, text: str) -> DataFrame:
+    """``spark.sql(text)`` for the analyses the engine makes on purpose:
+    the vanilla attempt, the negative-subscript probe and every reading
+    :func:`dialect.resolve` tries. The call goes through Py4J's
+    unpatched ``get_return_value``, so a rejection raises
+    :class:`_Rejected` instead of PySpark's converted exception."""
+    from py4j.protocol import (
+        CALL_COMMAND_NAME,
+        END_COMMAND_PART,
+        Py4JJavaError,
+        get_return_value,
+    )
+
+    call = spark._jsparkSession.sql
+    args, _ = call._build_args(text)
+    answer = call.gateway_client.send_command(
+        CALL_COMMAND_NAME + call.command_header + args + END_COMMAND_PART
+    )
+    try:
+        jdf = get_return_value(
+            answer, call.gateway_client, call.target_id, call.name
+        )
+    except Py4JJavaError as e:
+        raise _Rejected(e, text) from None
+    return DataFrame(jdf, spark)
+
+
+def _surfaced(err: Exception | None) -> Exception | None:
+    """The exception ``spark.sql`` raises for ``err``: a
+    :class:`_Rejected` goes through PySpark's own conversion, and
+    anything else is returned as it is."""
+    if not isinstance(err, _Rejected):
+        return err
+    from pyspark.errors.exceptions.captured import (
+        UnknownException,
+        convert_exception,
+    )
+
+    converted = convert_exception(err.java_exception)
+    return err.py4j_err if isinstance(converted, UnknownException) else converted
+
+
+def _analyzed_past(vanilla: Exception, reading: Exception | None) -> bool:
+    """True when a rejected ``reading`` no longer holds the SQL fragment
+    Spark's ``vanilla`` error names (the ``ON (g)`` of a DISTINCT ON,
+    read as a call): the translation got past that construct, so the
+    reading's own error names the real problem."""
+    if not isinstance(reading, _Rejected) or _is_parse_error(reading):
+        return False
+    fragment = next(
+        (c.fragment() for c in getattr(vanilla, "getQueryContext", list)()
+         if c.contextType().name == "SQL"),
+        "",
+    )
+    return bool(fragment) and fragment not in reading.text
 
 
 def _is_parse_error(e: Exception) -> bool:

@@ -27,9 +27,9 @@ Wire-level parity with the reference (flight_server.py in
 
 The compute engine behind the endpoint is Spark, so a Mallard client
 pointing at this server gets cluster-scale SQL instead of a single
-DuckDB process. Results are streamed off a distributed parquet stage
-(engine.stream_arrow) — the driver holds one record batch at a time,
-so a 100 GB result cannot OOM the serving process.
+DuckDB process. Large results stream one partition at a time
+(engine.stream_arrow) — the driver holds at most two partitions' Arrow
+batches, so a 100 GB result cannot OOM the serving process.
 """
 
 from __future__ import annotations
@@ -338,8 +338,8 @@ class SparkFlightServer(flight.FlightServerBase):
                 shutil.rmtree(spill_dir, ignore_errors=True)
 
     def _stream_df(self, df, writer) -> None:
-        """Stage through parquet and stream batch-at-a-time (bounded
-        driver memory, same path as do_get)."""
+        """Stream the answer batch-at-a-time (bounded driver memory,
+        same path as do_get)."""
         from mallard_spark.engine import stream_df_arrow
 
         schema, batches = stream_df_arrow(df)

@@ -7,6 +7,7 @@ import duckdb
 import pyarrow as pa
 import pytest
 
+import mallard_spark.engine as engine_mod
 from mallard_spark.dialect import duckdb_to_spark
 from mallard_spark.engine import MallardEngine
 
@@ -759,8 +760,14 @@ def test_intdiv_analyses_linear_in_float_sites(eng5, monkeypatch):
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(SparkSession, "sql", counting)
+    # the engine's deliberate analyses go through its own helper
+    orig_analyze = engine_mod._analyze
+    monkeypatch.setattr(
+        engine_mod, "_analyze",
+        lambda spark, text: (calls.append(text), orig_analyze(spark, text))[1],
+    )
     eng5.sql("SELECT w // 2 AS a, v // 2 AS b, v // 3 AS c, w // 4 AS d FROM dw ORDER BY id")
-    assert len(calls) <= 4, calls
+    assert 1 < len(calls) <= 4, calls
 
 
 def test_intdiv_unknown_column_reports_analysis_error(eng5):
@@ -3205,4 +3212,143 @@ def test_percentile_window_frame_refuses_by_name(eng):
         eng.sql(
             "SELECT median(v) OVER (ORDER BY id ROWS BETWEEN 1 "
             "PRECEDING AND CURRENT ROW) AS a FROM dt"
+        )
+
+
+def _duck5_error(sql: str) -> str:
+    with pytest.raises(duckdb.Error) as ei:
+        _duck5(sql)
+    return str(ei.value)
+
+
+@pytest.mark.parametrize("sql,column", [
+    ("SELECT DISTINCT ON (g) g, nope FROM dw ORDER BY g", "nope"),
+    ("SELECT DISTINCT ON (zz) g FROM dw ORDER BY g", "zz"),
+])
+def test_distinct_on_reports_the_unknown_column(eng5, sql, column):
+    """Spark reads `ON (g)` as a call; the DISTINCT ON reading gets past
+    it and names the column DuckDB names, not the routine `ON`."""
+    from pyspark.errors import AnalysisException
+
+    assert f'Referenced column "{column}" not found' in _duck5_error(sql)
+    with pytest.raises(AnalysisException) as ei:
+        eng5.sql(sql)
+    assert ei.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert f"`{column}`" in str(ei.value)
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT g, v FROM dw QUALIFY row_number() OVER (PARTITION BY nope ORDER BY v) = 1",
+    "SELECT * EXCLUDE (nope) FROM dw",
+])
+def test_qualify_and_exclude_errors_name_the_column(eng5, sql):
+    from pyspark.errors import AnalysisException, ParseException
+
+    with pytest.raises(AnalysisException) as ei:
+        eng5.sql(sql)
+    assert ei.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert "`nope`" in str(ei.value)
+    assert isinstance(ei.value.__cause__, ParseException)
+
+
+@pytest.fixture()
+def query_context_records():
+    """Records PySpark's query-context loggers emit; each converted
+    Spark error logs one ERROR record there."""
+    import logging
+
+    from pyspark.logger import PySparkLogger
+
+    records = []
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    handler = Keep()
+    loggers = [
+        PySparkLogger.getLogger(name)
+        for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    for lg in loggers:
+        lg.addHandler(handler)
+    yield records
+    for lg in loggers:
+        lg.removeHandler(handler)
+
+
+def test_rejected_readings_log_nothing(eng5, query_context_records):
+    """Readings Spark rejects on the way to the answer are steps, not
+    errors: a statement that succeeds logs no ERROR record."""
+    for sql in (
+        # the DIV reading of `//` on a DOUBLE is rejected
+        "SELECT id, w // 2 AS a FROM dw ORDER BY id",
+        # the vanilla attempt reads `ON (g)` as a call
+        "SELECT DISTINCT ON (g) g, v FROM dw ORDER BY g, v",
+        # pre-routed by the negative subscript, then the DIV reading
+        "SELECT [10, 20, 30][-1] AS x, w // 2 AS a FROM dw ORDER BY id",
+    ):
+        got = [tuple(r) for r in eng5.sql(sql).collect()]
+        assert got == [tuple(r) for r in _duck5(sql)], sql
+    assert query_context_records == []
+
+
+def _error_of(run, sql):
+    with pytest.raises(Exception) as ei:
+        out = run(sql)
+        if hasattr(out, "collect"):
+            out.collect()
+    return ei.value
+
+
+def _first_line(err) -> str:
+    return next(line for line in str(err).splitlines() if line.strip())
+
+
+@pytest.mark.parametrize("sql,cls,first_line", [
+    ("SELECT nosuch // 2 AS a FROM dw", "AnalysisException",
+     "[UNRESOLVED_COLUMN.WITH_SUGGESTION] A column, variable, or function "
+     "parameter with name `nosuch` cannot be resolved."),
+    ("SELECT g // 'x' AS a FROM dw", "NumberFormatException",
+     "[CAST_INVALID_INPUT] The value 'x' of the type \"STRING\" cannot be "
+     "cast to \"BIGINT\" because it is malformed."),
+    ("SELEC 1", "ParseException",
+     "[PARSE_SYNTAX_ERROR] Syntax error at or near 'SELEC'."),
+    ("WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n + 1 FROM r WHERE n < 3 "
+     "UNION SELECT n + 2 FROM r WHERE n < 3) SELECT * FROM r",
+     "NotImplementedError",
+     "this WITH RECURSIVE ... UNION form is not supported"),
+])
+def test_unrescued_statements_keep_their_error(eng5, sql, cls, first_line):
+    """No reading rescues these: the client sees the class and message
+    spark.sql (or the engine's own refusal) gives."""
+    err = _error_of(eng5.sql, sql)
+    assert type(err).__name__ == cls
+    assert _first_line(err).startswith(first_line), _first_line(err)
+
+
+def _chain(err):
+    seen = []
+    while err is not None and all(err is not s for s in seen):
+        seen.append(err)
+        err = err.__cause__ or err.__context__
+    return seen
+
+
+@pytest.mark.parametrize("verb", ["sql", "execute", "run_script"])
+def test_no_rejection_escapes_the_engine(eng5, verb):
+    """The engine's unconverted rejections stay inside it: every
+    exception a caller sees, and every one chained to it, is what
+    spark.sql or the engine itself raises."""
+    for sql in (
+        "SELECT nosuch // 2 AS a FROM dw",
+        "SELECT DISTINCT ON (g) g, nope FROM dw ORDER BY g",
+        "SELECT nosuch FROM dw",
+        "SELECT g // 'x' AS a FROM dw",
+        "WITH RECURSIVE r(n) AS (SELECT 1 UNION SELECT n + 1 FROM r WHERE n < 3 "
+        "UNION SELECT n + 2 FROM r WHERE n < 3) SELECT * FROM r",
+    ):
+        chain = _chain(_error_of(getattr(eng5, verb), sql))
+        assert not [e for e in chain if isinstance(e, engine_mod._Rejected)], (
+            sql, chain,
         )

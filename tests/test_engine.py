@@ -297,8 +297,8 @@ def test_exchange_sql_command_falls_through(engines):
     assert out.collect()[0].n == 5
 
 
-def test_stream_arrow_staged_path(engines, spark):
-    """driver_max_bytes=0 forces the parquet-staged path — the bounded
+def test_stream_arrow_bounded_path(engines, spark):
+    """driver_max_bytes=0 forces the partition-wise path — the bounded
     route every over-estimate result takes."""
     eng1, _ = engines
     eng1.put("staged_t", spark.range(0, 50_000).selectExpr("id", "id * 7 AS x"))
@@ -308,6 +308,83 @@ def test_stream_arrow_staged_path(engines, spark):
     sizes = [b.num_rows for b in batches]
     assert sum(sizes) == 50_000
     assert len(sizes) > 1 and max(sizes) <= 8_192
+
+
+def _bounded_and_collected(eng, sql, batch_rows=65536):
+    """The bounded path's answer as one table, its batch sizes, and
+    the one-collect answer of the same statement."""
+    schema, batches = eng.stream_arrow(
+        sql, batch_rows=batch_rows, driver_max_bytes=0
+    )
+    batches = list(batches)
+    got = pa.Table.from_batches(batches, schema=schema)
+    return got, [b.num_rows for b in batches], eng.get_arrow(sql)
+
+
+def test_bounded_path_keeps_order_over_partitions(engines, spark, monkeypatch):
+    """An ORDER BY answer spread over several partitions arrives in
+    order, with no temp dir and no parquet write."""
+    import tempfile
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    eng1, _ = engines
+    eng1.put(
+        "bounded_ord",
+        spark.range(0, 20_000, 1, 4).selectExpr("id", "(id * 7919) % 20000 AS k"),
+    )
+    made = []
+    orig_mkdtemp = tempfile.mkdtemp
+    monkeypatch.setattr(
+        tempfile, "mkdtemp", lambda *a, **kw: made.append(kw) or orig_mkdtemp(*a, **kw)
+    )
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda *a, **kw: made.append("parquet")
+    )
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        got, sizes, want = _bounded_and_collected(
+            eng1, "SELECT k, id FROM bounded_ord ORDER BY k DESC", batch_rows=3_000
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    assert got.equals(want)
+    assert got.column("k").to_pylist() == list(range(19_999, -1, -1))
+    # every partition gives its own batches; 8 shuffle partitions of
+    # about 2,500 rows each cannot fit in 3 batches of 3,000
+    assert len(sizes) >= 8 and max(sizes) <= 3_000
+    assert made == []
+
+
+def test_bounded_path_matches_to_arrow_on_every_type(engines, spark):
+    eng1, _ = engines
+    eng1.put("bounded_types", spark.range(0, 6, 1, 3))
+    got, _, want = _bounded_and_collected(
+        eng1,
+        "SELECT id, IF(id % 2 = 0, NULL, id) AS n, "
+        "CAST(id AS DECIMAL(12, 3)) / 7 AS d, "
+        "TIMESTAMP '2024-03-05 10:00:00' + make_dt_interval(id, id) AS ts, "
+        "make_dt_interval(id, 0, id, 1.5) AS dt, "
+        "INTERVAL '1' MONTH * id AS ym, "
+        "IF(id = 3, NULL, array(id, NULL)) AS a, "
+        "named_struct('x', id, 's', CAST(id AS STRING)) AS st, "
+        "map(CAST(id AS STRING), array(id)) AS m "
+        "FROM bounded_types ORDER BY id",
+    )
+    assert got.schema == want.schema
+    assert got.equals(want)
+    assert got.column("ym").to_pylist()[1].days == 30  # through _deliver
+    assert got.column("n").null_count == 3
+
+
+def test_bounded_path_keeps_an_empty_answers_schema(engines, spark):
+    eng1, _ = engines
+    eng1.put("bounded_empty", spark.range(0, 100).selectExpr("id", "id * 1.5 AS v"))
+    got, sizes, want = _bounded_and_collected(
+        eng1, "SELECT id, v, array(v) AS a FROM bounded_empty WHERE id < 0"
+    )
+    assert got.num_rows == 0 and sum(sizes) == 0
+    assert got.schema == want.schema
 
 
 def test_dml_insert_values_temp_table(engines):

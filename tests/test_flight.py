@@ -338,8 +338,8 @@ def test_exchange_unknown_command_lists_available(servers):
 
 
 def test_do_get_streams_multiple_batches(servers, spark):
-    """do_get streams off the parquet stage — a large result arrives as
-    many record batches, not one driver-side table copy."""
+    """do_get streams — a large result arrives as many record batches,
+    not one driver-side table copy."""
     s1, _ = servers
     big = spark.range(0, 300_000).selectExpr("id", "id * 3 AS trip")
     s1.engine.put("stream_big", big)
@@ -387,13 +387,37 @@ def test_concurrent_clients(servers):
     assert not errors, errors
 
 
+def _gets_at_once(server, ticket, n: int = 4) -> list:
+    """The answers of ``n`` clients that GET ``ticket`` at the same
+    moment (behind a barrier)."""
+    import threading
+
+    start = threading.Barrier(n)
+    answers, errors = [None] * n, []
+
+    def worker(i: int) -> None:
+        try:
+            client = _client(server)
+            start.wait(timeout=60)
+            answers[i] = client.do_get(ticket).read_all()
+        except Exception as e:  # surface across the thread boundary
+            errors.append((i, repr(e)))
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not errors, errors
+    assert not any(th.is_alive() for th in threads)
+    return answers
+
+
 def test_concurrent_first_reads_of_pinned_put(servers):
     """A table PUT over the wire is pinned lazily, so the first query
     that scans it stores its blocks. Four clients send their FIRST
     SELECT on a fresh PUT at the same moment; each must get the answer
     a serial read gives afterwards."""
-    import threading
-
     s1, _ = servers
     n = 20_000
     t = pa.table({"g": [i % 13 for i in range(n)], "v": [float(i) for i in range(n)]})
@@ -401,23 +425,7 @@ def test_concurrent_first_reads_of_pinned_put(servers):
     ticket = flight.Ticket(
         b"SELECT g, SUM(v) AS s, COUNT(*) AS c FROM pin_race_t GROUP BY g ORDER BY g"
     )
-    start = threading.Barrier(4)
-    answers, errors = [None] * 4, []
-
-    def worker(i: int) -> None:
-        try:
-            client = _client(s1)
-            start.wait(timeout=60)
-            answers[i] = client.do_get(ticket).read_all()
-        except Exception as e:  # surface across the thread boundary
-            errors.append((i, repr(e)))
-
-    threads = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join(timeout=300)
-    assert not errors, errors
+    answers = _gets_at_once(s1, ticket)
     serial = _client(s1).do_get(ticket).read_all()
     assert serial.column("c").to_pylist() == [
         len(range(g, n, 13)) for g in range(13)
@@ -427,6 +435,45 @@ def test_concurrent_first_reads_of_pinned_put(servers):
     ]
     for got in answers:
         assert got.equals(serial)
+
+
+def test_concurrent_gets_on_the_bounded_path(servers):
+    """Four clients GET a join answer at once. Without cost-based
+    statistics a join's estimate is the product of its inputs' sizes,
+    so the answer takes the partition-wise path; each client gets the
+    serial answer."""
+    s1, _ = servers
+    n = 20_000
+    _put(_client(s1), "bounded_l", pa.table({"k": list(range(n)), "v": [i * 0.5 for i in range(n)]}))
+    _put(_client(s1), "bounded_r", pa.table({"k": list(range(0, n, 2)), "g": [i % 7 for i in range(0, n, 2)]}))
+    sql = (
+        "SELECT l.k, l.v, r.g FROM bounded_l l JOIN bounded_r r ON l.k = r.k "
+        "ORDER BY l.k"
+    )
+    est = s1.engine.sql(sql)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(est) > 256 << 20
+    ticket = flight.Ticket(sql.encode())
+    answers = _gets_at_once(s1, ticket)
+    serial = _client(s1).do_get(ticket).read_all()
+    assert serial.column("k").to_pylist() == list(range(0, n, 2))
+    assert serial.column("g").to_pylist() == [i % 7 for i in range(0, n, 2)]
+    for got in answers:
+        assert got.equals(serial)
+
+
+def test_distinct_on_ticket_reports_the_unknown_column(servers):
+    """The error a ticket answers names the column, as DuckDB does,
+    and carries none of the engine's unconverted rejections."""
+    s1, _ = servers
+    client = _client(s1)
+    _put(client, "don_t", _sample())
+    with pytest.raises(flight.FlightError) as ei:
+        client.do_get(
+            flight.Ticket(b"SELECT DISTINCT ON (id) id, nope FROM don_t ORDER BY id")
+        ).read_all()
+    msg = str(ei.value)
+    assert msg.startswith("[UNRESOLVED_COLUMN") and "`nope`" in msg
+    assert "_Rejected" not in msg  # the detail holds the whole chain
 
 
 def test_server_manager_lifecycle(spark):

@@ -29,3 +29,22 @@ def test_ab_timer_and_interleave_on_a_registry_query(spark, sf_dir):
     assert entered == ["a", "b"] * 2  # the warmup pass, then one round
     assert set(best) == {"a", "b"}
     assert all(t["q1_pricing_summary"] > 0 for t in best.values())
+
+
+def test_every_python_file_compiles_with_warnings_as_errors():
+    """A deprecated source form, such as the invalid escape ``'\\d'`` in
+    a plain string, is a warning on every import today and a syntax
+    error in a later Python."""
+    import warnings
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    files = [*root.glob("*.py")] + [
+        p for d in ("mallard_spark", "perfbench", "tests", "tools")
+        for p in (root / d).rglob("*.py")
+    ]
+    assert len(files) > 70
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for path in files:
+            compile(path.read_text(), str(path), "exec")

@@ -262,7 +262,7 @@ SELECT TRY_CAST('x' AS INTEGER) AS a, TRY_CAST('12.7' AS INTEGER) AS b, 1 // 1 A
 SELECT t.id FROM t SEMI JOIN dst ON t.id = dst.id ORDER BY t.id
 SELECT t.id FROM t ANTI JOIN dst ON t.id = dst.id ORDER BY t.id
 DESCRIBE SELECT id, g FROM t
-SELECT regexp_matches('x7', '\d') AS r
+SELECT regexp_matches('x7', '\\d') AS r
 SELECT 'abc' LIKE 'a%' ESCAPE '\\' AS r
 SELECT max(v) FILTER (id > 1) AS m FROM t
 SELECT array_agg(v ORDER BY v DESC) FILTER (WHERE v > 10) AS a FROM t
@@ -293,11 +293,11 @@ SELECT CAST([1,2] AS VARCHAR[]) AS v
 SELECT regexp_replace('aaa', '(a)', '\\1x', 'g') AS v
 SELECT regexp_replace('aaa', '(a)', '\\1x') AS v
 SELECT regexp_replace('abc', 'b', '$', 'g') AS v
-SELECT regexp_replace('a1b2', '(\d)', '<\\1>', 'g') AS v
-SELECT regexp_extract('abc123', '\d+') AS v
-SELECT regexp_extract('a1b2', '(\d)(\w)', 2) AS v
-SELECT regexp_matches('a1', '\d') AS v
-SELECT regexp_extract_all('a1b2', '\d') AS v
+SELECT regexp_replace('a1b2', '(\\d)', '<\\1>', 'g') AS v
+SELECT regexp_extract('abc123', '\\d+') AS v
+SELECT regexp_extract('a1b2', '(\\d)(\\w)', 2) AS v
+SELECT regexp_matches('a1', '\\d') AS v
+SELECT regexp_extract_all('a1b2', '\\d') AS v
 SELECT gamma(5) AS g
 SELECT lgamma(5) AS g
 SELECT nextafter(1.0, 2.0) AS n
@@ -487,7 +487,7 @@ SELECT week(DATE '2024-12-30') AS a, yearweek(DATE '2024-12-30') AS b, yearweek(
 SELECT isodow(DATE '2024-01-07') AS a, isoyear(DATE '2021-01-01') AS b
 SELECT timezone_hour(TIMESTAMP '2024-01-01') AS a, timezone_minute(TIMESTAMP '2024-01-01') AS b
 SELECT era(DATE '2024-01-01') AS a, era((DATE '0001-01-01' - INTERVAL 1 YEAR)::DATE) AS b
-SELECT regexp_extract('2024-03-05', '(\d+)-(\d+)', ['y', 'm']) AS a
+SELECT regexp_extract('2024-03-05', '(\\d+)-(\\d+)', ['y', 'm']) AS a
 SELECT time_bucket(INTERVAL 7 DAY, DATE '2024-03-05', DATE '2024-01-01') AS a, time_bucket(INTERVAL 7 DAY, DATE '2024-03-05') AS b
 SELECT time_bucket(INTERVAL 7 DAY, TIMESTAMP '2024-03-05 10:00:00') AS a, time_bucket(INTERVAL 7 DAY, DATE '2024-03-05', INTERVAL 1 DAY) AS b
 SELECT json('{"a":  1, "b": [1,  2]}') AS a
